@@ -3,7 +3,7 @@
 The reference ships a gojieba-backed tokenizer as the fulltext index's
 dictionary mode (pkg/monlp/tokenizer — jieba_test.go exercises it); the
 non-dictionary SimpleTokenizer (rune trigrams) is covered by
-functions/text.py tokenize_mixed. This module is a CLEAN-ROOM
+functions/text.py tokenize_mixed_sql. This module is a CLEAN-ROOM
 implementation of the textbook max-probability segmentation algorithm the
 jieba family uses (public description: build a DAG of every dictionary
 word starting at each position, then dynamic-programming the

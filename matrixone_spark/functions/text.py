@@ -8,54 +8,51 @@ for 100 TB document tables: every function is a pure column expression
 Tokenizer parity note: the reference's default fulltext tokenizer lowercases
 and splits on non-alphanumerics (pkg/fulltext/ tokenizer; jieba only for CJK).
 
-Performance note: every ``*_t`` function takes a pre-tokenized array column.
-Queries that need several metrics over the same text MUST project
-``tokenize(text)`` ONCE and feed the ``*_t`` variants — embedding the
-tokenize subtree into each output column defeats codegen subexpression
-elimination across expression instances and re-splits the text per metric
-(measured 12× slower on the cleaning pipeline at sf0.1). The plain-column
-wrappers remain for single-metric use.
+One form per function: each ``*_sql(col_sql, ...)`` builder renders its
+expression as one SQL string over a column name (or any SQL expression
+producing the text). Callers put the strings into ``selectExpr``/``F.expr``,
+so a plan build costs one JVM parse call per projection instead of a py4j
+round-trip per Column-API node. The scorers (token count, token length,
+stopword hits, quality) are regex/string expressions directly on the text —
+codegen-able, no per-row token array; see the equivalence note above
+``token_count_rx_sql``. Queries that need several scorers over the same text
+stage the shared primitives in their own projection (``quality_score_sql``).
 """
 
 from __future__ import annotations
 
+import unicodedata
+from typing import Iterator
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def _c(x) -> Column:
-    return F.col(x) if isinstance(x, str) else x
-
 
 _TOKEN_SPLIT = r"[^a-z0-9]+"
 
 
-def tokenize(col, mode: str = "simple") -> Column:
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal (the parser unescapes backslashes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def tokenize(col_sql: str, mode: str = "simple") -> Column:
     """``mode='simple'``: lower + split on non-alphanumerics, drop empties
     (fulltext tokenizer parity, pkg/fulltext/ — the ASCII fast path).
     ``mode='mixed'``: the reference SimpleTokenizer's full CJK behavior
-    (see tokenize_mixed). ``mode='dict'``: dictionary-mode Chinese word
+    (see tokenize_mixed_sql). ``mode='dict'``: dictionary-mode Chinese word
     segmentation — the reference's jieba tokenizer path
     (pkg/monlp/tokenizer, jieba_test.go) re-done as a clean-room
     max-probability segmenter (functions/cjk_dict.py)."""
-    if mode == "mixed":
-        return tokenize_mixed(col)
     if mode == "dict":
         from matrixone_spark.functions.cjk_dict import tokenize_dict
 
-        return tokenize_dict(col)
-    # r13 (guide §5, driver work): for a plain column name, build the whole
-    # expression as ONE SQL string parsed JVM-side — the Column-API chain
-    # cost ~10 py4j round-trips per call; the string parses to the identical
-    # expression tree (lambda variable naming aside, which Catalyst ignores).
-    if isinstance(col, str):
-        return F.expr(tokenize_sql(col))
-    return F.filter(F.split(F.lower(_c(col)), _TOKEN_SPLIT), lambda t: t != "")
+        return tokenize_dict(col_sql)
+    return F.expr(tokenize_mixed_sql(col_sql) if mode == "mixed" else tokenize_sql(col_sql))
 
 
 def tokenize_sql(col_sql: str) -> str:
-    """SQL-string form of simple-mode tokenize (col_sql is a column name or
-    any SQL expression producing the text)."""
+    """Simple-mode tokenize: non-empty pieces of lower(text) split on
+    non-alphanumerics."""
     return f"filter(split(lower({col_sql}), '{_TOKEN_SPLIT}'), t -> t != '')"
 
 
@@ -64,11 +61,11 @@ def tokenize_sql(col_sql: str) -> str:
 # harmless widening). Latin class = token chars < U+0800 (1-2 byte UTF-8,
 # simple.go isLatin); CJK class = token chars >= U+0800.
 _MIXED_BREAKER = r"[\x00-\x2f\x3a-\x40\x5b-\x60\x7b-\x7f\p{P}\p{Z}\p{C}]"
-_CJK_CLASS = "[ࠀ-￿]"
-_LATIN_CLASS = "[0-9a-z-߿]"
+_CJK_CLASS = r"[\u0800-\uffff]"
+_LATIN_CLASS = r"[0-9a-z\u0080-\u07ff]"
 
 
-def tokenize_mixed(col) -> Column:
+def tokenize_mixed_sql(col_sql: str) -> str:
     """CJK-aware tokenizer — clean-room implementation of the reference's
     default (non-jieba) SimpleTokenizer (pkg/monlp/tokenizer/simple.go:
     beginToken/latinToken/cjkToken state machine; used by the fulltext
@@ -88,63 +85,86 @@ def tokenize_mixed(col) -> Column:
     Supplementary-plane codepoints (outside the BMP) ride through as
     surrogate pairs and may split mid-pair inside a trigram — a documented
     divergence (the reference BVT corpus is BMP)."""
-    s = F.regexp_replace(F.lower(_c(col)), _MIXED_BREAKER, " ")
-    s = F.regexp_replace(s, f"(?<={_LATIN_CLASS})(?={_CJK_CLASS})", " ")
-    s = F.regexp_replace(s, f"(?<={_CJK_CLASS})(?={_LATIN_CLASS})", " ")
-    runs = F.filter(F.split(s, " +"), lambda t: t != "")
+    s = f"regexp_replace(lower({col_sql}), {_sql_str(_MIXED_BREAKER)}, ' ')"
+    s = f"regexp_replace({s}, {_sql_str(f'(?<={_LATIN_CLASS})(?={_CJK_CLASS})')}, ' ')"
+    s = f"regexp_replace({s}, {_sql_str(f'(?<={_CJK_CLASS})(?={_LATIN_CLASS})')}, ' ')"
+    # substring clips each trigram window at the run end
+    tri = "transform(sequence(1, length(run)), i -> substring(run, i, 3))"
+    return (
+        f"flatten(transform(filter(split({s}, ' +'), t -> t != ''),"
+        f" run -> CASE WHEN run RLIKE {_sql_str('^' + _CJK_CLASS)} THEN {tri}"
+        f" ELSE array(run) END))"
+    )
 
-    def expand(run: Column) -> Column:
-        n = F.length(run)
-        tri = F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.substring(run, i, F.lit(3)),  # clips at the run end
-        )
-        return F.when(run.rlike(f"^{_CJK_CLASS}"), tri).otherwise(F.array(run))
 
-    return F.flatten(F.transform(runs, expand))
+def _klass(ch: str) -> int:
+    """0 breaker, 1 latin, 2 cjk — the driver-side mirror of the classes
+    above."""
+    o = ord(ch)
+    if o < 128:
+        return 1 if ch.isalnum() else 0
+    if unicodedata.category(ch)[0] in ("P", "Z", "C"):
+        return 0
+    return 1 if o < 0x800 else 2
+
+
+def _runs(text: str) -> "Iterator[tuple[int, str, int]]":
+    """(class, run, rune offset) for each maximal latin or CJK run of
+    lower(text); breakers separate runs and yield nothing."""
+    run_k, run_start = 0, 0
+    low = text.lower()
+    for pos, ch in enumerate(low):
+        k = _klass(ch)
+        if k != run_k:
+            if run_k:
+                yield run_k, low[run_start:pos], run_start
+            run_k, run_start = k, pos
+    if run_k:
+        yield run_k, low[run_start:], run_start
 
 
 def tokenize_mixed_py(text: str) -> "list[str]":
-    """Driver-side mirror of tokenize_mixed for QUERY strings (the analogue
-    of ParsePatternInNLMode's tokenize-the-pattern step): tiny inputs, so a
-    character-walk keeps the two sides in lockstep — gated against the
-    Column form in tests."""
-    import unicodedata
+    """Driver-side mirror of tokenize_mixed_sql for QUERY strings (the
+    analogue of ParsePatternInNLMode's tokenize-the-pattern step): tiny
+    inputs, so a character-walk keeps the two sides in lockstep — gated
+    against the Spark form in tests."""
+    return [tok for tok, _ in tokenize_mixed_pos_py(text)]
 
-    def klass(ch: str) -> int:  # 0 breaker, 1 latin, 2 cjk
-        o = ord(ch)
-        if o < 128:
-            return 1 if ch.isalnum() else 0
-        if unicodedata.category(ch)[0] in ("P", "Z", "C"):
-            return 0
-        return 1 if o < 0x800 else 2
 
-    out: "list[str]" = []
-    run: "list[str]" = []
-    run_k = 0
-
-    def flush() -> None:
-        if not run:
-            return
-        w = "".join(run)
-        if run_k == 2:
-            out.extend(w[i : i + 3] for i in range(len(w)))
+def tokenize_mixed_pos_py(text: str) -> "list[tuple[str, int]]":
+    """Index-side positional mixed tokenization: (token, RUNE offset) pairs,
+    INCLUDING the shrinking CJK tail windows — mirrors simple.go outputCJK
+    exactly (BytePos there; rune offsets here: deltas agree because every
+    BMP CJK rune is 3 bytes and every breaker is one rune, so both schemes
+    scale the same span)."""
+    out: "list[tuple[str, int]]" = []
+    for k, w, start in _runs(text):
+        if k == 2:
+            out.extend((w[i : i + 3], start + i) for i in range(len(w)))
         else:
-            out.append(w)
-        run.clear()
-
-    for ch in text.lower():
-        k = klass(ch)
-        if k != run_k:
-            flush()
-            run_k = k
-        if k:
-            run.append(ch)
-    flush()
+            out.append((w, start))
     return out
 
 
-def tokenize_positions(col) -> Column:
+def nl_query_leaves_py(pattern: str) -> "list[tuple[str, str, int]]":
+    """Query-side NATURAL LANGUAGE tokenization (ParsePatternInNLMode,
+    fulltext.go:919): (kind, token, rune_offset) — CJK runs contribute FULL
+    trigrams only (no tail windows; the reference's overlap handling folds
+    them away), runs/words shorter than the 3-rune ngram floor become
+    prefix STAR leaves. Offsets are rune offsets so phrase-adjacency deltas
+    agree with the index side."""
+    out: "list[tuple[str, str, int]]" = []
+    for k, w, start in _runs(pattern):
+        if k == 2 and len(w) >= 3:
+            out.extend(("eq", w[i : i + 3], start + i) for i in range(len(w) - 2))
+        elif len(w) < 3:
+            out.append(("star", w, start))
+        else:
+            out.append(("eq", w, start))
+    return out
+
+
+def tokenize_positions_sql(col_sql: str) -> str:
     """Tokens with their char offsets: array<struct<token,pos>>.
 
     Pure Catalyst (no Python UDF): every non-alphanumeric char is replaced
@@ -154,61 +174,28 @@ def tokenize_positions(col) -> Column:
     The offset is the reference fulltext index's BytePos analogue
     (fulltext_index_tokenize) — identical for ASCII text; SqlPhrase-style
     phrase matching anchors on it."""
-    clean = F.regexp_replace(F.lower(_c(col)), "[^a-z0-9]", " ")
-    parts = F.split(clean, " ", -1)
-    zero = F.struct(
-        F.lit(0).alias("off"),
-        F.array().cast("array<struct<token:string,pos:int>>").alias("acc"),
+    parts = f"split(regexp_replace(lower({col_sql}), '[^a-z0-9]', ' '), ' ', -1)"
+    zero = "struct(0 AS off, CAST(array() AS array<struct<token:string,pos:int>>) AS acc)"
+    step = (
+        "(acc, x) -> struct((acc.off + length(x)) + 1 AS off,"
+        " CASE WHEN x != '' THEN concat(acc.acc,"
+        " array(struct(x AS token, CAST(acc.off AS INT) AS pos)))"
+        " ELSE acc.acc END AS acc)"
     )
-    return F.aggregate(
-        parts,
-        zero,
-        lambda acc, x: F.struct(
-            (acc["off"] + F.length(x) + F.lit(1)).alias("off"),
-            F.when(
-                x != "",
-                F.concat(
-                    acc["acc"],
-                    F.array(F.struct(x.alias("token"), acc["off"].cast("int").alias("pos"))),
-                ),
-            )
-            .otherwise(acc["acc"])
-            .alias("acc"),
-        ),
-        lambda acc: acc["acc"],
-    )
+    return f"aggregate({parts}, {zero}, {step}, acc -> acc.acc)"
 
 
-def token_count_t(toks) -> Column:
-    return F.size(_c(toks))
+def char_count_sql(col_sql: str) -> str:
+    return f"length({col_sql})"
 
 
-def token_count(col) -> Column:
-    """Whitespace-ish token count (LLM pipeline token budgeting, cheap path)."""
-    return token_count_t(tokenize(col))
-
-
-def char_count(col) -> Column:
-    return F.length(_c(col))
-
-
-def avg_token_len_t(toks) -> Column:
-    t = _c(toks)
-    return F.when(
-        F.size(t) > 0,
-        F.aggregate(t, F.lit(0.0), lambda acc, x: acc + F.length(x)) / F.size(t),
-    ).otherwise(F.lit(0.0))
-
-
-def avg_token_len(col) -> Column:
-    return avg_token_len_t(tokenize(col))
-
-
-def punct_ratio(col) -> Column:
+def punct_ratio_sql(col_sql: str) -> str:
     """Fraction of characters that are not alphanumeric/space."""
-    s = _c(col)
-    stripped = F.regexp_replace(s, r"[A-Za-z0-9 ]", "")
-    return F.when(F.length(s) > 0, F.length(stripped) / F.length(s)).otherwise(0.0)
+    return (
+        f"CASE WHEN length({col_sql}) > 0"
+        f" THEN length(regexp_replace({col_sql}, '[A-Za-z0-9 ]', ''))"
+        f" / length({col_sql}) ELSE 0.0D END"
+    )
 
 
 # Tiny per-language stopword signatures (deterministic heuristic; the driver
@@ -221,141 +208,57 @@ DEFAULT_STOPWORDS: dict = {
 }
 
 
-def stopword_ratio(col, stopwords: "tuple[str, ...]" = DEFAULT_STOPWORDS["en"]) -> Column:
-    toks = tokenize(col)
-    hits = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
-    return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(0.0)
-
-
-def lang_score_t(toks, lang: str, stopwords: "dict | None" = None) -> Column:
-    sw = (stopwords or DEFAULT_STOPWORDS)[lang]
-    return F.size(F.filter(_c(toks), lambda t: t.isin(*sw)))
-
-
-def lang_score(col, lang: str, stopwords: "dict | None" = None) -> Column:
-    return lang_score_t(tokenize(col), lang, stopwords)
-
-
-def lang_guess_t(toks, stopwords: "dict | None" = None) -> Column:
-    """Argmax language by stopword hits; 'und' when no signature fires.
-    Expressible identically in ANSI SQL (oracle-checkable)."""
-    sw = stopwords or DEFAULT_STOPWORDS
-    t = _c(toks)
-    scores = [(lang, lang_score_t(t, lang, sw)) for lang in sorted(sw)]
-    best = F.greatest(*[s for _, s in scores])
-    expr = F.lit("und")
-    # first language (alphabetical) wins ties — mirrored in the oracle SQL
-    for lang, s in reversed(scores):
-        expr = F.when((s == best) & (best > 0), F.lit(lang)).otherwise(expr)
-    return expr
-
-
-def lang_guess(col, stopwords: "dict | None" = None) -> Column:
-    return lang_guess_t(tokenize(col), stopwords)
-
-
-def quality_score_t(toks, text_col) -> Column:
-    """Composite [0,1] quality heuristic: length band + low punct + word shape.
-    (LLM-pipeline quality filter; deterministic, oracle-expressible.)
-    ``text_col`` is the raw text (punct ratio is character-level)."""
-    n_tok = token_count_t(toks)
-    atl = avg_token_len_t(toks)
-    pr = punct_ratio(text_col)
-    len_ok = F.when((n_tok >= 20) & (n_tok <= 1000), 1.0).otherwise(0.4)
-    shape_ok = F.when((atl >= 3) & (atl <= 10), 1.0).otherwise(0.5)
-    clean = 1.0 - F.least(pr * 5, F.lit(1.0))
-    return F.round((len_ok + shape_ok + clean) / 3, 6)
-
-
-def quality_score(col) -> Column:
-    return quality_score_t(tokenize(col), col)
-
-
-def fingerprint_t(toks) -> Column:
-    """Order-insensitive content fingerprint: md5 over sorted distinct tokens
-    (document fingerprinting for near-dup bucketing)."""
-    return F.md5(F.array_join(F.array_sort(F.array_distinct(_c(toks))), " "))
-
-
 # ---------------------------------------------------------------------------
-# Regex-count scan variants (r13, guide §1.2 "per-task work").
+# Regex-count scorers (guide §1.2 "per-task work").
 #
-# The *_t token-array forms above desugar to higher-order functions
+# Token-array forms of these scorers desugar to higher-order functions
 # (ArrayFilter / ArrayAggregate / lambdafunction), which are CodegenFallback
 # in Spark — ONE such expression kicks the whole Filter/Project operator out
 # of whole-stage codegen, so a scan-stage quality/langid gate over a document
-# corpus runs interpreted AND materializes a full token array per metric per
-# row. The *_rx forms below compute the SAME values as plain regex/string
+# corpus would run interpreted AND materialize a full token array per metric
+# per row. The builders below compute the same values as plain regex/string
 # expressions directly on the text column: codegen-able end to end, no
 # per-row array allocation.
 #
-# Equivalence argument (pinned bit-exact in tests/test_textops.py):
+# Equivalence argument (pinned against a pure-Python token spec in
+# tests/test_textops.py):
 # tokenize() = non-empty pieces of split(lower(text), '[^a-z0-9]+') — i.e.
 # the maximal [a-z0-9]+ runs of lower(text). Therefore
 #   * token count        == regexp_count(lower, '[a-z0-9]+')
 #   * sum of token chars == length(regexp_replace(lower, '[^a-z0-9]+', ''))
-#     (the aggregate() fold adds integer lengths into a double one token at
-#     a time — every partial sum is an integer < 2^53, so it equals the
+#     (an aggregate() fold adding integer lengths into a double one token at
+#     a time has every partial sum an integer < 2^53, so it equals the
 #     integer total exactly, in any order)
 #   * count of tokens equal to a stopword == regexp_count with lookaround
 #     boundaries (?<![a-z0-9])word(?![a-z0-9]): a match must cover a whole
 #     maximal run, so there is at most one per token and every matching
 #     token is counted; stopwords are [a-z]+ so no match spans a separator.
-# Null text: the array forms return size(NULL) = -1 under legacy
-# (non-ANSI) semantics; coalesce(.., -1) preserves that exactly.
+# Null text: size() of a NULL token array is -1 under legacy (non-ANSI)
+# semantics; coalesce(.., -1) preserves that exactly.
+#
+# The strings spell double literals with a `D` suffix — bare `0.4` parses
+# as DECIMAL in Spark SQL.
 # ---------------------------------------------------------------------------
-
-
-# r13 (guide §5, driver work): each *_rx function has a *_rx_sql twin that
-# renders the SAME expression as one SQL string; the public functions
-# dispatch on a plain string column name to a single F.expr parse call —
-# the Column-API chains cost hundreds of py4j round-trips per plan build
-# (pipeline_clean_corpus: ~1100). The strings mirror the Column trees node
-# for node (nested CASE chain, operand order, `D`-suffixed double literals
-# — bare `0.4` parses as DECIMAL in Spark SQL), so the parsed plans are
-# identical; plan-diff-verified and pinned by the existing bit-exact tests.
 
 
 def token_count_rx_sql(col_sql: str) -> str:
     return f"coalesce(regexp_count(lower({col_sql}), '[a-z0-9]+'), -1)"
 
 
-def token_count_rx(col) -> Column:
-    """== token_count_t(tokenize(col)), as one codegen regex pass."""
-    if isinstance(col, str):
-        return F.expr(token_count_rx_sql(col))
-    return F.coalesce(
-        F.regexp_count(F.lower(_c(col)), F.lit("[a-z0-9]+")), F.lit(-1)
-    )
-
-
 def sum_token_len_rx_sql(col_sql: str) -> str:
+    """Total alphanumeric chars of lower(col) == sum of token lengths."""
     return f"length(regexp_replace(lower({col_sql}), '[^a-z0-9]+', ''))"
 
 
-def sum_token_len_rx(col) -> Column:
-    """Total alphanumeric chars of lower(col) == sum of token lengths."""
-    if isinstance(col, str):
-        return F.expr(sum_token_len_rx_sql(col))
-    return F.length(F.regexp_replace(F.lower(_c(col)), "[^a-z0-9]+", ""))
-
-
-def avg_token_len_rx_sql(col_sql: str) -> str:
-    n = token_count_rx_sql(col_sql)
+def _avg_token_len_sql(n_sql: str, sum_sql: str) -> str:
     return (
-        f"CASE WHEN {n} > 0 THEN CAST({sum_token_len_rx_sql(col_sql)} AS DOUBLE)"
-        f" / CAST({n} AS DOUBLE) ELSE 0.0D END"
+        f"CASE WHEN {n_sql} > 0 THEN CAST({sum_sql} AS DOUBLE)"
+        f" / CAST({n_sql} AS DOUBLE) ELSE 0.0D END"
     )
 
 
-def avg_token_len_rx(col) -> Column:
-    """== avg_token_len_t(tokenize(col)) (see the exactness note above)."""
-    if isinstance(col, str):
-        return F.expr(avg_token_len_rx_sql(col))
-    n = token_count_rx(col)
-    return F.when(
-        n > 0, sum_token_len_rx(col).cast("double") / n.cast("double")
-    ).otherwise(F.lit(0.0))
+def avg_token_len_rx_sql(col_sql: str) -> str:
+    return _avg_token_len_sql(token_count_rx_sql(col_sql), sum_token_len_rx_sql(col_sql))
 
 
 def _stopword_patt(lang: str, stopwords: "dict | None") -> str:
@@ -368,23 +271,19 @@ def _stopword_patt(lang: str, stopwords: "dict | None") -> str:
 
 
 def lang_score_rx_sql(col_sql: str, lang: str, stopwords: "dict | None" = None) -> str:
+    """Stopword-token count via one lookaround-bounded alternation pass
+    (longest-first so e.g. 'and' is not shadowed by 'a' before the boundary
+    check backtracks)."""
     return (
         f"coalesce(regexp_count(lower({col_sql}),"
         f" '{_stopword_patt(lang, stopwords)}'), -1)"
     )
 
 
-def lang_score_rx(col, lang: str, stopwords: "dict | None" = None) -> Column:
-    """== lang_score_t(tokenize(col), lang): stopword-token count via one
-    lookaround-bounded alternation pass (longest-first so e.g. 'and' is not
-    shadowed by 'a' before the boundary check backtracks)."""
-    if isinstance(col, str):
-        return F.expr(lang_score_rx_sql(col, lang, stopwords))
-    patt = _stopword_patt(lang, stopwords)
-    return F.coalesce(F.regexp_count(F.lower(_c(col)), F.lit(patt)), F.lit(-1))
-
-
 def lang_guess_rx_sql(col_sql: str, stopwords: "dict | None" = None) -> str:
+    """Argmax language by stopword hits; 'und' when no signature fires.
+    The first language (alphabetical) wins ties — mirrored in the oracle
+    SQL."""
     sw = stopwords or DEFAULT_STOPWORDS
     scores = [(lang, lang_score_rx_sql(col_sql, lang, sw)) for lang in sorted(sw)]
     best = "greatest(" + ", ".join(s for _, s in scores) + ")"
@@ -397,163 +296,34 @@ def lang_guess_rx_sql(col_sql: str, stopwords: "dict | None" = None) -> str:
     return expr
 
 
-def lang_guess_rx(col, stopwords: "dict | None" = None) -> Column:
-    """== lang_guess_t(tokenize(col)): same argmax + alphabetical tie-break,
-    scores from lang_score_rx."""
-    if isinstance(col, str):
-        return F.expr(lang_guess_rx_sql(col, stopwords))
-    sw = stopwords or DEFAULT_STOPWORDS
-    scores = [(lang, lang_score_rx(col, lang, sw)) for lang in sorted(sw)]
-    best = F.greatest(*[s for _, s in scores])
-    expr = F.lit("und")
-    for lang, s in reversed(scores):
-        expr = F.when((s == best) & (best > 0), F.lit(lang)).otherwise(expr)
-    return expr
-
-
-def quality_score_parts(n_tok: Column, sum_len: Column, pr: Column) -> Column:
-    """The quality composite over already-computed primitives (token count,
-    total token chars, punct ratio). Callers that can keep the primitives in
-    a separate projection should: referencing them as COLUMNS instead of
-    inlining the regex subtrees avoids re-evaluation where codegen
-    subexpression elimination cannot hoist them out of CASE branches
-    (measured −34% executor time on text_quality_filter; CollapseProject
-    keeps the split because the aliases are non-cheap and multi-referenced)."""
-    atl = F.when(n_tok > 0, sum_len.cast("double") / n_tok.cast("double")).otherwise(
-        F.lit(0.0)
-    )
-    len_ok = F.when((n_tok >= 20) & (n_tok <= 1000), 1.0).otherwise(0.4)
-    shape_ok = F.when((atl >= 3) & (atl <= 10), 1.0).otherwise(0.5)
-    clean = 1.0 - F.least(pr * 5, F.lit(1.0))
-    return F.round((len_ok + shape_ok + clean) / 3, 6)
-
-
-def punct_ratio_sql(col_sql: str) -> str:
-    return (
-        f"CASE WHEN length({col_sql}) > 0"
-        f" THEN length(regexp_replace({col_sql}, '[A-Za-z0-9 ]', ''))"
-        f" / length({col_sql}) ELSE 0.0D END"
-    )
-
-
-def quality_score_rx_sql(col_sql: str) -> str:
-    n = token_count_rx_sql(col_sql)
-    atl = avg_token_len_rx_sql(col_sql)
-    pr = punct_ratio_sql(col_sql)
-    len_ok = f"CASE WHEN ({n} >= 20) AND ({n} <= 1000) THEN 1.0D ELSE 0.4D END"
+def quality_score_sql(n_sql: str, sum_sql: str, pr_sql: str) -> str:
+    """Composite [0,1] quality heuristic: length band + word shape + low
+    punct, over its three primitives (token count, total token chars, punct
+    ratio) given as SQL operands. Callers that can keep the primitives in a
+    separate projection should, passing the column NAMES: referencing them
+    as columns instead of inlining the regex subtrees avoids re-evaluation
+    where codegen subexpression elimination cannot hoist them out of CASE
+    branches (measured −34% executor time on text_quality_filter;
+    CollapseProject keeps the split because the aliases are non-cheap and
+    multi-referenced)."""
+    atl = _avg_token_len_sql(n_sql, sum_sql)
+    len_ok = f"CASE WHEN ({n_sql} >= 20) AND ({n_sql} <= 1000) THEN 1.0D ELSE 0.4D END"
     shape_ok = (
         f"CASE WHEN (({atl}) >= 3) AND (({atl}) <= 10) THEN 1.0D ELSE 0.5D END"
     )
-    clean = f"(1.0D - least(({pr}) * 5, 1.0D))"
+    clean = f"(1.0D - least(({pr_sql}) * 5, 1.0D))"
     return f"round((({len_ok} + {shape_ok}) + {clean}) / 3, 6)"
 
 
-def quality_score_rx(col) -> Column:
-    """== quality_score_t(tokenize(col), col): same composite, regex inputs."""
-    if isinstance(col, str):
-        return F.expr(quality_score_rx_sql(col))
-    return quality_score_parts(
-        token_count_rx(col), sum_token_len_rx(col), punct_ratio(col)
+def quality_score_rx_sql(col_sql: str) -> str:
+    return quality_score_sql(
+        token_count_rx_sql(col_sql), sum_token_len_rx_sql(col_sql), punct_ratio_sql(col_sql)
     )
 
 
 def fingerprint_sql(col_sql: str) -> str:
+    """Order-insensitive content fingerprint: md5 over sorted distinct tokens
+    (document fingerprinting for near-dup bucketing)."""
     return (
         f"md5(array_join(array_sort(array_distinct({tokenize_sql(col_sql)})), ' '))"
     )
-
-
-def fingerprint(col) -> Column:
-    if isinstance(col, str):
-        return F.expr(fingerprint_sql(col))
-    return fingerprint_t(tokenize(col))
-
-
-def tokenize_mixed_pos_py(text: str) -> "list[tuple[str, int]]":
-    """Index-side positional mixed tokenization: (token, RUNE offset) pairs,
-    INCLUDING the shrinking CJK tail windows — mirrors simple.go outputCJK
-    exactly (BytePos there; rune offsets here: deltas agree because every
-    BMP CJK rune is 3 bytes and every breaker is one rune, so both schemes
-    scale the same span)."""
-    import unicodedata
-
-    def klass(ch: str) -> int:
-        o = ord(ch)
-        if o < 128:
-            return 1 if ch.isalnum() else 0
-        if unicodedata.category(ch)[0] in ("P", "Z", "C"):
-            return 0
-        return 1 if o < 0x800 else 2
-
-    out: "list[tuple[str, int]]" = []
-    run: "list[str]" = []
-    run_k = 0
-    run_start = 0
-    low = text.lower()
-
-    def flush() -> None:
-        if not run:
-            return
-        w = "".join(run)
-        if run_k == 2:
-            out.extend((w[i : i + 3], run_start + i) for i in range(len(w)))
-        else:
-            out.append((w, run_start))
-        run.clear()
-
-    for pos, ch in enumerate(low):
-        k = klass(ch)
-        if k != run_k:
-            flush()
-            run_k = k
-            run_start = pos
-        if k:
-            run.append(ch)
-    flush()
-    return out
-
-
-def nl_query_leaves_py(pattern: str) -> "list[tuple[str, str, int]]":
-    """Query-side NATURAL LANGUAGE tokenization (ParsePatternInNLMode,
-    fulltext.go:919): (kind, token, rune_offset) — CJK runs contribute FULL
-    trigrams only (no tail windows; the reference's overlap handling folds
-    them away), runs/words shorter than the 3-rune ngram floor become
-    prefix STAR leaves. Offsets are rune offsets so phrase-adjacency deltas
-    agree with the index side."""
-    import unicodedata
-
-    def klass(ch: str) -> int:
-        o = ord(ch)
-        if o < 128:
-            return 1 if ch.isalnum() else 0
-        if unicodedata.category(ch)[0] in ("P", "Z", "C"):
-            return 0
-        return 1 if o < 0x800 else 2
-
-    out: "list[tuple[str, str, int]]" = []
-    run: "list[str]" = []
-    run_k = 0
-    run_start = 0
-
-    def flush() -> None:
-        if not run:
-            return
-        w = "".join(run)
-        if run_k == 2 and len(w) >= 3:
-            out.extend(("eq", w[i : i + 3], run_start + i) for i in range(len(w) - 2))
-        elif len(w) < 3:
-            out.append(("star", w, run_start))
-        else:
-            out.append(("eq", w, run_start))
-        run.clear()
-
-    for pos, ch in enumerate(pattern.lower()):
-        k = klass(ch)
-        if k != run_k:
-            flush()
-            run_k = k
-            run_start = pos
-        if k:
-            run.append(ch)
-    flush()
-    return out

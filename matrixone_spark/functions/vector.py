@@ -6,136 +6,113 @@ cosine_similarity, l2_distance, cosine_distance, vector_dims, normalize_l2,
 summation, subvector (function/func_binary_array_distance_test.go).
 
 Spark-first: embeddings are ArrayType(FloatType) columns; every op below is a
-pure array expression (F.aggregate / F.transform / F.zip_with) that runs
-JVM-side inside codegen — no UDF, no Python, broadcast-friendly. Elements are
-cast to double before reduction; F.aggregate folds sequentially (index order),
-so results are IEEE-deterministic and reproducible across partitionings —
+pure array expression (aggregate / transform / zip_with) that runs JVM-side
+inside codegen — no UDF, no Python, broadcast-friendly. Elements are cast to
+double before reduction; aggregate folds sequentially (index order), so
+results are IEEE-deterministic and reproducible across partitionings —
 required for the DuckDB hash-gate and for stable KNN ranking at 100 TB.
+
+Each function is one ``*_sql`` builder over SQL operands (column names,
+``lit_vector_sql(q)`` literals or any array expression); callers parse the
+string once with ``F.expr``/``selectExpr``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def _c(x) -> Column:
-    return F.col(x) if isinstance(x, str) else x
-
-
-def _d(col) -> Column:
-    """array<float> → array<double> (widen before arithmetic)."""
-    return F.transform(_c(col), lambda v: v.cast("double"))
-
-
-def _fold_sum(arr: Column) -> Column:
-    """Sequential in-order double sum of an array expression."""
-    return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def vector_dims(col) -> Column:
-    """vector_dims(v). Reference: moarray dims."""
-    return F.size(_c(col))
-
-
-def l1_norm(col) -> Column:
-    """Σ|x_i|. Reference: moarray l1_norm."""
-    return _fold_sum(F.transform(_d(col), lambda v: F.abs(v)))
-
-
-def l2_norm_sq(col) -> Column:
-    return _fold_sum(F.transform(_d(col), lambda v: v * v))
-
-
-def l2_norm(col) -> Column:
-    """sqrt(Σx²). Reference: moarray l2_norm."""
-    return F.sqrt(l2_norm_sq(col))
-
-
-def summation(col) -> Column:
-    """Σx_i. Reference: moarray summation."""
-    return _fold_sum(_d(col))
-
-
-def inner_product(a, b) -> Column:
-    """−(a·b) — the reference NEGATES the dot product so smaller means
-    closer, like its other distances (metric.InnerProduct returns -sum,
-    vectorindex/metric/distance_func.go:206)."""
-    return -_fold_sum(F.zip_with(_d(a), _d(b), lambda x, y: x * y))
-
-
-def l2_distance_sq(a, b) -> Column:
-    """Σ(a-b)². Reference: l2_distance_sq."""
-    return _fold_sum(F.zip_with(_d(a), _d(b), lambda x, y: (x - y) * (x - y)))
-
-
-def l2_distance(a, b) -> Column:
-    """Euclidean distance. Reference: moarray l2_distance; powers the L2 join
-    (colexec/productl2/product_l2.go:70)."""
-    return F.sqrt(l2_distance_sq(a, b))
-
-
-def cosine_similarity(a, b) -> Column:
-    """a·b / (|a||b|) — the POSITIVE dot here (inner_product carries the
-    reference's negated-distance convention). Reference: moarray
-    cosine_similarity."""
-    return _fold_sum(
-        F.zip_with(_d(a), _d(b), lambda x, y: x * y)
-    ) / (l2_norm(a) * l2_norm(b))
-
-
-def cosine_distance(a, b) -> Column:
-    """1 - cosine_similarity. Reference: moarray cosine_distance."""
-    return 1 - cosine_similarity(a, b)
-
-
-def normalize_l2(col) -> Column:
-    """v / |v|₂ (zero vector → NULL elements, matching reference error-free
-    mode). Reference: moarray normalize_l2."""
-    n = l2_norm(col)
-    return F.transform(_d(col), lambda v: F.when(n != 0, v / n))
-
-
-def subvector(col, start: int, length: "int | None" = None) -> Column:
-    """subvector(v, start[, len]) — 1-based like the SQL surface.
-    Reference: moarray subvector."""
-    return F.slice(_c(col), start, length) if length is not None else F.slice(
-        _c(col), start, F.size(_c(col))
-    )
-
-
-def lit_vector(vec: "list[float]") -> Column:
-    """Constant query vector as an array<double> literal.
-
-    r13 (guide §5, driver work): built as ONE SQL expression string parsed
-    JVM-side — the Column-API form (`F.array(*[F.lit(v) ...])`) cost a py4j
-    round-trip per element (65 for a 64-dim query vector) of driver-side
-    Python latency per plan build. `repr(float)` is the shortest exact
-    round-trip decimal, and the `D` suffix makes each element a DoubleType
-    literal, so the parsed array is bit-identical to the old literals.
-    """
-    return F.expr(lit_vector_sql(vec))
 
 
 def lit_vector_sql(vec: "list[float]") -> str:
-    """SQL-string form of lit_vector (composable into larger expressions)."""
+    """Constant query vector as an array<double> literal. `repr(float)` is
+    the shortest exact round-trip decimal and the `D` suffix makes each
+    element a DoubleType literal, so the parsed array holds exactly the
+    given doubles (one parse call instead of a py4j round-trip per
+    element)."""
     return "array({})".format(", ".join(f"{float(v)!r}D" for v in vec))
 
 
 def _d_sql(col_sql: str) -> str:
+    """array<float> → array<double> (widen before arithmetic)."""
     return f"transform({col_sql}, v -> CAST(v AS DOUBLE))"
 
 
 def _fold_sum_sql(arr_sql: str) -> str:
+    """Sequential in-order double sum of an array expression."""
     return f"aggregate({arr_sql}, 0.0D, (acc, v) -> acc + v)"
 
 
+def _dot_sql(a_sql: str, b_sql: str) -> str:
+    return _fold_sum_sql(f"zip_with({_d_sql(a_sql)}, {_d_sql(b_sql)}, (x, y) -> x * y)")
+
+
+def vector_dims_sql(col_sql: str) -> str:
+    """vector_dims(v). Reference: moarray dims."""
+    return f"size({col_sql})"
+
+
+def l1_norm_sql(col_sql: str) -> str:
+    """Σ|x_i|. Reference: moarray l1_norm."""
+    return _fold_sum_sql(f"transform({_d_sql(col_sql)}, x -> abs(x))")
+
+
+def l2_norm_sq_sql(col_sql: str) -> str:
+    return _fold_sum_sql(f"transform({_d_sql(col_sql)}, x -> x * x)")
+
+
+def l2_norm_sql(col_sql: str) -> str:
+    """sqrt(Σx²). Reference: moarray l2_norm."""
+    return f"sqrt({l2_norm_sq_sql(col_sql)})"
+
+
+def summation_sql(col_sql: str) -> str:
+    """Σx_i. Reference: moarray summation."""
+    return _fold_sum_sql(_d_sql(col_sql))
+
+
+def inner_product_sql(a_sql: str, b_sql: str) -> str:
+    """−(a·b) — the reference NEGATES the dot product so smaller means
+    closer, like its other distances (metric.InnerProduct returns -sum,
+    vectorindex/metric/distance_func.go:206)."""
+    return f"negative({_dot_sql(a_sql, b_sql)})"
+
+
+def l2_distance_sq_sql(a_sql: str, b_sql: str) -> str:
+    """Σ(a-b)². Reference: l2_distance_sq."""
+    return _fold_sum_sql(
+        f"zip_with({_d_sql(a_sql)}, {_d_sql(b_sql)}, (x, y) -> (x - y) * (x - y))"
+    )
+
+
 def l2_distance_sql(a_sql: str, b_sql: str) -> str:
-    """SQL-string form of l2_distance — same expression tree, one parse call
-    (r13 guide §5 driver work; the Column-API lambda chain costs ~40 py4j
-    round-trips per use)."""
-    zw = f"zip_with({_d_sql(a_sql)}, {_d_sql(b_sql)}, (x, y) -> (x - y) * (x - y))"
-    return f"sqrt({_fold_sum_sql(zw)})"
+    """Euclidean distance. Reference: moarray l2_distance; powers the L2 join
+    (colexec/productl2/product_l2.go:70)."""
+    return f"sqrt({l2_distance_sq_sql(a_sql, b_sql)})"
+
+
+def cosine_similarity_sql(a_sql: str, b_sql: str) -> str:
+    """a·b / (|a||b|) — the POSITIVE dot here (inner_product carries the
+    reference's negated-distance convention). Reference: moarray
+    cosine_similarity."""
+    return f"{_dot_sql(a_sql, b_sql)} / ({l2_norm_sql(a_sql)} * {l2_norm_sql(b_sql)})"
+
+
+def cosine_distance_sql(a_sql: str, b_sql: str) -> str:
+    """1 - cosine_similarity. Reference: moarray cosine_distance."""
+    return f"1 - ({cosine_similarity_sql(a_sql, b_sql)})"
+
+
+def normalize_l2_sql(col_sql: str) -> str:
+    """v / |v|₂ (zero vector → NULL elements, matching reference error-free
+    mode). Reference: moarray normalize_l2."""
+    n = l2_norm_sql(col_sql)
+    return f"transform({_d_sql(col_sql)}, x -> CASE WHEN {n} != 0 THEN x / {n} END)"
+
+
+def subvector_sql(col_sql: str, start: int, length: "int | None" = None) -> str:
+    """subvector(v, start[, len]) — 1-based like the SQL surface.
+    Reference: moarray subvector."""
+    n = length if length is not None else f"size({col_sql})"
+    return f"slice({col_sql}, {int(start)}, {n})"
 
 
 # --- base64 vector codecs (func_unary.go:5849 VecFromBase64: base64 of the
@@ -178,7 +155,7 @@ def vec_to_base64(col, dtype: str = "float32") -> Column:
             dtype="object",
         )
 
-    return enc(_c(col))
+    return enc(col)
 
 
 def vec_from_base64(col, dtype: str = "float32") -> Column:
@@ -211,7 +188,7 @@ def vec_from_base64(col, dtype: str = "float32") -> Column:
             )
         return _pd.Series(out, dtype="object")
 
-    return dec(_c(col))
+    return dec(col)
 
 
 def vecf32_from_base64(col) -> Column:
@@ -254,7 +231,7 @@ def vecbf16_from_base64(col) -> Column:
             out.append([float(x) for x in u16.view(np.float32)])
         return _pd.Series(out, dtype="object")
 
-    return dec(_c(col))
+    return dec(col)
 
 
 def vecint8_from_base64(col) -> Column:

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from matrixone_spark.functions.text import tokenize
+from matrixone_spark.functions.text import tokenize, tokenize_sql
 
 
 def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
@@ -50,27 +50,10 @@ def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     )
 
 
-def word_shingles(col, n: int = 3):
-    """Distinct word n-grams of a text column (array expression).
-
-    r13 (guide §5, driver work): for a plain column name the expression is
-    built as ONE SQL string parsed JVM-side — the Column-API chain cost ~40
-    py4j round-trips per call; identical expression tree either way (the
-    `toks` subtree is duplicated per use in both forms; Catalyst's
-    subexpression elimination handles it).
-    """
-    if isinstance(col, str):
-        return F.expr(word_shingles_sql(col, n))
-    toks = tokenize(col)
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    grams = F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
-    return F.array_distinct(F.when(F.size(toks) >= n, grams).otherwise(F.array()))
-
-
 def word_shingles_sql(col_sql: str, n: int = 3) -> str:
-    """SQL-string form of word_shingles."""
-    from matrixone_spark.functions.text import tokenize_sql
-
+    """Distinct word n-grams of a text column (array expression). The
+    tokenize subtree is repeated at each use in the string; Catalyst's
+    subexpression elimination evaluates it once."""
     toks = tokenize_sql(col_sql)
     grams = (
         f"transform(sequence(0, greatest(size({toks}) - {n}, 0)),"
@@ -180,7 +163,7 @@ def minhash_signatures(
     """
     sh = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(word_shingles(text_col, shingle_n)).alias("shingle"),
+        F.explode(F.expr(word_shingles_sql(text_col, shingle_n))).alias("shingle"),
     )
     # r13 (guide §5, driver work): the per-permutation aggregates are built
     # as SQL strings parsed JVM-side in one call each — the Column-API form
@@ -244,7 +227,7 @@ def minhash_lsh_pairs(
     # blocks die with the DataFrame (per-invocation, nothing crosses runs).
     sets = docs.select(
         F.col(id_col).alias("doc_id"),
-        word_shingles(text_col, shingle_n).alias("sh_set"),
+        F.expr(word_shingles_sql(text_col, shingle_n)).alias("sh_set"),
     ).localCheckpoint()
     sh = sets.select("doc_id", F.explode("sh_set").alias("shingle"))
     # r13 (guide §5, driver work): the per-permutation min-aggregates and the
@@ -301,35 +284,13 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash(col, bits: int = 64):
-    """64-bit SimHash of a text column: sign of per-bit weighted sums over
-    token hashes — pure array/bit expressions."""
-    toks = tokenize(col)
-    h = F.transform(toks, lambda t: F.xxhash64(t))
-    bit_sums = [
-        F.aggregate(
-            h,
-            F.lit(0),
-            lambda acc, v: acc
-            + F.when(v.bitwiseAND(F.lit(1 << i) if i < 63 else F.lit(-(2**63))) != 0, 1).otherwise(-1),
-        )
-        for i in range(bits)
-    ]
-    out = F.lit(0).cast("long")
-    for i, s in enumerate(bit_sums):
-        bit_val = F.lit(1 << i).cast("long") if i < 63 else F.lit(-(2**63)).cast("long")
-        out = out + F.when(s > 0, bit_val).otherwise(F.lit(0).cast("long"))
-    return out
-
-
 def simhash_signatures(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-doc SimHash-64 via explode → one groupBy with 64 conditional-sum
-    aggregates. Bit-identical to the Column-level ``simhash`` (sum over
-    token ±1 votes is commutative) but avoids inlining the tokenizer into
-    all 64 fold expressions — same codegen-explosion fix and map-side
-    partial-agg scale shape as ``minhash_signatures``. Docs with zero
-    tokens drop out (the Column form gives them signature 0; a no-token
-    doc has no similarity signal either way)."""
+    """Per-doc SimHash-64: sign of per-bit weighted sums over token hashes,
+    via explode → one groupBy with 64 conditional-sum aggregates (the sum
+    over token ±1 votes is commutative). Exploding first avoids inlining the
+    tokenizer into all 64 fold expressions — same codegen-explosion fix and
+    map-side partial-agg scale shape as ``minhash_signatures``. Docs with
+    zero tokens drop out (a no-token doc has no similarity signal)."""
     toks = docs.select(
         F.col(id_col).alias("doc_id"), F.explode(tokenize(text_col)).alias("_t")
     )

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from matrixone_spark.functions.text import tokenize_positions
+from matrixone_spark.functions.text import tokenize_positions_sql
 from matrixone_spark.operators import fulltext_pattern as fp
 
 # (app id, corpus semantic hash, id col, text col) → built index. Bounded
@@ -150,7 +150,7 @@ class FullTextIndex:
         else:
             toks = docs.select(
                 F.col(id_col).alias("doc_id"),
-                F.explode(tokenize_positions(text_col)).alias("tk"),
+                F.explode(F.expr(tokenize_positions_sql(text_col))).alias("tk"),
             )
             postings_pos = toks.select(
                 "doc_id", F.col("tk.token").alias("token"), F.col("tk.pos").alias("pos")

@@ -14,8 +14,9 @@ Spark-first design:
 - Exact single-query KNN: distance expression + orderBy().limit(k) — Catalyst
   plans TakeOrderedAndProject (per-partition heap + driver merge), the same
   shape as the reference's Top operator. No shuffle of the full table.
-- Exact KNN join (many queries): broadcast the (small) query set, compute
-  distances, per-query top-k via window row_number — one shuffle on query_id.
+- Exact KNN join (many queries; queries/vector.py knn_join_per_query):
+  broadcast the (small) query set, compute distances, per-query top-k via
+  window row_number — one shuffle on query_id.
 - IVF: centroids from MLlib KMeans (cluster_centers parity); assignments
   stored as a DataFrame partitioned by centroid_id. At 100 TB the assignment
   table is written bucketed/partitioned by centroid_id so a probe reads only
@@ -26,7 +27,7 @@ Determinism: distances tie-break on the id column everywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from matrixone_spark.functions import vector as V
@@ -38,61 +39,19 @@ def knn_exact(
     query_vec: "list[float]",
     k: int,
     id_col: str,
-    metric: str = "l2",
 ) -> DataFrame:
-    """Top-k rows nearest to query_vec. ProductL2 single-probe parity.
+    """Top-k rows nearest to query_vec by L2 distance. ProductL2
+    single-probe parity.
 
     Plan shape: scan → project(distance) → TakeOrderedAndProject(k) — no
     shuffle; scales linearly with executors.
     """
-    # r13 (guide §5, driver work): for the common L2 path the distance is one
-    # SQL string parsed JVM-side instead of a ~40-round-trip Column lambda
-    # chain; identical expression tree (plan-diff-verified)
-    if metric == "l2":
-        dist = F.expr(V.l2_distance_sql(emb_col, V.lit_vector_sql(query_vec)))
-    else:
-        dist = _metric(emb_col, V.lit_vector(query_vec), metric)
+    dist = F.expr(V.l2_distance_sql(emb_col, V.lit_vector_sql(query_vec)))
     return (
         items.withColumn("distance", dist)
         .orderBy(F.asc("distance"), F.asc(id_col))
         .limit(k)
     )
-
-
-def knn_join(
-    items: DataFrame,
-    queries: DataFrame,
-    item_emb: str,
-    query_emb: str,
-    k: int,
-    item_id: str,
-    query_id: str,
-    metric: str = "l2",
-) -> DataFrame:
-    """Per-query top-k: ProductL2 join parity (product_l2.go:70).
-
-    queries is broadcast (small side); the cross product never materializes —
-    Catalyst fuses distance + window into the broadcast-nested-loop output.
-    """
-    j = items.crossJoin(F.broadcast(queries))
-    dist = _metric(item_emb, F.col(query_emb), metric)
-    w = Window.partitionBy(query_id).orderBy(F.asc("distance"), F.asc(item_id))
-    return (
-        j.withColumn("distance", dist)
-        .withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= k)
-    )
-
-
-def _metric(emb_col, q, metric: str):
-    if metric == "l2":
-        return V.l2_distance(emb_col, q)
-    if metric == "cosine":
-        return V.cosine_distance(emb_col, q)
-    if metric == "ip":
-        # V.inner_product is already the reference's negated-dot distance
-        return V.inner_product(emb_col, q)
-    raise ValueError(f"unknown metric {metric!r}")
 
 
 class IvfIndex:
@@ -383,12 +342,7 @@ class IvfPqIndex:
                 .withColumnRenamed("adc_distance", "distance")
             )
         short = adc.orderBy(F.asc("adc_distance"), F.asc(self.id_col)).limit(refine * k)
-        q = V.lit_vector(query_vec)
-        return (
-            short.withColumn("distance", V.l2_distance(self.emb_col, q))
-            .orderBy(F.asc("distance"), F.asc(self.id_col))
-            .limit(k)
-        )
+        return knn_exact(short, self.emb_col, query_vec, k, self.id_col)
 
     def unpersist(self) -> None:
         self.codes.unpersist(blocking=False)

@@ -154,7 +154,7 @@ _HEAD: "tuple[str, ...]" = (
     "tpch_q5",
     "tpch_q7",
     "tpch_q14",
-    # -- r13 regex-count text scoring rewrite (functions/text.py *_rx):
+    # -- regex-count text scorers (functions/text.py *_rx_sql):
     # text_token_stats + pipeline_clean_corpus are window-resident above;
     # text_lang_guess pins the langid rewrite (text_quality_filter shares
     # the same rx primitives and stays gated by the full-registry sim) --

@@ -42,15 +42,14 @@ FROM documents
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    # r13: regex-count scan variants (functions/text.py *_rx) — same values,
-    # no token-array materialization, whole-stage codegen kept (the *_t
-    # array forms desugar to CodegenFallback higher-order functions)
-    return d.select(
+    # regex-count scorers (functions/text.py): no token-array
+    # materialization, whole-stage codegen kept
+    return d.selectExpr(
         "doc_id",
-        T.token_count_rx("text").alias("n_tokens"),
-        T.char_count("text").alias("n_chars_calc"),
-        F.round(T.avg_token_len_rx("text"), 6).alias("avg_tok_len"),
-        F.round(T.punct_ratio("text"), 6).alias("punct_ratio"),
+        f"{T.token_count_rx_sql('text')} AS n_tokens",
+        f"{T.char_count_sql('text')} AS n_chars_calc",
+        f"round({T.avg_token_len_rx_sql('text')}, 6) AS avg_tok_len",
+        f"round({T.punct_ratio_sql('text')}, 6) AS punct_ratio",
     )
 
 
@@ -84,9 +83,9 @@ GROUP BY 1, 2
 )
 def text_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    # r13: lookaround-bounded regex stopword counts (see functions/text.py)
+    # lookaround-bounded regex stopword counts (see functions/text.py)
     return (
-        d.select(F.col("lang").alias("actual_lang"), T.lang_guess_rx("text").alias("guessed"))
+        d.selectExpr("lang AS actual_lang", f"{T.lang_guess_rx_sql('text')} AS guessed")
         .groupBy("actual_lang", "guessed")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -117,18 +116,17 @@ FROM scored GROUP BY source
 )
 def text_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    # r13: regex-count primitives staged in their own projection, composite
-    # over the COLUMNS (quality_score_parts docstring has the why: CASE
+    # regex-count primitives staged in their own projection, composite
+    # over the COLUMNS (quality_score_sql docstring has the why: CASE
     # branches defeat codegen subexpr elimination on inlined regex subtrees)
-    prim = d.select(
+    prim = d.selectExpr(
         "source",
-        T.token_count_rx("text").alias("_n"),
-        T.sum_token_len_rx("text").alias("_s"),
-        T.punct_ratio("text").alias("_pr"),
+        f"{T.token_count_rx_sql('text')} AS _n",
+        f"{T.sum_token_len_rx_sql('text')} AS _s",
+        f"{T.punct_ratio_sql('text')} AS _pr",
     )
-    scored = prim.select(
-        "source",
-        T.quality_score_parts(F.col("_n"), F.col("_s"), F.col("_pr")).alias("quality"),
+    scored = prim.selectExpr(
+        "source", f"{T.quality_score_sql('_n', '_s', '_pr')} AS quality"
     )
     return scored.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -151,7 +149,7 @@ FROM documents WHERE doc_id < 200
 )
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents").filter(F.col("doc_id") < 200)
-    return d.select("doc_id", T.fingerprint("text").alias("fp"))
+    return d.selectExpr("doc_id", f"{T.fingerprint_sql('text')} AS fp")
 
 
 _FT_QUERY_TERMS = ["table", "query", "spark"]
@@ -540,11 +538,11 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = Catalog(spark, sf_dir).table("documents")
-    # r13 (guide §1.2 per-task work): the scoring gate uses the regex-count
-    # scan variants (functions/text.py *_rx) — the old token-array forms
-    # desugar to CodegenFallback higher-order functions, which kicked the
+    # Per-task work (guide §1.2): the scoring gate uses the regex-count
+    # scorers (functions/text.py) — token-array forms desugar to
+    # CodegenFallback higher-order functions, which would kick the
     # pushed-down quality/langid Filter (and the projections) out of
-    # whole-stage codegen and materialized token arrays per metric per row.
+    # whole-stage codegen and materialize token arrays per metric per row.
     # Only the fingerprint still needs the token array (sorted distinct
     # tokens), and it is computed AFTER the filter, on survivors only.
     # r13 (guide §5, driver work): the whole scored projection and the final

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from matrixone_spark.catalog import Catalog
 from matrixone_spark.functions import vector as V
-from matrixone_spark.operators.knn import IvfIndex, IvfPqIndex, LshAnnIndex, knn_exact, knn_join
+from matrixone_spark.operators.knn import IvfIndex, IvfPqIndex, LshAnnIndex, knn_exact
 from matrixone_spark.queries import register
 
 # Deterministic query vector (shared by Spark and oracle SQL).
@@ -39,15 +39,15 @@ FROM embeddings WHERE vec_id < 200
 )
 def vec_norms_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = Catalog(spark, sf_dir).table("embeddings").filter(F.col("vec_id") < 200)
-    return e.select(
+    return e.selectExpr(
         "vec_id",
-        V.vector_dims("embedding").alias("dims"),
-        V.l1_norm("embedding").alias("l1"),
-        V.l2_norm("embedding").alias("l2"),
-        V.summation("embedding").alias("tot"),
-        F.col("embedding").getItem(2).cast("double").alias("elem3"),
-        F.size(V.subvector("embedding", 2, 4)).alias("sub_len"),
-        V.normalize_l2("embedding").getItem(0).alias("norm_first"),
+        f"{V.vector_dims_sql('embedding')} AS dims",
+        f"{V.l1_norm_sql('embedding')} AS l1",
+        f"{V.l2_norm_sql('embedding')} AS l2",
+        f"{V.summation_sql('embedding')} AS tot",
+        "CAST(embedding[2] AS DOUBLE) AS elem3",
+        f"size({V.subvector_sql('embedding', 2, 4)}) AS sub_len",
+        f"{V.normalize_l2_sql('embedding')}[0] AS norm_first",
     )
 
 
@@ -66,12 +66,12 @@ FROM embeddings WHERE vec_id < 200
 )
 def vec_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = Catalog(spark, sf_dir).table("embeddings").filter(F.col("vec_id") < 200)
-    q = V.lit_vector(_QVEC)
-    return e.select(
+    q = V.lit_vector_sql(_QVEC)
+    return e.selectExpr(
         "vec_id",
-        V.l2_distance("embedding", q).alias("l2_dist"),
-        V.cosine_similarity("embedding", q).alias("cos_sim"),
-        V.inner_product("embedding", q).alias("ip"),
+        f"{V.l2_distance_sql('embedding', q)} AS l2_dist",
+        f"{V.cosine_similarity_sql('embedding', q)} AS cos_sim",
+        f"{V.inner_product_sql('embedding', q)} AS ip",
     )
 
 
@@ -117,15 +117,15 @@ def knn_join_per_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb")
     )
-    # exclude self-matches before ranking (same as the oracle's WHERE), so this
-    # inlines knn_join's broadcast+window shape with a pre-filter on the pairs
+    # broadcast the probes, rank per probe with a window; self-matches are
+    # excluded before ranking (same as the oracle's WHERE)
     items = e.select("vec_id", "embedding")
     pairs = items.crossJoin(F.broadcast(queries)).filter(F.col("vec_id") != F.col("qid"))
     from pyspark.sql import Window
 
     w = Window.partitionBy("qid").orderBy(F.asc("distance"), F.asc("vec_id"))
     return (
-        pairs.withColumn("distance", V.l2_distance("embedding", F.col("qemb")))
+        pairs.withColumn("distance", F.expr(V.l2_distance_sql("embedding", "qemb")))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 3)
         .select("qid", "vec_id", "distance")
@@ -175,7 +175,7 @@ def vec_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = e.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("emb_b"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", V.cosine_similarity("emb_a", "emb_b"))
+        .withColumn("cos_sim", F.expr(V.cosine_similarity_sql("emb_a", "emb_b")))
         .filter(F.col("cos_sim") > 0.95)
         .select("id_a", "id_b", "cos_sim")
     )

@@ -105,6 +105,30 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _fix_nanos_timestamps(reader.load(path))
 
 
+def _drain(df: DataFrame, mode: str) -> DataFrame:
+    """Run a streaming frame to completion (availableNow) into a memory sink
+    and return the emitted rows as a batch DataFrame. The frame must have
+    been built on the _stream_session (its confs are read at query start).
+
+    The returned frame is analyzed on creation, so it holds the sink's data
+    through its plan and no longer needs the sink's temp view; the view is
+    dropped here — otherwise every drain would leave one memory-sink table
+    behind in the long-lived stream session's catalog."""
+    name = f"stream_result_{uuid.uuid4().hex[:8]}"
+    q = (
+        df.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    ss = df.sparkSession
+    out = ss.table(name)
+    ss.catalog.dropTempView(name)
+    return out
+
+
 def run_streaming_aggregate(
     spark: SparkSession,
     sf_dir: str,
@@ -117,17 +141,7 @@ def run_streaming_aggregate(
     stream = _events_stream(ss, sf_dir)
     if watermark:
         stream = stream.withWatermark(*watermark)
-    agg = agg_builder(stream)
-    name = f"stream_result_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return ss.table(name)
+    return _drain(agg_builder(stream), "complete")
 
 
 def tumbling_event_counts(stream: DataFrame) -> DataFrame:
@@ -248,16 +262,7 @@ def stream_stream_interval_join(
         F.col("v_user").alias("user_id"),
         (F.unix_micros("c_ts") - F.unix_micros("v_ts")).alias("gap_us"),
     )
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return ss.table(name)
+    return _drain(joined, "append")
 
 
 def stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -306,22 +311,13 @@ def stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     updated = stream.groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    name = f"sus_{uuid.uuid4().hex[:8]}"
-    q = (
-        updated.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # multiple micro-batches emit successive totals; the final row per user
     # (max n_events) is the converged state
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
-        ss.table(name)
+        _drain(updated, "update")
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
@@ -332,16 +328,7 @@ def run_streaming_append(agg: DataFrame) -> DataFrame:
     """Run an append-mode streaming transform to completion (availableNow)
     and return the emitted rows as a batch DataFrame. The stream must have
     been built on the _stream_session (its confs are read at query start)."""
-    name = f"stream_result_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return agg.sparkSession.table(name)
+    return _drain(agg, "append")
 
 
 def dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,8 +9,8 @@ from matrixone_spark.catalog import Catalog
 from matrixone_spark.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    simhash,
     simhash_pairs,
+    simhash_signatures,
 )
 from tests.conftest import SF_DIR
 
@@ -108,8 +108,8 @@ def test_simhash_identity_and_stability(spark):
     )
     pairs = simhash_pairs(df, "id", "text", max_hamming=0).collect()
     assert {(p.id_a, p.id_b) for p in pairs} == {(1, 2)}
-    h = df.select(simhash("text").alias("h")).collect()
-    assert h[0].h == h[1].h != h[2].h
+    h = {r.doc_id: r.sh for r in simhash_signatures(df, "id", "text").collect()}
+    assert h[1] == h[2] != h[3]
 
 
 def test_simhash_block_cap_is_subset(spark):

@@ -160,3 +160,19 @@ def test_stream_session_isolates_caller_confs(spark):
     assert ss.conf.get("spark.sql.streaming.noDataMicroBatches.enabled") == "false"
     # reused across drains (one child per application)
     assert _stream_session(spark) is ss
+
+
+def test_stream_drains_leave_no_sink_tables(spark, registry):
+    """Each drain drops its memory-sink view: repeated stream rows leave the
+    stream session's catalog flat, and every returned frame still collects
+    after its view is gone."""
+    from matrixone_spark.streaming.events import _stream_session
+
+    q = registry["stream_tumbling_counts"]
+    q.fn(spark, SF_DIR)
+    ss = _stream_session(spark)
+    n_tables = len(ss.catalog.listTables())
+    frames = [q.fn(spark, SF_DIR) for _ in range(5)]
+    assert len(ss.catalog.listTables()) == n_tables
+    rows = [sorted(map(tuple, f.collect())) for f in frames]
+    assert rows[0] and all(r == rows[0] for r in rows)

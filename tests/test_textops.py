@@ -1,11 +1,13 @@
-"""r13 regex-count text-scoring variants: the *_rx forms in
-functions/text.py must be bit-equal to the token-array *_t forms they
-replace in the scan-stage queries, and the rewritten queries' scan stages
-must stay free of CodegenFallback higher-order functions."""
+"""Text builders in functions/text.py: the SQL-string scorers, tokenizer,
+fingerprint and shingles must equal an independent pure-Python spec, and
+the scan stages of the queries using them must stay free of
+CodegenFallback higher-order functions."""
 
 from __future__ import annotations
 
-import math
+import hashlib
+import re
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import functions as F
 
@@ -26,37 +28,70 @@ NASTY = [
 ]
 
 
-def test_rx_variants_equal_array_forms(spark):
+def _tokens(s):
+    return re.findall("[a-z0-9]+", s.lower())
+
+
+def _spark_round6(x: float) -> float:
+    # Spark's round(double, 6): HALF_UP over the double's shortest decimal
+    # form, not Python's round-half-even over its binary value
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
+
+
+def _spec(s, n_shingle=3):
+    """Pure-Python reference for the text scorers: tokens are the maximal
+    [a-z0-9]+ runs of str.lower(); counts are -1 on NULL (legacy size of
+    NULL); language is argmax over stopword hits, alphabetical tie-break."""
+    langs = sorted(T.DEFAULT_STOPWORDS)
+    if s is None:
+        n, total, scores, toks, shingles, fp = -1, None, {g: -1 for g in langs}, None, [], None
+        pr = 0.0
+    else:
+        toks = _tokens(s)
+        n, total = len(toks), sum(len(t) for t in toks)
+        scores = {g: sum(t in T.DEFAULT_STOPWORDS[g] for t in toks) for g in langs}
+        grams = [" ".join(toks[i : i + n_shingle]) for i in range(max(n - n_shingle, 0) + 1)]
+        shingles = list(dict.fromkeys(grams)) if n >= n_shingle else []
+        fp = hashlib.md5(" ".join(sorted(set(toks))).encode()).hexdigest()
+        kept = re.sub("[A-Za-z0-9 ]", "", s)
+        pr = len(kept) / len(s) if len(s) > 0 else 0.0
+    avg = total / n if n > 0 else 0.0
+    best = max(scores.values())
+    guess = next(g for g in langs if scores[g] == best) if best > 0 else "und"
+    len_ok = 1.0 if 20 <= n <= 1000 else 0.4
+    shape_ok = 1.0 if 3 <= avg <= 10 else 0.5
+    clean = 1.0 - min(pr * 5, 1.0)
+    quality = _spark_round6(((len_ok + shape_ok) + clean) / 3)
+    return {
+        "toks": toks, "n": n, "sum": total, "avg": avg, "pr": pr, "guess": guess,
+        "q": quality, "fp": fp, "sh": shingles,
+        **{f"lang_{g}": scores[g] for g in langs},
+    }
+
+
+def test_text_builders_match_python_spec(spark):
+    from matrixone_spark.operators.dedup import word_shingles_sql
+
     df = spark.createDataFrame([(t,) for t in NASTY], "text string")
-    toks = T.tokenize("text")
-    rows = df.select(
-        F.size(toks).alias("old_n"),
-        T.token_count_rx("text").alias("new_n"),
-        F.aggregate(toks, F.lit(0.0), lambda a, x: a + F.length(x)).alias("old_sum"),
-        T.sum_token_len_rx("text").cast("double").alias("new_sum"),
-        T.avg_token_len_t(toks).alias("old_avg"),
-        T.avg_token_len_rx("text").alias("new_avg"),
-        *[T.lang_score_t(toks, lang).alias(f"old_{lang}") for lang in sorted(T.DEFAULT_STOPWORDS)],
-        *[T.lang_score_rx("text", lang).alias(f"new_{lang}") for lang in sorted(T.DEFAULT_STOPWORDS)],
-        T.lang_guess_t(toks).alias("old_guess"),
-        T.lang_guess_rx("text").alias("new_guess"),
-        T.quality_score_t(toks, "text").alias("old_q"),
-        T.quality_score_rx("text").alias("new_q"),
-    ).collect()
+    langs = sorted(T.DEFAULT_STOPWORDS)
+    exprs = {
+        "toks": T.tokenize_sql("text"),
+        "n": T.token_count_rx_sql("text"),
+        "sum": T.sum_token_len_rx_sql("text"),
+        "avg": T.avg_token_len_rx_sql("text"),
+        "pr": T.punct_ratio_sql("text"),
+        "guess": T.lang_guess_rx_sql("text"),
+        "q": T.quality_score_rx_sql("text"),
+        "fp": T.fingerprint_sql("text"),
+        "sh": word_shingles_sql("text", 3),
+        **{f"lang_{g}": T.lang_score_rx_sql("text", g) for g in langs},
+    }
+    rows = df.select("text", *[F.expr(e).alias(k) for k, e in exprs.items()]).collect()
+    assert len(rows) == len(NASTY)
     for r in rows:
-        assert r.old_n == r.new_n, r
-        if r.old_sum is None:
-            assert r.new_sum is None, r
-        else:
-            assert r.old_sum == r.new_sum, r
-        assert (
-            r.old_avg == r.new_avg
-            or (math.isnan(r.old_avg) and math.isnan(r.new_avg))
-        ), r
-        for lang in sorted(T.DEFAULT_STOPWORDS):
-            assert r[f"old_{lang}"] == r[f"new_{lang}"], (lang, r)
-        assert r.old_guess == r.new_guess, r
-        assert r.old_q == r.new_q, r
+        want = _spec(r.text)
+        for k in exprs:
+            assert r[k] == want[k], (k, r.text, r[k], want[k])
 
 
 def test_pipeline_scan_stage_codegen(spark):
@@ -86,31 +121,3 @@ def test_token_stats_no_higher_order_functions(spark):
         .toString()
     )
     assert "lambdafunction" not in plan, plan[:2000]
-
-
-def test_sql_string_dispatch_equals_column_path(spark):
-    """r13 driver-work conversions: every function that dispatches a plain
-    column NAME to a one-call F.expr SQL string must stay bit-equal to its
-    Column-API fallback path (same expression tree, just parsed JVM-side)."""
-    from matrixone_spark.operators.dedup import word_shingles
-
-    df = spark.createDataFrame([(t,) for t in NASTY], "text string")
-    c = F.col("text")
-    pairs = [
-        ("tokenize", T.tokenize("text"), T.tokenize(c)),
-        ("shingles", word_shingles("text", 3), word_shingles(c, 3)),
-        ("fingerprint", T.fingerprint("text"), T.fingerprint(c)),
-        ("token_count", T.token_count_rx("text"), T.token_count_rx(c)),
-        ("sum_len", T.sum_token_len_rx("text"), T.sum_token_len_rx(c)),
-        ("avg_len", T.avg_token_len_rx("text"), T.avg_token_len_rx(c)),
-        ("lang_en", T.lang_score_rx("text", "en"), T.lang_score_rx(c, "en")),
-        ("guess", T.lang_guess_rx("text"), T.lang_guess_rx(c)),
-        ("quality", T.quality_score_rx("text"), T.quality_score_rx(c)),
-    ]
-    cols = []
-    for name, s_form, c_form in pairs:
-        cols.append(s_form.alias(f"s_{name}"))
-        cols.append(c_form.alias(f"c_{name}"))
-    for r in df.select(*cols).collect():
-        for name, _, _ in pairs:
-            assert r[f"s_{name}"] == r[f"c_{name}"], (name, r)

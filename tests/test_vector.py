@@ -4,6 +4,8 @@ index recall parity')."""
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
 from matrixone_spark.catalog import Catalog
@@ -163,3 +165,87 @@ def test_vec_from_base64_dtype_variants(spark):
     assert r.v64 == [1.5, -2.0, 0.25] and r.v32 == [1.5, -2.0, 0.25]
     assert r.v16 == [1.5, -2.0, 0.25] and r.vi8 == [1.0, -2.0, 3.0]
     assert r.vbf == [1.5, -2.0]
+
+
+# Edge inputs for the vector builders: zero vector, NULL array, one element,
+# negatives; the query literal's reprs use exponents and a signed zero.
+_EDGE_ROWS = [
+    (0, [0.0, 0.0, 0.0]),
+    (1, None),
+    (2, [3.5]),
+    (3, [-1.0, 2.0, -3.0]),
+    (4, [1e-3, -2.5, 4.0]),
+]
+_EDGE_Q = [1e-300, 1e16, -0.0]
+
+
+def _np_spec(v, q):
+    """NumPy reference: in-order double folds (np.add.reduce over a Python
+    list of floats sums left to right for these lengths), NULL in → NULL
+    out, division by a zero norm → NULL under non-ANSI semantics."""
+    import numpy as np
+
+    if v is None:
+        return None
+    a = np.array(v, dtype=np.float64)
+    l2 = float(np.sqrt(sum(x * x for x in a)))
+    out = {
+        "dims": len(v),
+        "l1": float(sum(abs(x) for x in a)),
+        "l2sq": float(sum(x * x for x in a)),
+        "l2": l2,
+        "tot": float(sum(x for x in a)),
+        "sub": v[1:3],
+        "sub_tail": v[1:],
+        "norm": [float(x / l2) if l2 != 0 else None for x in a],
+    }
+    if len(v) == len(q):
+        b = np.array(q, dtype=np.float64)
+        dot = float(sum(x * y for x, y in zip(a, b)))
+        qn = float(np.sqrt(sum(y * y for y in b)))
+        den = l2 * qn
+        cos = dot / den if den != 0 else None
+        out.update({
+            "ip": -dot,
+            "l2dsq": float(sum((x - y) * (x - y) for x, y in zip(a, b))),
+            "l2d": float(np.sqrt(sum((x - y) * (x - y) for x, y in zip(a, b)))),
+            "cos": cos,
+            "cosd": None if cos is None else 1 - cos,
+        })
+    return out
+
+
+def test_vector_builders_match_numpy_spec(spark):
+    from matrixone_spark.functions import vector as V
+
+    df = spark.createDataFrame(_EDGE_ROWS, "id int, v array<float>")
+    q = V.lit_vector_sql(_EDGE_Q)
+    exprs = {
+        "dims": V.vector_dims_sql("v"),
+        "l1": V.l1_norm_sql("v"),
+        "l2sq": V.l2_norm_sq_sql("v"),
+        "l2": V.l2_norm_sql("v"),
+        "tot": V.summation_sql("v"),
+        "sub": V.subvector_sql("v", 2, 2),
+        "sub_tail": V.subvector_sql("v", 2),
+        "norm": V.normalize_l2_sql("v"),
+        "ip": V.inner_product_sql("v", q),
+        "l2dsq": V.l2_distance_sq_sql("v", q),
+        "l2d": V.l2_distance_sql("v", q),
+        "cos": V.cosine_similarity_sql("v", q),
+        "cosd": V.cosine_distance_sql("v", q),
+    }
+    got = df.selectExpr("id", "v", f"{q} AS q", *[f"{e} AS {k}" for k, e in exprs.items()])
+    rows = sorted(got.collect(), key=lambda r: r.id)
+    assert len(rows) == len(_EDGE_ROWS)
+    # the literal holds exactly the given doubles, signed zero included
+    assert rows[0].q == _EDGE_Q and math.copysign(1.0, rows[0].q[2]) == -1.0
+    for r in rows:
+        want = _np_spec(r.v, _EDGE_Q)
+        for k in exprs:
+            if want is None:
+                assert r[k] is None or k == "dims" and r[k] == -1, (k, r.id, r[k])
+            elif k in want:
+                assert r[k] == want[k], (k, r.id, r[k], want[k])
+    zero = rows[0]
+    assert zero.norm == [None, None, None] and zero.cos is None
