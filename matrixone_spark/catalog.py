@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from matrixone_spark.matcache import LAZY_CAPACITY, MaterializationCache
+
 # Driver-provided tables (TESTDATA.md). One parquet per table at sf dirs.
 TABLES: tuple[str, ...] = (
     "region",
@@ -65,8 +67,9 @@ def _fix_nanos_timestamps(df: DataFrame) -> DataFrame:
 # Shared across Catalog instances: the driver sweep constructs a fresh
 # Catalog per query; re-reading parquet footers 100+ times is pure waste.
 # Keyed by applicationId (stable for a session's lifetime, never reused by a
-# later session the way id(spark) can be after GC) + sf_dir + table name.
-_TABLE_CACHE: "dict[tuple[str, str, str], DataFrame]" = {}
+# later session the way id(spark) can be after GC) + (sf_dir, table name),
+# and rebuilt when the table's source file changes.
+_TABLE_CACHE = MaterializationCache(LAZY_CAPACITY)
 
 
 # Correctness-critical session confs that are runtime-settable. The round
@@ -97,8 +100,7 @@ class Catalog:
         ensure_session_confs(spark)
         self.spark = spark
         self.sf_dir = sf_dir
-        self._cache = _TABLE_CACHE
-        self._key = (spark.sparkContext.applicationId, sf_dir)
+        self.app_id = spark.sparkContext.applicationId
 
     def path(self, name: str) -> str:
         p = os.path.join(self.sf_dir, f"{name}.parquet")
@@ -111,19 +113,19 @@ class Catalog:
         raise FileNotFoundError(f"table {name!r} not found under {self.sf_dir}")
 
     def table(self, name: str) -> DataFrame:
-        key = (*self._key, name)
-        if key not in self._cache:
+        path = self.path(name)
+
+        def build() -> DataFrame:
             from matrixone_spark.sources.layout_cache import split_layout_path
 
-            path = self.path(name)
             # Ingest-layout step (reference TAE block ingest parity): a
             # single-file single-row-group table can't be split, so every
             # scan of it is one task; rewrite once into a clustered
             # multi-file copy and scan that. No-op for directory tables.
             split = split_layout_path(path, name)
-            df = self.spark.read.parquet(split or path)
-            self._cache[key] = _fix_nanos_timestamps(df)
-        return self._cache[key]
+            return _fix_nanos_timestamps(self.spark.read.parquet(split or path))
+
+        return _TABLE_CACHE.get(self.app_id, (self.sf_dir, name), [path], build)
 
     def register_views(self) -> None:
         """Register every table as a temp view so ``spark.sql`` sees them."""

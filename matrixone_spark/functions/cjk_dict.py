@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
 
+from matrixone_spark.functions import col_of
+
 # word -> relative frequency. Rough magnitudes are enough: the DP only
 # compares log-frequencies, and ties never arise between a multi-char word
 # and its single-char fallback (freq 1). Common-knowledge vocabulary.
@@ -281,11 +283,9 @@ def _default_udfs():
 
 def tokenize_dict(col) -> Column:
     """array<string> of dictionary-mode tokens (default wordlist)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return _default_udfs()[0](c)
+    return _default_udfs()[0](col_of(col))
 
 
 def tokenize_dict_pos(col) -> Column:
     """array<struct<token,pos>> with rune offsets (default wordlist)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return _default_udfs()[1](c)
+    return _default_udfs()[1](col_of(col))

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from matrixone_spark.functions import col_of
+
 _MODES = {
     "aes-128-ecb": (16, False),
     "aes-256-cbc": (32, True),
@@ -43,8 +45,7 @@ def fold_key(key: "str | bytes", key_len: int) -> bytes:
 
 
 def _as_bin(x) -> Column:
-    col = F.col(x) if isinstance(x, str) else x
-    return col.cast("binary")
+    return col_of(x).cast("binary")
 
 
 def aes_encrypt(

@@ -18,23 +18,21 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def _c(x) -> Column:
-    return F.col(x) if isinstance(x, str) else x
+from matrixone_spark.functions import col_of
 
 
 def st_point(x, y) -> Column:
     """ST_POINT(x, y) → WKT string (reference st_point, pkg/geo/)."""
-    return F.concat(F.lit("POINT("), _c(x).cast("string"), F.lit(" "), _c(y).cast("string"), F.lit(")"))
+    return F.concat(F.lit("POINT("), col_of(x).cast("string"), F.lit(" "), col_of(y).cast("string"), F.lit(")"))
 
 
 def st_x(p) -> Column:
     """ST_X('POINT(x y)')."""
-    return F.regexp_extract(_c(p), r"POINT\(([-0-9.eE]+) ([-0-9.eE]+)\)", 1).cast("double")
+    return F.regexp_extract(col_of(p), r"POINT\(([-0-9.eE]+) ([-0-9.eE]+)\)", 1).cast("double")
 
 
 def st_y(p) -> Column:
-    return F.regexp_extract(_c(p), r"POINT\(([-0-9.eE]+) ([-0-9.eE]+)\)", 2).cast("double")
+    return F.regexp_extract(col_of(p), r"POINT\(([-0-9.eE]+) ([-0-9.eE]+)\)", 2).cast("double")
 
 
 def st_distance(a, b) -> Column:
@@ -54,7 +52,7 @@ def st_dwithin(a, b, d: float) -> Column:
 def mbr_contains(xmin, ymin, xmax, ymax, p) -> Column:
     """MBR containment (reference mbr* family): point inside bbox."""
     px, py = st_x(p), st_y(p)
-    return (px >= _c(xmin)) & (px <= _c(xmax)) & (py >= _c(ymin)) & (py <= _c(ymax))
+    return (px >= col_of(xmin)) & (px <= col_of(xmax)) & (py >= col_of(ymin)) & (py <= col_of(ymax))
 
 
 # ---------------------------------------------------------------------------
@@ -82,7 +80,7 @@ def st_geomfromtext(wkt) -> Column:
     POLYGON keeps the exterior ring (closed: first point repeated last,
     as WKT writes it). Unknown/malformed text → gtype NULL, empty pts.
     """
-    w = F.trim(_c(wkt))
+    w = F.trim(col_of(wkt))
     gtype = F.upper(F.regexp_extract(w, r"^\s*([A-Za-z]+)", 1))
     gtype = F.when(gtype.isin("POINT", "LINESTRING", "POLYGON"), gtype)
     body = (
@@ -102,7 +100,7 @@ def st_geomfromtext(wkt) -> Column:
 
 def st_astext(g) -> Column:
     """Render struct(gtype, pts) back to WKT."""
-    g = _c(g)
+    g = col_of(g)
     coords = F.array_join(
         F.transform(
             g.pts, lambda p: F.concat(p.x.cast("string"), F.lit(" "), p.y.cast("string"))
@@ -117,16 +115,16 @@ def st_astext(g) -> Column:
 
 
 def st_geometrytype(g) -> Column:
-    return _c(g).gtype
+    return col_of(g).gtype
 
 
 def st_numpoints(g) -> Column:
-    return F.size(_c(g).pts)
+    return F.size(col_of(g).pts)
 
 
 def st_pointn(g, n) -> Column:
     """N-th point (1-based) as WKT POINT (NULL out of range)."""
-    p = F.element_at(_c(g).pts, n if not isinstance(n, int) else F.lit(n))
+    p = F.element_at(col_of(g).pts, n if not isinstance(n, int) else F.lit(n))
     return F.when(p.isNotNull(), F.concat(
         F.lit("POINT("), p.x.cast("string"), F.lit(" "), p.y.cast("string"), F.lit(")")))
 
@@ -136,11 +134,11 @@ def st_startpoint(g) -> Column:
 
 
 def st_endpoint(g) -> Column:
-    return st_pointn(g, F.size(_c(g).pts))
+    return st_pointn(g, F.size(col_of(g).pts))
 
 
 def st_isclosed(g) -> Column:
-    g = _c(g)
+    g = col_of(g)
     first, last = F.element_at(g.pts, 1), F.element_at(g.pts, F.size(g.pts))
     return (first.x == last.x) & (first.y == last.y)
 
@@ -161,7 +159,7 @@ def _segments(g: Column) -> Column:
 def st_length(g) -> Column:
     """LINESTRING length: index-ordered fold of segment lengths (bit-exact
     vs an explicit per-segment sum in the oracle — left fold from 0.0)."""
-    segs = _segments(_c(g))
+    segs = _segments(col_of(g))
     return F.aggregate(
         segs,
         F.lit(0.0),
@@ -181,12 +179,12 @@ def _shoelace(g: Column) -> Column:
 
 def st_area(g) -> Column:
     """POLYGON area via the shoelace formula (outer ring)."""
-    return F.abs(_shoelace(_c(g))) / 2.0
+    return F.abs(_shoelace(col_of(g))) / 2.0
 
 
 def st_centroid(g) -> Column:
     """POLYGON centroid (standard shoelace centroid) as WKT POINT."""
-    g = _c(g)
+    g = col_of(g)
     cross = _shoelace(g)
     cx = F.aggregate(
         _segments(g), F.lit(0.0),
@@ -201,7 +199,7 @@ def st_centroid(g) -> Column:
 
 def st_envelope_bounds(g) -> Column:
     """Envelope as struct(xmin, ymin, xmax, ymax) — the oracle-friendly form."""
-    pts = _c(g).pts
+    pts = col_of(g).pts
     return F.struct(
         F.array_min(F.transform(pts, lambda p: p.x)).alias("xmin"),
         F.array_min(F.transform(pts, lambda p: p.y)).alias("ymin"),
@@ -212,8 +210,8 @@ def st_envelope_bounds(g) -> Column:
 
 def st_makeenvelope(xmin, ymin, xmax, ymax) -> Column:
     """Axis-aligned rectangle POLYGON WKT (reference st_makeenvelope)."""
-    x0, y0, x1, y1 = (_c(xmin).cast("string"), _c(ymin).cast("string"),
-                      _c(xmax).cast("string"), _c(ymax).cast("string"))
+    x0, y0, x1, y1 = (col_of(xmin).cast("string"), col_of(ymin).cast("string"),
+                      col_of(xmax).cast("string"), col_of(ymax).cast("string"))
     sp, cm = F.lit(" "), F.lit(", ")
     return F.concat(
         F.lit("POLYGON(("),
@@ -229,9 +227,9 @@ def st_contains_point(poly, px, py) -> Column:
     are implementation-defined, as in MySQL's planar st_contains on the
     boundary) — callers gating results pick probe points off the boundary.
     """
-    px, py = _c(px), _c(py)
+    px, py = col_of(px), col_of(py)
     crossings = F.aggregate(
-        _segments(_c(poly)),
+        _segments(col_of(poly)),
         F.lit(0),
         lambda acc, s: acc
         + F.when(
@@ -293,7 +291,7 @@ def st_intersects(a, b) -> Column:
     POLYGON×POLYGON and POINT×POLYGON (reference pkg/geo/ predicates;
     boundary-exact point cases follow ray-cast parity, see
     st_contains_point)."""
-    a, b = _c(a), _c(b)
+    a, b = col_of(a), col_of(b)
     pa, pb = F.element_at(a.pts, 1), F.element_at(b.pts, 1)
     point_cases = (
         F.when(
@@ -316,7 +314,7 @@ def st_contains(a, b) -> Column:
     a (ray cast) and no edge contact. Boundary-touching is excluded (strict
     interior), the deterministic planar convention — probe geometries off
     the boundary for exact gating."""
-    a, b = _c(a), _c(b)
+    a, b = col_of(a), col_of(b)
     all_in = F.forall(b.pts, lambda p: st_contains_point(a, p.x, p.y))
     no_edge = F.when(b.gtype == "POINT", F.lit(True)).otherwise(~_edges_intersect(a, b))
     return all_in & no_edge
@@ -356,7 +354,7 @@ def st_distance_sphere(p1, p2) -> Column:
 
 def st_swapxy(g) -> Column:
     """Swap x/y of every coordinate (reference st_swapxy)."""
-    g = _c(g)
+    g = col_of(g)
     return F.struct(
         g.gtype.alias("gtype"),
         F.transform(g.pts, lambda p: F.struct(p.y.alias("x"), p.x.alias("y"))).alias("pts"),
@@ -369,13 +367,9 @@ def st_swapxy(g) -> Column:
 # the pruning predicates a spatial index pushes into the scan at scale. ---
 
 
-def _b(box) -> Column:
-    return F.col(box) if isinstance(box, str) else box
-
-
 def mbr_within(a, b) -> Column:
     """a's box fully inside b's box (closed boundaries, as MySQL MBR ops)."""
-    a, b = _b(a), _b(b)
+    a, b = col_of(a), col_of(b)
     return (
         (a.xmin >= b.xmin) & (a.xmax <= b.xmax) & (a.ymin >= b.ymin) & (a.ymax <= b.ymax)
     )
@@ -386,7 +380,7 @@ def mbr_contains_box(a, b) -> Column:
 
 
 def mbr_disjoint(a, b) -> Column:
-    a, b = _b(a), _b(b)
+    a, b = col_of(a), col_of(b)
     return (a.xmax < b.xmin) | (b.xmax < a.xmin) | (a.ymax < b.ymin) | (b.ymax < a.ymin)
 
 
@@ -395,7 +389,7 @@ def mbr_intersects(a, b) -> Column:
 
 
 def mbr_equals(a, b) -> Column:
-    a, b = _b(a), _b(b)
+    a, b = col_of(a), col_of(b)
     return (
         (a.xmin == b.xmin) & (a.xmax == b.xmax) & (a.ymin == b.ymin) & (a.ymax == b.ymax)
     )
@@ -404,7 +398,7 @@ def mbr_equals(a, b) -> Column:
 def mbr_touches(a, b) -> Column:
     """Boundaries meet but interiors don't: intersecting with zero-width
     overlap in at least one axis."""
-    a, b = _b(a), _b(b)
+    a, b = col_of(a), col_of(b)
     x_olap = F.least(a.xmax, b.xmax) - F.greatest(a.xmin, b.xmin)
     y_olap = F.least(a.ymax, b.ymax) - F.greatest(a.ymin, b.ymin)
     return mbr_intersects(a, b) & ((x_olap == 0) | (y_olap == 0))
@@ -412,7 +406,7 @@ def mbr_touches(a, b) -> Column:
 
 def mbr_overlaps(a, b) -> Column:
     """Interiors strictly overlap but neither box contains the other."""
-    a, b = _b(a), _b(b)
+    a, b = col_of(a), col_of(b)
     x_olap = F.least(a.xmax, b.xmax) - F.greatest(a.xmin, b.xmin)
     y_olap = F.least(a.ymax, b.ymax) - F.greatest(a.ymin, b.ymin)
     return (x_olap > 0) & (y_olap > 0) & ~mbr_within(a, b) & ~mbr_within(b, a)
@@ -497,7 +491,7 @@ def st_geohash(lon, lat, precision: int = 9) -> Column:
             dtype="object",
         )
 
-    return enc(_c(lon), _c(lat))
+    return enc(col_of(lon), col_of(lat))
 
 
 def st_longfromgeohash(gh) -> Column:
@@ -511,7 +505,7 @@ def st_longfromgeohash(gh) -> Column:
             dtype="float64",
         )
 
-    return dec(_c(gh))
+    return dec(col_of(gh))
 
 
 def st_latfromgeohash(gh) -> Column:
@@ -525,7 +519,7 @@ def st_latfromgeohash(gh) -> Column:
             dtype="float64",
         )
 
-    return dec(_c(gh))
+    return dec(col_of(gh))
 
 
 def st_pointfromgeohash(gh) -> Column:
@@ -554,7 +548,7 @@ def mbr_coveredby(a, b) -> Column:
 def mbr_overlaps(a, b) -> Column:
     """MBROverlaps: boxes intersect with positive area but neither contains
     the other (MySQL MBROverlaps: same dimension, partial overlap)."""
-    a, b = _b(a), _b(b)
+    a, b = col_of(a), col_of(b)
     x_olap = F.least(a.xmax, b.xmax) - F.greatest(a.xmin, b.xmin)
     y_olap = F.least(a.ymax, b.ymax) - F.greatest(a.ymin, b.ymin)
     return (
@@ -670,7 +664,7 @@ def _wkb_to_wkt(col) -> Column:
     def dec(ss):
         return ss.map(lambda b: _wkb_to_wkt_py(bytes(b) if b is not None else None))
 
-    return dec(_c(col))
+    return dec(col_of(col))
 
 
 def st_geomfromwkb(b) -> Column:
@@ -727,22 +721,22 @@ st_aswkt = st_astext
 
 def st_longitude(g) -> Column:
     """Longitude (x) of a POINT geometry (func_s2h3.go point accessors)."""
-    g = _c(g)
+    g = col_of(g)
     return F.when(g.gtype == "POINT", F.element_at(g.pts, 1).x)
 
 
 def st_latitude(g) -> Column:
-    g = _c(g)
+    g = col_of(g)
     return F.when(g.gtype == "POINT", F.element_at(g.pts, 1).y)
 
 
 def st_isempty(g) -> Column:
-    g = _c(g)
+    g = col_of(g)
     return F.when(g.gtype.isNotNull(), F.size(g.pts) == 0)
 
 
 def st_dimension(g) -> Column:
-    g = _c(g)
+    g = col_of(g)
     return (
         F.when(g.gtype == "POINT", F.lit(0))
         .when(g.gtype == "LINESTRING", F.lit(1))
@@ -752,13 +746,13 @@ def st_dimension(g) -> Column:
 
 def st_numgeometries(g) -> Column:
     """Non-collection geometries count 1 (collections out of repr scope)."""
-    g = _c(g)
+    g = col_of(g)
     return F.when(g.gtype.isNotNull(), F.lit(1))
 
 
 def st_numinteriorrings(g) -> Column:
     """Outer-ring-only representation ⇒ polygons report 0 interior rings."""
-    g = _c(g)
+    g = col_of(g)
     return F.when(g.gtype == "POLYGON", F.lit(0))
 
 
@@ -768,14 +762,14 @@ st_numinteriorring = st_numinteriorrings
 def st_srid(g) -> Column:
     """MySQL default SRID 0 (the repr carries no CRS; reference stores 4326
     only via typed columns)."""
-    g = _c(g)
+    g = col_of(g)
     return F.when(g.gtype.isNotNull(), F.lit(0))
 
 
 def st_equals(a, b) -> Column:
     """Point-set equality within this repr: same type and same vertex walk
     (forward, reversed, or — for closed rings — rotated)."""
-    a, b = _c(a), _c(b)
+    a, b = col_of(a), col_of(b)
     fwd = a.pts == b.pts
     rev = a.pts == F.reverse(b.pts)
     # closed-ring rotation: same cycle ⇒ same vertex multiset once the

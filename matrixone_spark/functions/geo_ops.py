@@ -30,11 +30,8 @@ from pyspark.sql.types import (
     BinaryType, BooleanType, DoubleType, IntegerType, StringType,
 )
 
+from matrixone_spark.functions import col_of
 from matrixone_spark.functions import geomlib as GL
-
-
-def _c(x) -> Column:
-    return F.col(x) if isinstance(x, str) else x
 
 
 def _parse(text):
@@ -151,7 +148,7 @@ def st_geomfromtext(wkt, srid=None) -> Column:
             except Exception:
                 out.append(None)
         return pd.Series(out, dtype="object")
-    return u(_c(wkt), _lit(srid if srid is not None else 0, "int"))
+    return u(col_of(wkt), _lit(srid if srid is not None else 0, "int"))
 
 
 st_geometryfromtext = st_geomfromtext
@@ -169,7 +166,7 @@ def _typed_from_text(expect):
                 except Exception:
                     out.append(None)
             return pd.Series(out, dtype="object")
-        return u(_c(wkt))
+        return u(col_of(wkt))
     return ctor
 
 
@@ -182,7 +179,7 @@ st_geomcollfromtext = st_geomcollfromtxt = st_geometrycollectionfromtext = (
 
 def st_astext(g) -> Column:
     """Canonical WKT (SRID prefix stripped) — reference ST_AsText/ST_AsWKT."""
-    return _u1_geom(lambda x: x, preserve_srid=False)(_c(g))
+    return _u1_geom(lambda x: x, preserve_srid=False)(col_of(g))
 
 
 st_aswkt = st_astext
@@ -200,7 +197,7 @@ def st_srid(g) -> Column:
             except Exception:
                 out.append(None)
         return pd.Series(out, dtype="Int32")
-    return u(_c(g))
+    return u(col_of(g))
 
 
 def st_aswkb(g) -> Column:
@@ -215,7 +212,7 @@ def st_aswkb(g) -> Column:
             except Exception:
                 out.append(None)
         return pd.Series(out, dtype="object")
-    return u(_c(g))
+    return u(col_of(g))
 
 
 st_asbinary = st_aswkb
@@ -231,7 +228,7 @@ def st_geomfromwkb(b) -> Column:
             except Exception:
                 out.append(None)
         return pd.Series(out, dtype="object")
-    return u(_c(b))
+    return u(col_of(b))
 
 
 st_geomfrombinary = st_geometryfromwkb = st_geomfromwkb
@@ -249,7 +246,7 @@ def _typed_from_wkb(expect):
                 except Exception:
                     out.append(None)
             return pd.Series(out, dtype="object")
-        return u(_c(b))
+        return u(col_of(b))
     return ctor
 
 
@@ -276,7 +273,7 @@ def st_asgeojson(g, maxdecimaldigits=None) -> Column:
             except Exception:
                 out.append(None)
         return pd.Series(out, dtype="object")
-    return u(_c(g), _lit(maxdecimaldigits if maxdecimaldigits is not None else -1, "int"))
+    return u(col_of(g), _lit(maxdecimaldigits if maxdecimaldigits is not None else -1, "int"))
 
 
 def st_geomfromgeojson(j, srid=None) -> Column:
@@ -292,7 +289,7 @@ def st_geomfromgeojson(j, srid=None) -> Column:
             except Exception:
                 out.append(None)
         return pd.Series(out, dtype="object")
-    return u(_c(j), _lit(srid if srid is not None else 4326, "int"))
+    return u(col_of(j), _lit(srid if srid is not None else 4326, "int"))
 
 
 def st_point32(x, y) -> Column:
@@ -311,68 +308,68 @@ def st_point32(x, y) -> Column:
                 fy = float(np.float32(yv))
                 out.append(f"POINT({GL.fmt_num(fx)} {GL.fmt_num(fy)})")
         return pd.Series(out, dtype="object")
-    return u(_c(x).cast("double"), _c(y).cast("double"))
+    return u(col_of(x).cast("double"), col_of(y).cast("double"))
 
 
 # ---------------------------------------------------------------------------
 # Accessors / measures
 # ---------------------------------------------------------------------------
 
-st_geometrytype = lambda g: _u1(lambda x: x[0], StringType(), "object")(_c(g))
-st_dimension = lambda g: _u1(GL.dimension, IntegerType(), "Int32")(_c(g))
-st_isempty = lambda g: _u1(GL.is_empty, BooleanType(), "object")(_c(g))
-st_iscollection = lambda g: _u1(GL.is_collection, BooleanType(), "object")(_c(g))
-st_numgeometries = lambda g: _u1(GL.num_geometries, IntegerType(), "Int32")(_c(g))
-st_numinteriorrings = lambda g: _u1(GL.num_interior_rings, IntegerType(), "Int32")(_c(g))
+st_geometrytype = lambda g: _u1(lambda x: x[0], StringType(), "object")(col_of(g))
+st_dimension = lambda g: _u1(GL.dimension, IntegerType(), "Int32")(col_of(g))
+st_isempty = lambda g: _u1(GL.is_empty, BooleanType(), "object")(col_of(g))
+st_iscollection = lambda g: _u1(GL.is_collection, BooleanType(), "object")(col_of(g))
+st_numgeometries = lambda g: _u1(GL.num_geometries, IntegerType(), "Int32")(col_of(g))
+st_numinteriorrings = lambda g: _u1(GL.num_interior_rings, IntegerType(), "Int32")(col_of(g))
 st_numinteriorring = st_numinteriorrings
-st_area = lambda g: _u1(GL.area, DoubleType(), "float64")(_c(g))
-st_length = lambda g: _u1(GL.length, DoubleType(), "float64")(_c(g))
-st_centroid = lambda g: _u1_geom(GL.centroid)(_c(g))
-st_envelope = lambda g: _u1_geom(GL.envelope)(_c(g))
-st_boundary = lambda g: _u1_geom(GL.boundary)(_c(g))
-st_pointonsurface = lambda g: _u1_geom(GL.point_on_surface)(_c(g))
-st_exteriorring = lambda g: _u1_geom(GL.exterior_ring)(_c(g))
-st_convexhull = lambda g: _u1_geom(GL.convex_hull)(_c(g))
-st_issimple = lambda g: _u1(GL.is_simple, BooleanType(), "object")(_c(g))
-st_isring = lambda g: _u1(GL.is_ring, BooleanType(), "object")(_c(g))
-st_isvalid = lambda g: _u1(GL.is_valid, BooleanType(), "object")(_c(g))
-st_validate = lambda g: _u1_geom(GL.validate)(_c(g))
+st_area = lambda g: _u1(GL.area, DoubleType(), "float64")(col_of(g))
+st_length = lambda g: _u1(GL.length, DoubleType(), "float64")(col_of(g))
+st_centroid = lambda g: _u1_geom(GL.centroid)(col_of(g))
+st_envelope = lambda g: _u1_geom(GL.envelope)(col_of(g))
+st_boundary = lambda g: _u1_geom(GL.boundary)(col_of(g))
+st_pointonsurface = lambda g: _u1_geom(GL.point_on_surface)(col_of(g))
+st_exteriorring = lambda g: _u1_geom(GL.exterior_ring)(col_of(g))
+st_convexhull = lambda g: _u1_geom(GL.convex_hull)(col_of(g))
+st_issimple = lambda g: _u1(GL.is_simple, BooleanType(), "object")(col_of(g))
+st_isring = lambda g: _u1(GL.is_ring, BooleanType(), "object")(col_of(g))
+st_isvalid = lambda g: _u1(GL.is_valid, BooleanType(), "object")(col_of(g))
+st_validate = lambda g: _u1_geom(GL.validate)(col_of(g))
 
 
 def st_geometryn(g, n) -> Column:
-    return _u1n_geom(lambda x, k: GL.geometry_n(x, int(k)))(_c(g), _lit(n, "int"))
+    return _u1n_geom(lambda x, k: GL.geometry_n(x, int(k)))(col_of(g), _lit(n, "int"))
 
 
 def st_interiorringn(g, n) -> Column:
-    return _u1n_geom(lambda x, k: GL.interior_ring_n(x, int(k)))(_c(g), _lit(n, "int"))
+    return _u1n_geom(lambda x, k: GL.interior_ring_n(x, int(k)))(col_of(g), _lit(n, "int"))
 
 
 def st_simplify(g, tol) -> Column:
-    return _u1n_geom(lambda x, t: GL.simplify(x, float(t)))(_c(g), _lit(tol))
+    return _u1n_geom(lambda x, t: GL.simplify(x, float(t)))(col_of(g), _lit(tol))
 
 
 # ---------------------------------------------------------------------------
 # Binary predicates / measures / overlay
 # ---------------------------------------------------------------------------
 
-st_distance = lambda a, b: _u2(GL.distance, DoubleType(), "float64")(_c(a), _c(b))
-st_intersects = lambda a, b: _u2(GL.intersects, BooleanType(), "object")(_c(a), _c(b))
-st_disjoint = lambda a, b: _u2(GL.disjoint, BooleanType(), "object")(_c(a), _c(b))
-st_contains = lambda a, b: _u2(GL.contains, BooleanType(), "object")(_c(a), _c(b))
-st_within = lambda a, b: _u2(GL.within, BooleanType(), "object")(_c(a), _c(b))
-st_covers = lambda a, b: _u2(GL.covers, BooleanType(), "object")(_c(a), _c(b))
-st_coveredby = lambda a, b: _u2(GL.coveredby, BooleanType(), "object")(_c(a), _c(b))
-st_touches = lambda a, b: _u2(GL.touches, BooleanType(), "object")(_c(a), _c(b))
-st_crosses = lambda a, b: _u2(GL.crosses, BooleanType(), "object")(_c(a), _c(b))
-st_overlaps = lambda a, b: _u2(GL.overlaps, BooleanType(), "object")(_c(a), _c(b))
-st_equals = lambda a, b: _u2(GL.equals, BooleanType(), "object")(_c(a), _c(b))
-st_hausdorffdistance = lambda a, b: _u2(GL.hausdorff, DoubleType(), "float64")(_c(a), _c(b))
-st_frechetdistance = lambda a, b: _u2(GL.frechet, DoubleType(), "float64")(_c(a), _c(b))
-st_union = lambda a, b: _u2_geom(lambda x, y: GL.overlay(x, y, "union"))(_c(a), _c(b))
-st_intersection = lambda a, b: _u2_geom(lambda x, y: GL.overlay(x, y, "intersection"))(_c(a), _c(b))
-st_difference = lambda a, b: _u2_geom(lambda x, y: GL.overlay(x, y, "difference"))(_c(a), _c(b))
-st_symdifference = lambda a, b: _u2_geom(lambda x, y: GL.overlay(x, y, "symdifference"))(_c(a), _c(b))
-st_collect = lambda a, b: _u2_geom(GL.collect)(_c(a), _c(b))
+st_distance = lambda a, b: _u2(GL.distance, DoubleType(), "float64")(col_of(a), col_of(b))
+st_intersects = lambda a, b: _u2(GL.intersects, BooleanType(), "object")(col_of(a), col_of(b))
+st_disjoint = lambda a, b: _u2(GL.disjoint, BooleanType(), "object")(col_of(a), col_of(b))
+st_contains = lambda a, b: _u2(GL.contains, BooleanType(), "object")(col_of(a), col_of(b))
+st_within = lambda a, b: _u2(GL.within, BooleanType(), "object")(col_of(a), col_of(b))
+st_covers = lambda a, b: _u2(GL.covers, BooleanType(), "object")(col_of(a), col_of(b))
+st_coveredby = lambda a, b: _u2(GL.coveredby, BooleanType(), "object")(col_of(a), col_of(b))
+st_touches = lambda a, b: _u2(GL.touches, BooleanType(), "object")(col_of(a), col_of(b))
+st_crosses = lambda a, b: _u2(GL.crosses, BooleanType(), "object")(col_of(a), col_of(b))
+st_overlaps = lambda a, b: _u2(GL.overlaps, BooleanType(), "object")(col_of(a), col_of(b))
+st_equals = lambda a, b: _u2(GL.equals, BooleanType(), "object")(col_of(a), col_of(b))
+st_hausdorffdistance = lambda a, b: _u2(GL.hausdorff, DoubleType(), "float64")(col_of(a), col_of(b))
+st_frechetdistance = lambda a, b: _u2(GL.frechet, DoubleType(), "float64")(col_of(a), col_of(b))
+st_union = lambda a, b: _u2_geom(lambda x, y: GL.overlay(x, y, "union"))(col_of(a), col_of(b))
+st_intersection = lambda a, b: _u2_geom(lambda x, y: GL.overlay(x, y, "intersection"))(col_of(a), col_of(b))
+st_difference = lambda a, b: _u2_geom(lambda x, y: GL.overlay(x, y, "difference"))(col_of(a), col_of(b))
+st_symdifference = lambda a, b: _u2_geom(lambda x, y: GL.overlay(x, y, "symdifference"))(col_of(a), col_of(b))
+st_collect = lambda a, b: _u2_geom(GL.collect)(col_of(a), col_of(b))
 
 
 def st_buffer(g, dist, quad_segs=8) -> Column:
@@ -388,22 +385,22 @@ def st_buffer(g, dist, quad_segs=8) -> Column:
             except Exception:
                 out.append(None)
         return pd.Series(out, dtype="object")
-    return u(_c(g), _lit(dist), _lit(quad_segs, "int"))
+    return u(col_of(g), _lit(dist), _lit(quad_segs, "int"))
 
 
 def st_lineinterpolatepoint(g, fraction) -> Column:
     return _u1n_geom(lambda x, f: GL.line_interpolate_point(x, float(f)))(
-        _c(g), _lit(fraction))
+        col_of(g), _lit(fraction))
 
 
 def st_lineinterpolatepoints(g, fraction) -> Column:
     return _u1n_geom(lambda x, f: GL.line_interpolate_points(x, float(f)))(
-        _c(g), _lit(fraction))
+        col_of(g), _lit(fraction))
 
 
 def st_pointatdistance(g, dist) -> Column:
     return _u1n_geom(lambda x, d: GL.point_at_distance(x, float(d)))(
-        _c(g), _lit(dist))
+        col_of(g), _lit(dist))
 
 
 # ---------------------------------------------------------------------------
@@ -517,7 +514,7 @@ def geo_eval(op, a, b=None, num=None) -> Column:
                 out.append(None)
         return pd.Series(out, dtype="object")
     return u(
-        _c(op), _c(a),
-        _c(b) if b is not None else F.lit(None).cast("string"),
-        _c(num) if num is not None else F.lit(None).cast("double"),
+        col_of(op), col_of(a),
+        col_of(b) if b is not None else F.lit(None).cast("string"),
+        col_of(num) if num is not None else F.lit(None).cast("double"),
     )

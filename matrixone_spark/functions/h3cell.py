@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     StringType,
 )
 
+from matrixone_spark.functions import col_of
+
 # ---------------------------------------------------------------------------
 # Published constants (Uber H3, Apache-2.0)
 # ---------------------------------------------------------------------------
@@ -1087,10 +1089,6 @@ def are_neighbor_cells(a, b):
 _DEC20 = DecimalType(20, 0)
 
 
-def _c(x):
-    return x if isinstance(x, Column) else F.col(x)
-
-
 def h3_h3index(lon, lat, res=15) -> Column:
     """POINT(lon lat) -> H3Index at resolution `res` (default 15, the finest
     — func_s2h3.go:52 h3DefaultResolution)."""
@@ -1107,7 +1105,7 @@ def h3_h3index(lon, lat, res=15) -> Column:
                 out.append(decimal.Decimal(latlng_to_cell(float(la), float(lo), res)))
         return pd.Series(out, dtype=object)
 
-    return udf(_c(lon), _c(lat))
+    return udf(col_of(lon), col_of(lat))
 
 
 def _id_udf(fn, rtype):
@@ -1129,13 +1127,13 @@ def h3_h3index_resolution(cid) -> Column:
         _require_valid(c)
         return get_resolution(c)
 
-    return _id_udf(fn, IntegerType())(_c(cid))
+    return _id_udf(fn, IntegerType())(col_of(cid))
 
 
 def h3_h3index_parent(cid, res=None) -> Column:
     import decimal
 
-    return _id_udf(lambda c: decimal.Decimal(cell_to_parent(c, res)), _DEC20)(_c(cid))
+    return _id_udf(lambda c: decimal.Decimal(cell_to_parent(c, res)), _DEC20)(col_of(cid))
 
 
 def h3_h3index_center_wkt(cid) -> Column:
@@ -1143,7 +1141,7 @@ def h3_h3index_center_wkt(cid) -> Column:
         lat, lng = cell_to_latlng(c)
         return f"POINT({lng!r} {lat!r})".replace("'", "")
 
-    return _id_udf(fn, StringType())(_c(cid))
+    return _id_udf(fn, StringType())(col_of(cid))
 
 
 def h3_h3index_boundary_wkt(cid) -> Column:
@@ -1152,11 +1150,11 @@ def h3_h3index_boundary_wkt(cid) -> Column:
         inner = ",".join(f"{lng!r} {lat!r}" for lat, lng in pts)
         return f"MULTIPOINT({inner})"
 
-    return _id_udf(fn, StringType())(_c(cid))
+    return _id_udf(fn, StringType())(col_of(cid))
 
 
 def h3_h3index_neighbors(cid) -> Column:
-    return _id_udf(lambda c: json.dumps(grid_neighbors(c)), StringType())(_c(cid))
+    return _id_udf(lambda c: json.dumps(grid_neighbors(c)), StringType())(col_of(cid))
 
 
 def h3_h3index_areneighbors(a, b) -> Column:
@@ -1170,7 +1168,7 @@ def h3_h3index_areneighbors(a, b) -> Column:
                 out.append(are_neighbor_cells(int(x), int(y)))
         return pd.Series(out, dtype=object)
 
-    return udf(_c(a), _c(b))
+    return udf(col_of(a), col_of(b))
 
 
 # The reference registers both spellings (function_id.go) plus the bare names;

@@ -19,6 +19,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, StringType
 
+from matrixone_spark.functions import col_of
+
 
 def _dumps(obj) -> str:
     return json.dumps(obj, separators=(",", ":"), ensure_ascii=False)
@@ -159,16 +161,12 @@ def json_merge_patch(a, b) -> Column:
 # json_quote/json_unquote, json_contains; function_id.go:870-1131) ---
 
 
-def _c(x) -> Column:
-    return F.col(x) if isinstance(x, str) else x
-
-
 def json_type(j) -> Column:
     """MySQL JSON_TYPE over JSON text: OBJECT/ARRAY/STRING/BOOLEAN/NULL/
     INTEGER/DOUBLE — a pure first-token classifier, no parse needed (the
     reference tags the type in the bytejson header byte; text sniffing is
     the equivalent over serialized JSON)."""
-    j = _c(j)
+    j = col_of(j)
     t = F.trim(j)
     c = F.substring(t, 1, 1)
     return (
@@ -187,7 +185,7 @@ def json_quote(s) -> Column:
     """MySQL JSON_QUOTE: wrap a string as a JSON string literal (escaping
     backslash and double-quote; control-char escaping follows the same
     replace chain when needed)."""
-    s = _c(s)
+    s = col_of(s)
     esc = F.regexp_replace(F.regexp_replace(s, r"\\", r"\\\\"), '"', r'\\"')
     return F.concat(F.lit('"'), esc, F.lit('"'))
 
@@ -195,7 +193,7 @@ def json_quote(s) -> Column:
 def json_unquote(j) -> Column:
     """MySQL JSON_UNQUOTE: '$' extraction unquotes string scalars and
     passes other JSON through as text (get_json_object semantics match)."""
-    return F.get_json_object(_c(j), "$")
+    return F.get_json_object(col_of(j), "$")
 
 
 def _mysql_json_contains(target, candidate) -> bool:
@@ -243,14 +241,14 @@ def _json_contains_udf(targets: pd.Series, candidates: pd.Series) -> pd.Series:
 def json_contains(target, candidate) -> Column:
     """MySQL JSON_CONTAINS(target, candidate) — Arrow-batched UDF (the
     recursive containment walk has no Column-expression form)."""
-    return _json_contains_udf(_c(target), _c(candidate))
+    return _json_contains_udf(col_of(target), col_of(candidate))
 
 
 def json_objectagg_sorted(key, value) -> Column:
     """JSON_OBJECTAGG rendered with sorted keys: deterministic under
     parallel aggregation (MySQL emits insertion order, which is not
     reproducible distributed — sorted keys is the batch-stable contract)."""
-    entry = F.concat(F.lit('"'), _c(key), F.lit('":'), _c(value).cast("string"))
+    entry = F.concat(F.lit('"'), col_of(key), F.lit('":'), col_of(value).cast("string"))
     return F.concat(
         F.lit("{"), F.concat_ws(",", F.array_sort(F.collect_list(entry))), F.lit("}")
     )
@@ -311,7 +309,7 @@ def json_contains_path(doc, mode, paths) -> Column:
     """MySQL JSON_CONTAINS_PATH(doc, 'one'|'all', path...) —
     func_builtin_json.go registry. ``paths`` is a '|'-joined path list
     column (the variadic surface flattened for a single UDF signature)."""
-    return _json_contains_path_udf(_c(doc), _c(mode), _c(paths))
+    return _json_contains_path_udf(col_of(doc), col_of(mode), col_of(paths))
 
 
 def _scalar_overlap(a, b) -> bool:
@@ -345,7 +343,7 @@ def _json_overlaps_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 def json_overlaps(a, b) -> Column:
     """MySQL JSON_OVERLAPS: arrays overlap on any shared element, objects
     on any shared key/value pair, scalars on equality (numeric-coercing)."""
-    return _json_overlaps_udf(_c(a), _c(b))
+    return _json_overlaps_udf(col_of(a), col_of(b))
 
 
 @pandas_udf(StringType())
@@ -361,7 +359,7 @@ def _json_pretty_udf(docs: pd.Series) -> pd.Series:
 
 def json_pretty(doc) -> Column:
     """MySQL JSON_PRETTY: 2-space-indented canonical rendering."""
-    return _json_pretty_udf(_c(doc))
+    return _json_pretty_udf(col_of(doc))
 
 
 def _merge_preserve(x, y):
@@ -390,14 +388,14 @@ def _json_merge_preserve_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 
 def json_merge_preserve(a, b) -> Column:
     """MySQL JSON_MERGE_PRESERVE (the pre-8.0 JSON_MERGE semantics)."""
-    return _json_merge_preserve_udf(_c(a), _c(b))
+    return _json_merge_preserve_udf(col_of(a), col_of(b))
 
 
 def json_value(doc, path, cast_to: str = "string") -> Column:
     """MySQL 8 JSON_VALUE(doc, path RETURNING type): extract + unquote +
     cast — composes Spark's native get_json_object with a cast, all
     JVM-side (no UDF; this one IS hot-path shaped)."""
-    return F.get_json_object(_c(doc), path).cast(cast_to)
+    return F.get_json_object(col_of(doc), path).cast(cast_to)
 
 
 def json_extract_float64(doc, path) -> Column:
@@ -477,7 +475,7 @@ def json_search(doc, one_or_all: str, pattern, escape: str = "\\") -> Column:
     MySQL-compat surface beyond the reference registry (function_id.go:1082
     stops at json_extract/set/contains families); document-order DFS matches
     MySQL's path ordering."""
-    return _make_json_search_udf(one_or_all, escape)(_c(doc), _c(pattern))
+    return _make_json_search_udf(one_or_all, escape)(col_of(doc), col_of(pattern))
 
 
 # ---------------------------------------------------------------------------
@@ -527,13 +525,13 @@ def jq(doc, program) -> Column:
     ``select()``/``map()``, arithmetic, comparisons, ``if/then/else/end`` —
     see functions/jq_mini.py) against a JSON document; raises on invalid
     programs (func_builtin_jq.go:jq)."""
-    return _jq_udf(_c(doc), _c(program))
+    return _jq_udf(col_of(doc), col_of(program))
 
 
 def try_jq(doc, program) -> Column:
     """try_jq: like jq but returns NULL on evaluation errors
     (func_builtin_jq.go:try_jq)."""
-    return _try_jq_udf(_c(doc), _c(program))
+    return _try_jq_udf(col_of(doc), col_of(program))
 
 
 # --- MySQL JSON path evaluation (wildcards / ** / last / ranges) ------------
@@ -688,4 +686,4 @@ def mo_json_extract(doc, path) -> Column:
     ``**`` recursive descent, ``last``/ranges) — bytejson path semantics;
     the dialect routes wildcard paths here, plain paths stay on Spark's
     JVM-side get_json_object."""
-    return _mo_json_extract_udf(_c(doc), _c(path))
+    return _mo_json_extract_udf(col_of(doc), col_of(path))

@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, FloatType, StringType
 
+from matrixone_spark.functions import col_of
+
 EMBED_DIM = 16
 
 # transport: (endpoint, model, list[str]) -> list[list[float]] | list[str]
@@ -68,8 +70,7 @@ def llm_embedding(text, endpoint: str = "local", model: str = "fake-embed") -> C
         vals = fn(endpoint, model, [None if pd.isna(t) else t for t in texts])
         return pd.Series(vals)
 
-    c = F.col(text) if isinstance(text, str) else text
-    return udf(c)
+    return udf(col_of(text))
 
 
 def llm_chat(prompt, endpoint: str = "local", model: str = "fake-chat") -> Column:
@@ -80,5 +81,4 @@ def llm_chat(prompt, endpoint: str = "local", model: str = "fake-chat") -> Colum
     def udf(prompts: pd.Series) -> pd.Series:
         return pd.Series(fn(endpoint, model, [None if pd.isna(t) else t for t in prompts]))
 
-    c = F.col(prompt) if isinstance(prompt, str) else prompt
-    return udf(c)
+    return udf(col_of(prompt))

@@ -21,9 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType, StringType
 
-
-def _c(x) -> Column:
-    return F.col(x) if isinstance(x, str) else x
+from matrixone_spark.functions import col_of
 
 
 # ---------------------------------------------------------------- comparison
@@ -32,7 +30,7 @@ def _c(x) -> Column:
 def field(x, *options) -> Column:
     """FIELD(x, a, b, ...) → 1-based index of x in list, 0 if absent.
     Reference: function_id.go FIELD; func_builtin_string tests."""
-    x = _c(x)
+    x = col_of(x)
     expr = F.lit(0)
     for i in range(len(options) - 1, -1, -1):
         expr = F.when(x == F.lit(options[i]), F.lit(i + 1)).otherwise(expr)
@@ -41,7 +39,7 @@ def field(x, *options) -> Column:
 
 def strcmp(a, b) -> Column:
     """STRCMP(a,b) → -1/0/1. Reference: supportedStringBuiltIns list_builtIn.go:79."""
-    a, b = _c(a), _c(b)
+    a, b = col_of(a), col_of(b)
     return F.when(a < b, -1).when(a > b, 1).otherwise(0)
 
 
@@ -51,7 +49,7 @@ def strcmp(a, b) -> Column:
 def truncate_num(x, d: int) -> Column:
     """TRUNCATE(x, d): truncate toward zero at d decimals.
     Reference: func_unary.go truncate; MySQL semantics (not round)."""
-    x = _c(x)
+    x = col_of(x)
     scale = float(10**d)
     return (x * scale).cast("long").cast("double") / scale
 
@@ -130,12 +128,12 @@ def _conv_udf(n: pd.Series, fb: pd.Series, tb: pd.Series) -> pd.Series:
 
 def conv(x, from_base: int, to_base: int) -> Column:
     """CONV(n, f, t) with MySQL semantics. Reference: func_unary.go conv."""
-    return _conv_udf(_c(x).cast("string"), F.lit(from_base), F.lit(to_base))
+    return _conv_udf(col_of(x).cast("string"), F.lit(from_base), F.lit(to_base))
 
 
 def oct_(x) -> Column:
     """OCT(n) = CONV(n, 10, 8). Reference: function_id.go OCT."""
-    return F.conv(_c(x).cast("string"), 10, 8)
+    return F.conv(col_of(x).cast("string"), 10, 8)
 
 
 @pandas_udf(LongType())
@@ -146,7 +144,7 @@ def _crc32_udf(s: pd.Series) -> pd.Series:
 def crc32(x) -> Column:
     """CRC32(s). Reference: func_unary.go crc32. Arrow-batched pandas UDF
     (no Spark builtin); cheap enough off the hot path."""
-    return _crc32_udf(_c(x))
+    return _crc32_udf(col_of(x))
 
 
 # ---------------------------------------------------------------------- date
@@ -226,8 +224,8 @@ def get_format(type_, locale) -> Column:
     """GET_FORMAT(type, locale) → MySQL format string, NULL for unknown
     combinations (func_binary.go:5539 GetFormat). Pure expression: a chained
     CASE over the 20-entry lookup, so constant args fold at plan time."""
-    t = F.upper(_c(type_) if isinstance(type_, Column) else F.lit(type_))
-    loc = F.upper(_c(locale) if isinstance(locale, Column) else F.lit(locale))
+    t = F.upper(type_ if isinstance(type_, Column) else F.lit(type_))
+    loc = F.upper(locale if isinstance(locale, Column) else F.lit(locale))
     out = F.lit(None).cast("string")
     for (ty, lo), fmt in _GET_FORMAT.items():
         out = F.when((t == ty) & (loc == lo), F.lit(fmt)).otherwise(out)
@@ -237,7 +235,7 @@ def get_format(type_, locale) -> Column:
 def date_format_mysql(x, fmt: str) -> Column:
     """DATE_FORMAT(d, '%Y-%m-%d') with MySQL patterns.
     Reference: func_unary.go date_format, generalTime.go."""
-    return F.date_format(_c(x), mysql_format_to_java(fmt))
+    return F.date_format(col_of(x), mysql_format_to_java(fmt))
 
 
 # MySQL %-tokens that consume DATE vs TIME fields — STR_TO_DATE's result
@@ -251,7 +249,7 @@ STR_TO_DATE_TIME_TOKS = ("%H", "%k", "%h", "%I", "%i", "%s", "%S", "%f",
 
 def str_to_date(x, fmt: str) -> Column:
     """STR_TO_DATE(s, fmt). Reference: func_str_to_date.go."""
-    return F.to_timestamp(_c(x), mysql_format_to_java(fmt, parsing=True))
+    return F.to_timestamp(col_of(x), mysql_format_to_java(fmt, parsing=True))
 
 
 # Days between year 0 ('0000-01-01') and epoch, per MySQL's proleptic calendar
@@ -261,26 +259,26 @@ _TO_DAYS_EPOCH_OFFSET = 719528
 
 def to_days(x) -> Column:
     """TO_DAYS(date). Reference: func_unary.go to_days (MySQL day-number)."""
-    return (F.datediff(_c(x), F.lit("1970-01-01")) + _TO_DAYS_EPOCH_OFFSET).cast("long")
+    return (F.datediff(col_of(x), F.lit("1970-01-01")) + _TO_DAYS_EPOCH_OFFSET).cast("long")
 
 
 def from_days(x) -> Column:
     """FROM_DAYS(n) — inverse of to_days. Reference: func_unary.go from_days."""
-    return F.date_add(F.lit("1970-01-01"), (_c(x) - _TO_DAYS_EPOCH_OFFSET).cast("int"))
+    return F.date_add(F.lit("1970-01-01"), (col_of(x) - _TO_DAYS_EPOCH_OFFSET).cast("int"))
 
 
 def period_add(p, n) -> Column:
     """PERIOD_ADD(yyyymm, n) → yyyymm shifted by n months.
     Reference: func_unary.go period_add."""
-    p = _c(p).cast("long")
-    nn = _c(n) if isinstance(n, Column) else F.lit(n)
+    p = col_of(p).cast("long")
+    nn = n if isinstance(n, Column) else F.lit(n)
     months = (p / 100).cast("long") * 12 + (p % 100) - 1 + nn
     return ((months / 12).cast("long") * 100 + months % 12 + 1).cast("long")
 
 
 def period_diff(p1, p2) -> Column:
     """PERIOD_DIFF(p1, p2) in months. Reference: func_unary.go period_diff."""
-    p1, p2 = _c(p1).cast("long"), _c(p2).cast("long")
+    p1, p2 = col_of(p1).cast("long"), col_of(p2).cast("long")
     m1 = (p1 / 100).cast("long") * 12 + (p1 % 100)
     m2 = (p2 / 100).cast("long") * 12 + (p2 % 100)
     return m1 - m2
@@ -289,7 +287,7 @@ def period_diff(p1, p2) -> Column:
 def sec_to_time(x) -> Column:
     """SEC_TO_TIME(n) → 'HH:MM:SS' string (MySQL TIME can exceed 24h).
     Reference: func_unary.go sec_to_time."""
-    s = _c(x).cast("long")
+    s = col_of(x).cast("long")
     out = F.concat_ws(
         ":",
         F.lpad((s / 3600).cast("long").cast("string"), 2, "0"),
@@ -304,7 +302,7 @@ def time_to_sec(x) -> Column:
     """TIME_TO_SEC('HH:MM:SS'). Reference: func_unary.go time_to_sec.
     The sign of a negative TIME ('-01:30:00' = -5400) applies to the WHOLE
     value, so compute on the absolute value and negate."""
-    s = _c(x)
+    s = col_of(x)
     neg = s.startswith("-")
     p = F.split(F.regexp_replace(s, "^-", ""), ":")
     total = (
@@ -320,7 +318,7 @@ def yearweek(x) -> Column:
     WeekYear borrow — a date before the year's first Sunday belongs to the
     last week of the PREVIOUS year (YEARWEEK('1987-01-01') = 198652).
     Reference: func_unary.go yearweek; date.go calcWeekFromCalendar."""
-    d = _c(x).cast("date")
+    d = col_of(x).cast("date")
 
     def wk0(e: Column) -> Column:
         jan1_dow = F.dayofweek(F.trunc(e, "YEAR"))  # Sunday = 1
@@ -343,13 +341,13 @@ def yearweek(x) -> Column:
 def insert_str(s, pos, length, repl) -> Column:
     """INSERT(str, pos, len, newstr) = MySQL string splice → overlay.
     Reference: list_builtIn.go insert."""
-    return F.overlay(_c(s), _c(repl) if isinstance(repl, Column) else F.lit(repl), pos, length)
+    return F.overlay(col_of(s), repl if isinstance(repl, Column) else F.lit(repl), pos, length)
 
 
 def export_set(bits, on: str, off: str, sep: str = ",", n_bits: int = 64) -> Column:
     """EXPORT_SET(bits, on, off, sep, n) — bit i set → on else off, joined.
     Reference: list_builtIn.go export_set. Pure array expression."""
-    b = _c(bits).cast("long")
+    b = col_of(bits).cast("long")
     items = F.array(
         *[
             F.when(b.bitwiseAND(F.lit(1 << i)) != 0, F.lit(on)).otherwise(F.lit(off))
@@ -362,7 +360,7 @@ def export_set(bits, on: str, off: str, sep: str = ",", n_bits: int = 64) -> Col
 def make_set(bits, *strings) -> Column:
     """MAKE_SET(bits, s1, s2, ...) — strings whose bit is set, comma-joined.
     Reference: list_builtIn.go make_set."""
-    b = _c(bits).cast("long")
+    b = col_of(bits).cast("long")
     parts = [
         F.when(b.bitwiseAND(F.lit(1 << i)) != 0, F.lit(s)).otherwise(F.lit(None))
         for i, s in enumerate(strings)
@@ -372,7 +370,7 @@ def make_set(bits, *strings) -> Column:
 
 def quote(s) -> Column:
     """QUOTE(s) → 'escaped'. Reference: list_builtIn.go quote."""
-    s = _c(s)
+    s = col_of(s)
     esc = F.regexp_replace(F.regexp_replace(s, r"\\", r"\\\\"), "'", r"\\'")
     return F.when(s.isNull(), F.lit("NULL")).otherwise(F.concat(F.lit("'"), esc, F.lit("'")))
 
@@ -383,7 +381,7 @@ def quote(s) -> Column:
 def inet_aton(ip) -> Column:
     """INET_ATON('a.b.c.d') → number. Reference: func_binary.go inet_aton.
     Pure expression (split + weighted sum)."""
-    p = F.split(_c(ip), r"\.")
+    p = F.split(col_of(ip), r"\.")
     return (
         p.getItem(0).cast("long") * 16777216
         + p.getItem(1).cast("long") * 65536
@@ -394,7 +392,7 @@ def inet_aton(ip) -> Column:
 
 def inet_ntoa(n) -> Column:
     """INET_NTOA(number) → 'a.b.c.d'. Reference: func_binary.go inet_ntoa."""
-    n = _c(n).cast("long")
+    n = col_of(n).cast("long")
     return F.concat_ws(
         ".",
         ((n / 16777216).cast("long") % 256).cast("string"),
@@ -407,7 +405,7 @@ def inet_ntoa(n) -> Column:
 def is_ipv4(s) -> Column:
     """IS_IPV4(s). Reference: func_binary.go is_ipv4."""
     octet = r"(25[0-5]|2[0-4][0-9]|1[0-9]{2}|[1-9]?[0-9])"
-    return _c(s).rlike(rf"^{octet}\.{octet}\.{octet}\.{octet}$").cast("int")
+    return col_of(s).rlike(rf"^{octet}\.{octet}\.{octet}\.{octet}$").cast("int")
 
 
 # ---------------------------------------------------------------------- uuid
@@ -415,12 +413,12 @@ def is_ipv4(s) -> Column:
 
 def uuid_to_bin(u) -> Column:
     """UUID_TO_BIN(uuid_str) → 16-byte binary. Reference: types/uuid.go."""
-    return F.unhex(F.regexp_replace(_c(u), "-", ""))
+    return F.unhex(F.regexp_replace(col_of(u), "-", ""))
 
 
 def bin_to_uuid(b) -> Column:
     """BIN_TO_UUID(bin) → canonical uuid string."""
-    h = F.lower(F.hex(_c(b)))
+    h = F.lower(F.hex(col_of(b)))
     return F.concat_ws(
         "-",
         F.substring(h, 1, 8),
@@ -434,7 +432,7 @@ def bin_to_uuid(b) -> Column:
 def makedate(year, dayofyear) -> Column:
     """MAKEDATE(year, dayofyear) (func_binary.go makedate): day-of-year 1
     anchors Jan 1; NULL for dayofyear < 1 (MySQL)."""
-    y, n = _c(year), _c(dayofyear)
+    y, n = col_of(year), col_of(dayofyear)
     return F.when(n >= 1, F.date_add(F.make_date(y, F.lit(1), F.lit(1)), n.cast("int") - 1))
 
 
@@ -442,7 +440,7 @@ def maketime(hour, minute, second) -> Column:
     """MAKETIME(h, m, s) → 'HH:MM:SS' string (TIME renders as text here;
     the reference's TIME type maps to string/interval in Spark)."""
     return F.format_string(
-        "%02d:%02d:%02d", _c(hour).cast("int"), _c(minute).cast("int"), _c(second).cast("int")
+        "%02d:%02d:%02d", col_of(hour).cast("int"), col_of(minute).cast("int"), col_of(second).cast("int")
     )
 
 
@@ -459,7 +457,7 @@ def timestampadd(unit: str, n: int, ts) -> Column:
 def convert_tz(ts, from_tz: str, to_tz: str) -> Column:
     """CONVERT_TZ (func_binary.go convert_tz): rebase a wall-clock timestamp
     between IANA zones."""
-    return F.convert_timezone(F.lit(from_tz), F.lit(to_tz), _c(ts))
+    return F.convert_timezone(F.lit(from_tz), F.lit(to_tz), col_of(ts))
 
 
 def _name(x) -> str:
@@ -523,16 +521,16 @@ def _uncompressed_length_udf(ss: pd.Series) -> pd.Series:
 
 def compress(s) -> Column:
     """MySQL COMPRESS (func_unary.go:5920): 4-byte LE length + zlib."""
-    return _compress_udf(_c(s))
+    return _compress_udf(col_of(s))
 
 
 def uncompress(b) -> Column:
     """MySQL UNCOMPRESS: NULL on corrupt stream or length mismatch."""
-    return _uncompress_udf(_c(b))
+    return _uncompress_udf(col_of(b))
 
 
 def uncompressed_length(b) -> Column:
-    return _uncompressed_length_udf(_c(b))
+    return _uncompressed_length_udf(col_of(b))
 
 
 # --- serial / serial_extract (func_builtin_serial.go opSerial +
@@ -545,31 +543,31 @@ def uncompressed_length(b) -> Column:
 
 def serial_pack(*cols) -> Column:
     """Pack non-negative bigint components into one order-preserving key."""
-    parts = [F.lower(F.lpad(F.hex(_c(c).cast("bigint")), 16, "0")) for c in cols]
+    parts = [F.lower(F.lpad(F.hex(col_of(c).cast("bigint")), 16, "0")) for c in cols]
     return F.concat(*parts)
 
 
 def serial_extract(packed, idx: int) -> Column:
     """Unpack component idx (0-based) of a serial_pack key."""
-    part = F.substring(_c(packed), idx * 16 + 1, 16)
+    part = F.substring(col_of(packed), idx * 16 + 1, 16)
     return F.conv(part, 16, 10).cast("bigint")
 
 
 def addtime(ts, t) -> Column:
     """ADDTIME(ts, 'HH:MM:SS'): shift by a TIME-string offset.
     Reference: func_binary.go addtime."""
-    return F.timestamp_micros(F.unix_micros(_c(ts)) + time_to_sec(t) * 1_000_000)
+    return F.timestamp_micros(F.unix_micros(col_of(ts)) + time_to_sec(t) * 1_000_000)
 
 
 def subtime(ts, t) -> Column:
     """SUBTIME(ts, 'HH:MM:SS'). Reference: func_binary.go subtime."""
-    return F.timestamp_micros(F.unix_micros(_c(ts)) - time_to_sec(t) * 1_000_000)
+    return F.timestamp_micros(F.unix_micros(col_of(ts)) - time_to_sec(t) * 1_000_000)
 
 
 def timediff(a, b) -> Column:
     """TIMEDIFF(a, b) → signed 'HH:MM:SS' (whole seconds, truncated toward
     zero like MySQL's second precision). Reference: func_binary.go timediff."""
-    us = F.unix_micros(_c(a)) - F.unix_micros(_c(b))
+    us = F.unix_micros(col_of(a)) - F.unix_micros(col_of(b))
     s = (us / 1_000_000).cast("long")
     return F.when(s < 0, F.concat(F.lit("-"), sec_to_time(-s))).otherwise(sec_to_time(s))
 
@@ -589,13 +587,13 @@ def time_format(x, fmt: str) -> Column:
     Reference: func_binary.go time_format / generalTime.go format table."""
     for mysql_code, spark_code in _TIME_FORMAT_MAP:
         fmt = fmt.replace(mysql_code, spark_code)
-    return F.date_format(_c(x), fmt)
+    return F.date_format(col_of(x), fmt)
 
 
 def to_seconds(x) -> Column:
     """TO_SECONDS(ts) = TO_DAYS(date part)·86400 + second-of-day.
     Reference: func_unary.go to_seconds."""
-    c = _c(x)
+    c = col_of(x)
     sod = (F.unix_micros(c) / 1_000_000).cast("long") % 86400
     return to_days(c.cast("date")) * 86400 + sod
 
@@ -603,7 +601,7 @@ def to_seconds(x) -> Column:
 def microsecond(x) -> Column:
     """MICROSECOND(ts): fractional-second part in µs.
     Reference: func_unary.go microsecond."""
-    return F.unix_micros(_c(x)) % 1_000_000
+    return F.unix_micros(col_of(x)) % 1_000_000
 
 
 # --- IPv6 / UUID validity family -------------------------------------------
@@ -634,7 +632,7 @@ def _inet6_aton_hex_udf(addrs: pd.Series) -> pd.Series:
 def inet6_aton_hex(addr) -> Column:
     """INET6_ATON(addr) → packed bytes as lowercase hex (16 for v6 with
     full '::' decompression, 4 for dotted-quad input, NULL if invalid)."""
-    return _inet6_aton_hex_udf(_c(addr))
+    return _inet6_aton_hex_udf(col_of(addr))
 
 
 @pandas_udf(_StringType())
@@ -664,7 +662,7 @@ def _inet6_ntoa_hex_udf(hexes: pd.Series) -> pd.Series:
 def inet6_ntoa_hex(h) -> Column:
     """INET6_NTOA over the hex-string binary form (inverse of
     inet6_aton_hex; v6 renders RFC 5952 compressed, matching MySQL)."""
-    return _inet6_ntoa_hex_udf(_c(h))
+    return _inet6_ntoa_hex_udf(col_of(h))
 
 
 @pandas_udf(_BooleanType())
@@ -684,25 +682,25 @@ def _is_ipv6_udf(addrs: pd.Series) -> pd.Series:
 
 def is_ipv6(addr) -> Column:
     """IS_IPV6(addr)."""
-    return _is_ipv6_udf(_c(addr))
+    return _is_ipv6_udf(col_of(addr))
 
 
 def is_ipv4_compat(h) -> Column:
     """IS_IPV4_COMPAT over hex binary: 16 bytes with a zero 96-bit prefix
     ('::a.b.c.d'). Pure Column expression — no UDF needed."""
-    h = _c(h)
+    h = col_of(h)
     return (F.length(h) == 32) & F.substring(h, 1, 24).rlike("^0{24}$")
 
 
 def is_ipv4_mapped(h) -> Column:
     """IS_IPV4_MAPPED over hex binary: '::ffff:a.b.c.d' prefix form."""
-    h = _c(h)
+    h = col_of(h)
     return (F.length(h) == 32) & F.substring(h, 1, 24).rlike("^0{20}ffff$")
 
 
 def is_uuid(s) -> Column:
     """IS_UUID: 8-4-4-4-12 hex with optional braces/dashes per MySQL."""
-    s = F.lower(F.regexp_replace(_c(s).cast("string"), r"[{}-]", ""))
+    s = F.lower(F.regexp_replace(col_of(s).cast("string"), r"[{}-]", ""))
     return s.rlike("^[0-9a-f]{32}$") & (F.length(s) == 32)
 
 
@@ -710,7 +708,7 @@ def interval_rank(x, *thresholds) -> Column:
     """MySQL INTERVAL(N, t1, t2, ...): number of thresholds <= N (equality
     advances past equal thresholds); NULL N yields -1
     (func_interval BVT; reference operator registry function_id.go)."""
-    n = _c(x)
+    n = col_of(x)
     cnt: Column = F.lit(0)
     for t in thresholds:
         cnt = cnt + F.when(n >= F.lit(t), 1).otherwise(0)

@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
+from matrixone_spark.functions import col_of
+
 # runtime: model_bytes -> (list[list[float]] -> list[float|None])
 _runtime: "dict[str, Callable | None]" = {"load": None}
 
@@ -114,8 +116,7 @@ def onnx_run(input_col, model: bytes) -> Column:
         vals = run([None if v is None else list(v) for v in vectors])
         return pd.Series(vals, dtype="float64")
 
-    c = F.col(input_col) if isinstance(input_col, str) else input_col
-    return udf(c)
+    return udf(col_of(input_col))
 
 
 def fake_linear_oracle_expr(vec_sql: str, seed: int, dim: int) -> str:

@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DecimalType, DoubleType, IntegerType, StringType
 
+from matrixone_spark.functions import col_of
+
 EARTH_RADIUS_M = 6371008.8  # func_s2h3.go:48
 
 _MAX_LEVEL = 30
@@ -305,10 +307,6 @@ def cells_are_neighbors(a: int, b: int) -> bool:
 _DEC20 = DecimalType(20, 0)
 
 
-def _c(x) -> Column:
-    return F.col(x) if isinstance(x, str) else x
-
-
 def _hilbert_step_table() -> "list[int]":
     """5-levels-at-a-time Hilbert transition table: index = orientation·1024
     + 10-bit interleaved (i,j) chunk; value = (10 pos bits << 2) | new
@@ -329,17 +327,6 @@ def _hilbert_step_table() -> "list[int]":
 
 
 _HILBERT_TAB = _hilbert_step_table()
-_HILBERT_TAB_COL: "Column | None" = None
-
-
-def _hilbert_tab_col() -> Column:
-    """The 4096-entry table as ONE cached array Column. Built via F.expr —
-    a ~25 KB SQL text parsed JVM-side in milliseconds — because F.lit(list)
-    marshals element-by-element over py4j (measured 7.4 s per call)."""
-    global _HILBERT_TAB_COL
-    if _HILBERT_TAB_COL is None:
-        _HILBERT_TAB_COL = F.expr("array(" + ",".join(map(str, _HILBERT_TAB)) + ")")
-    return _HILBERT_TAB_COL
 
 
 _TWO63 = Decimal(1 << 63)
@@ -349,7 +336,7 @@ _TWO64 = Decimal(1 << 64)
 def _to_signed64(cid) -> Column:
     """uint64-carrying DECIMAL(20,0) → the same 64-bit pattern as BIGINT
     (two's complement), so JVM bitwise ops apply."""
-    c = _c(cid).cast(_DEC20)
+    c = col_of(cid).cast(_DEC20)
     return (
         c - F.when(c >= F.lit(_TWO63), F.lit(_TWO64)).otherwise(F.lit(Decimal(0)))
     ).cast("bigint")
@@ -385,7 +372,7 @@ def s2_cellid(lon, lat) -> Column:
             dtype=object,
         )
 
-    return udf(_c(lon), _c(lat))
+    return udf(col_of(lon), col_of(lat))
 
 
 def _id_udf(fn, rtype):
@@ -490,10 +477,10 @@ def with_s2_cellid(df, lon, lat, out: str, level: int = _MAX_LEVEL):
 
     tmp = []
     if not isinstance(lon, str):
-        df = df.withColumn("__s2_lon", _c(lon))
+        df = df.withColumn("__s2_lon", col_of(lon))
         lon, tmp = "__s2_lon", tmp + ["__s2_lon"]
     if not isinstance(lat, str):
-        df = df.withColumn("__s2_lat", _c(lat))
+        df = df.withColumn("__s2_lat", col_of(lat))
         lat, tmp = "__s2_lat", tmp + ["__s2_lat"]
     lon_i, lat_i = df.columns.index(lon), df.columns.index(lat)
     out_schema = StructType(list(df.schema.fields) + [StructField(out, _DEC20, True)])
@@ -530,10 +517,10 @@ def with_s2_buckets(df, lon, lat, cell_out: str, buckets_out: str, level: int):
 
     tmp = []
     if not isinstance(lon, str):
-        df = df.withColumn("__s2_lon", _c(lon))
+        df = df.withColumn("__s2_lon", col_of(lon))
         lon, tmp = "__s2_lon", tmp + ["__s2_lon"]
     if not isinstance(lat, str):
-        df = df.withColumn("__s2_lat", _c(lat))
+        df = df.withColumn("__s2_lat", col_of(lat))
         lat, tmp = "__s2_lat", tmp + ["__s2_lat"]
     lon_i, lat_i = df.columns.index(lon), df.columns.index(lat)
     out_schema = StructType(
@@ -584,7 +571,7 @@ def with_s2_buckets(df, lon, lat, cell_out: str, buckets_out: str, level: int):
 def s2_cellid_level(cid) -> Column:
     """Pure Catalyst: level = 30 − log4(lsb) on the signed 64-bit pattern;
     the lsb is an exact power of two so the double log2 is exact."""
-    sig = _to_signed64(_c(cid))
+    sig = _to_signed64(col_of(cid))
     lsb = sig.bitwiseAND(-sig)
     return (F.lit(30) - (F.log2(lsb.cast("double")) / 2).cast("int")).cast("int")
 
@@ -595,7 +582,7 @@ def s2_cellid_parent(cid, level: int) -> Column:
     argument is referenced several times; for the fused compute-and-bucket
     pipeline use with_s2_cellid)."""
     lsb = 1 << (2 * (_MAX_LEVEL - int(level)))
-    sig = _to_signed64(_c(cid))
+    sig = _to_signed64(col_of(cid))
     return _to_unsigned64(sig.bitwiseAND(F.lit(-lsb)).bitwiseOR(F.lit(lsb)))
 
 
@@ -606,24 +593,24 @@ def s2_cellid_center_wkt(cid) -> Column:
         lon, lat = cell_center_lonlat(c)
         return f"POINT({lon!r} {lat!r})"
 
-    return _id_udf(fn, StringType())(_c(cid))
+    return _id_udf(fn, StringType())(col_of(cid))
 
 
 def s2_cellid_area(cid) -> Column:
-    return _id_udf(cell_approx_area_m2, DoubleType())(_c(cid))
+    return _id_udf(cell_approx_area_m2, DoubleType())(col_of(cid))
 
 
 def s2_cellid_edgeneighbors(cid) -> Column:
     """JSON array of uint64 ids (func_s2h3.go:363 returns JSON)."""
     import json
 
-    return _id_udf(lambda c: json.dumps(cell_edge_neighbors(c)), StringType())(_c(cid))
+    return _id_udf(lambda c: json.dumps(cell_edge_neighbors(c)), StringType())(col_of(cid))
 
 
 def s2_cellid_allneighbors(cid) -> Column:
     import json
 
-    return _id_udf(lambda c: json.dumps(cell_all_neighbors(c)), StringType())(_c(cid))
+    return _id_udf(lambda c: json.dumps(cell_all_neighbors(c)), StringType())(col_of(cid))
 
 
 def s2_cellid_areneighbors(a, b) -> Column:
@@ -639,7 +626,7 @@ def s2_cellid_areneighbors(a, b) -> Column:
             dtype=object,
         )
 
-    return udf(_c(a), _c(b))
+    return udf(col_of(a), col_of(b))
 
 
 # Reference registers both spellings (function_id.go s2_cellid_*neighbours);

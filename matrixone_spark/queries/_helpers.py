@@ -13,32 +13,14 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from matrixone_spark.functions import col_of
+
 
 def dec(col: "str | Column", prec: int = 18, scale: int = 2) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(f"decimal({prec},{scale})")
+    return col_of(col).cast(f"decimal({prec},{scale})")
 
 
 def dsum(col: "str | Column", alias: str, prec: int = 18, scale: int = 2) -> Column:
     """Exact decimal sum surfaced as double."""
     return F.sum(dec(col, prec, scale)).cast("double").alias(alias)
 
-
-def davg(col: "str | Column", alias: str, prec: int = 18, scale: int = 2, nd: int = 6) -> Column:
-    """avg = exact-decimal sum cast double, / count, rounded — deterministic."""
-    c = F.col(col) if isinstance(col, str) else col
-    s = F.sum(dec(c, prec, scale)).cast("double")
-    n = F.count(c)
-    return F.round(s / n, nd).alias(alias)
-
-
-def o_dsum(expr: str, alias: str, prec: int = 18, scale: int = 2) -> str:
-    """Oracle-side (DuckDB SQL) twin of dsum."""
-    return f"CAST(SUM(CAST({expr} AS DECIMAL({prec},{scale}))) AS DOUBLE) AS {alias}"
-
-
-def o_davg(expr: str, alias: str, prec: int = 18, scale: int = 2, nd: int = 6) -> str:
-    return (
-        f"ROUND(CAST(SUM(CAST({expr} AS DECIMAL({prec},{scale}))) AS DOUBLE)"
-        f" / COUNT({expr}), {nd}) AS {alias}"
-    )

@@ -16,36 +16,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from collections import OrderedDict
-
 from matrixone_spark.catalog import Catalog
 from matrixone_spark.functions import geo as G
+from matrixone_spark.matcache import PERSISTED_CAPACITY, MaterializationCache
 from matrixone_spark.queries import register
 
 # (app id, sf_dir) → persisted cell-annotated point set for the S2 bench
-# join. Bounded LRU with unpersist-on-evict (same discipline as the
-# fulltext index cache): the two join branches then share one Arrow-batched
-# S2 cell computation instead of re-running it per branch.
-_S2_BASE_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-_S2_BASE_CACHE_MAX = 4
-
-
-def _s2_bench_base(spark, sf_dir: str, build) -> DataFrame:
-    """``build`` is a thunk returning the frame to persist — lazy so a warm
-    cache hit skips the whole plan construction (r13, guide §5 driver work:
-    the eager form built ~500 py4j calls of pts+S2-bucket expressions per
-    invocation only to discard them on the cache hit)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _S2_BASE_CACHE.get(key)
-    if cached is None:
-        cached = build().persist()
-        _S2_BASE_CACHE[key] = cached
-        while len(_S2_BASE_CACHE) > _S2_BASE_CACHE_MAX:
-            _, old = _S2_BASE_CACHE.popitem(last=False)
-            old.unpersist(blocking=False)
-    else:
-        _S2_BASE_CACHE.move_to_end(key)
-    return cached
+# join, unpersisted on evict (same discipline as the fulltext index cache):
+# the two join branches then share one Arrow-batched S2 cell computation
+# instead of re-running it per branch.
+_S2_BASE_CACHE = MaterializationCache(PERSISTED_CAPACITY, release=lambda df: df.unpersist(blocking=False))
 
 
 @register(
@@ -731,9 +711,11 @@ def geo_s2_join_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Bounded cache keyed by (app, sf_dir) — at 100 TB this is the table
     # you'd write out partitioned by cell; persisting the annotated points
     # is the in-session analogue. Built lazily: a warm cache hit skips the
-    # pts + S2-bucket plan construction entirely.
+    # pts + S2-bucket plan construction entirely (~500 py4j calls).
+    cat = Catalog(spark, sf_dir)
+
     def _build() -> DataFrame:
-        c = Catalog(spark, sf_dir).table("customer")
+        c = cat.table("customer")
         k = F.col("c_custkey")
         # sf0.1 customer is one small parquet split; spread it so the cell
         # math and the verify run on all cores (at real scale the scan is
@@ -743,9 +725,9 @@ def geo_s2_join_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((k % 720).cast("double") / 2.0 - 179.5).alias("lon"),
             ((k % 340).cast("double") / 2.0 - 84.5).alias("lat"),
         )
-        return S2.with_s2_buckets(pts, "lon", "lat", "cell", "buckets", level=5)
+        return S2.with_s2_buckets(pts, "lon", "lat", "cell", "buckets", level=5).persist()
 
-    base = _s2_bench_base(spark, sf_dir, _build)
+    base = _S2_BASE_CACHE.get(cat.app_id, sf_dir, [cat.path("customer")], _build)
     expanded = base.select(
         F.col("id").alias("id_b"),
         F.col("lon").alias("lon_b"),

@@ -54,13 +54,11 @@ SPARK_CONF: dict[str, str] = {
     # evict every query's classes between its own runs, so EVERY execution
     # pays recompile+re-JIT (measured: q1 0.85 s interleaved vs 0.35 s
     # back-to-back in one process, identical plan; full 18-query bench
-    # 13.96 s at 100 entries vs 9.16 s at 2048 — A/B via this env knob).
+    # 13.96 s at 100 entries vs 9.16 s at 2048).
     # Not scale-dependent: a production driver serving many distinct
     # queries wants this just as much; memory cost is bounded (generated
     # classes, ~KBs each). Static conf — must be set before the session.
-    "spark.sql.codegen.cache.maxEntries": os.environ.get(
-        "SPARK_GRAFT_CODEGEN_CACHE", "2048"
-    ),
+    "spark.sql.codegen.cache.maxEntries": "2048",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"),
     "spark.ui.enabled": "false",
     "spark.sql.ansi.enabled": "false",  # MySQL-ish permissive semantics (SURVEY §7)

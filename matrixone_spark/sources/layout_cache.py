@@ -19,7 +19,9 @@ driver materializes each table as exactly one file + one row group.
 The rewrite is driver-side pyarrow (no Spark job), content-preserving
 (same rows, different order — every consumer is order-insensitive), cached
 under ``<repo>/.layout_cache`` and keyed by the source file's
-(size, mtime, rows) so a regenerated testdata dir invalidates naturally.
+(size, mtime_ns, rows) — the in-session caches' fingerprint
+(``matcache.fingerprint``) plus the row count — so a regenerated testdata
+dir invalidates naturally.
 Concurrent builders race benignly: build into a temp dir, publish with an
 atomic rename, loser discards.
 """
@@ -29,6 +31,8 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+
+from matrixone_spark.matcache import fingerprint
 
 # Natural clustering keys (the column the reference would zonemap-sort on):
 # date/time predicates dominate these tables' query mix.
@@ -90,8 +94,7 @@ def split_layout_path(src_path: str, table: str) -> "str | None":
     if md.num_rows < min_rows or md.num_row_groups >= MIN_SOURCE_GROUPS:
         return None
 
-    st = os.stat(src_path)
-    tag = f"{st.st_size}-{int(st.st_mtime)}-{md.num_rows}"
+    tag = "-".join(map(str, (*fingerprint(src_path), md.num_rows)))
     root = cache_root()
     dest = os.path.join(root, f"{table}-{tag}")
     done = os.path.join(dest, "_COMPLETE")

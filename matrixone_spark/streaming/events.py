@@ -22,6 +22,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from matrixone_spark.matcache import LAZY_CAPACITY, MaterializationCache
+
 # State-store partition count for the bounded availableNow drains (r12 perf).
 # Structured Streaming pins the stateful operator's partitioning — and
 # therefore the number of state-store instances, each paying provider init +
@@ -38,7 +40,7 @@ _STATE_PARTITIONS = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
 
 
 # appId -> isolated SparkSession for bounded streaming drains.
-_STREAM_SESSION: "dict[str, SparkSession]" = {}
+_STREAM_SESSION = MaterializationCache(LAZY_CAPACITY)
 
 
 def _stream_session(spark: SparkSession) -> SparkSession:
@@ -66,22 +68,19 @@ def _stream_session(spark: SparkSession) -> SparkSession:
     drains. Correctness confs (UTC, nanosAsLong) are re-applied on the child
     by Catalog's ensure_session_confs when the stream source is built.
     """
-    key = spark.sparkContext.applicationId
-    ss = _STREAM_SESSION.get(key)
-    if ss is None:
+
+    def build() -> SparkSession:
         ss = spark.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", _STATE_PARTITIONS)
         ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-        _STREAM_SESSION[key] = ss
-        if len(_STREAM_SESSION) > 4:  # stale appIds from restarted tests
-            for k in list(_STREAM_SESSION)[:-4]:
-                del _STREAM_SESSION[k]
-    return ss
+        return ss
+
+    return _STREAM_SESSION.get(spark.sparkContext.applicationId, "drain", (), build)
 
 
 # (appId, path) -> parquet schema: footer-sniffing costs a driver job per
-# readStream construction; the schema is immutable for a given file set.
-_SCHEMA_CACHE: "dict[tuple[str, str], object]" = {}
+# readStream construction; the schema is fixed until the file changes.
+_SCHEMA_CACHE = MaterializationCache(LAZY_CAPACITY)
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,11 +90,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = Catalog(spark, sf_dir)
     path = cat.path("events")
-    skey = (spark.sparkContext.applicationId, path)
-    batch_schema = _SCHEMA_CACHE.get(skey)
-    if batch_schema is None:
-        batch_schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[skey] = batch_schema
+    batch_schema = _SCHEMA_CACHE.get(cat.app_id, path, [path], lambda: spark.read.parquet(path).schema)
     reader = spark.readStream.schema(batch_schema).format("parquet")
     if os.path.isfile(path):
         # file-source streams need a directory: stream the parent dir with a

@@ -246,13 +246,18 @@ def test_real_public_userdict():
     assert cut_dag("云计算区块链", prefix, logtotal) == ["云计算", "区块链"]
 
 
-def test_nl_multitoken_model_decision():
-    """NL multi-token scoring model pinned EMPIRICALLY against the
-    reference's own goldens (round-8 count over fulltext/gojieba +
-    fulltext + fulltext2 + fulltext_bm25): positional PHRASE
-    (patternToSql SqlPhrase, pkg/fulltext/sql.go:577) fails 14 golden
-    rows; bag-of-words fails 24. Phrase wins and stays the default; the
-    env knob FULLTEXT_NL_MODEL exists to re-count."""
-    from matrixone_spark.operators import fulltext as ft
+def test_nl_multitoken_model_decision(spark):
+    """Multi-token NL is a positional PHRASE (patternToSql SqlPhrase,
+    pkg/fulltext/sql.go:577), the model pinned by the round-8 count over the
+    reference goldens (fulltext/gojieba + fulltext + fulltext2 +
+    fulltext_bm25: phrase fails 14 golden rows, bag-of-words 24): a
+    two-token query matches the doc with the tokens adjacent and in order,
+    not one with them apart or reversed."""
+    from matrixone_spark.operators.fulltext import FullTextIndex
 
-    assert ft.NL_MULTI_MODEL == "phrase"
+    docs = spark.createDataFrame(
+        [(0, "the quick fox jumps"), (1, "quick brown fox"), (2, "fox quick")],
+        "doc_id long, text string",
+    )
+    idx = FullTextIndex.build(docs, "doc_id", "text")
+    assert {r["doc_id"] for r in idx.match_nl("quick fox").collect()} == {0}

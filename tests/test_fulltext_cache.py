@@ -17,8 +17,8 @@ def _corpus(spark, seed: int):
 
 def test_cache_bounded_and_evicts_persisted(spark):
     ft._INDEX_CACHE.clear()
-    old_max = ft._INDEX_CACHE_MAX
-    ft._INDEX_CACHE_MAX = 3
+    old_capacity = ft._INDEX_CACHE.capacity
+    ft._INDEX_CACHE.capacity = 3
     try:
         # reuse the same DataFrame objects, as Catalog's table cache does —
         # the cache key is the corpus' semantic hash
@@ -34,9 +34,7 @@ def test_cache_bounded_and_evicts_persisted(spark):
         assert again is indexes[4]
         assert again.postings.storageLevel.useMemory
     finally:
-        ft._INDEX_CACHE_MAX = old_max
-        for idx in ft._INDEX_CACHE.values():
-            idx.unpersist()
+        ft._INDEX_CACHE.capacity = old_capacity
         ft._INDEX_CACHE.clear()
 
 
@@ -49,8 +47,6 @@ def test_cache_hit_returns_same_index(spark):
         assert a is b
         assert len(ft._INDEX_CACHE) == 1
     finally:
-        for idx in ft._INDEX_CACHE.values():
-            idx.unpersist()
         ft._INDEX_CACHE.clear()
 
 

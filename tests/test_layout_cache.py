@@ -63,3 +63,27 @@ def test_disable_env(tmp_path, monkeypatch, big_single_file):
     src, _ = big_single_file
     monkeypatch.setenv("SPARK_GRAFT_LAYOUT_CACHE", "0")
     assert lc.split_layout_path(src, "lineitem") is None
+
+
+def test_same_second_rewrite_gets_a_new_split(tmp_path, monkeypatch):
+    """A same-size, same-row-count rewrite within one second is a new
+    source: the split tag carries the fingerprint's mtime_ns, not whole
+    seconds."""
+    monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(tmp_path / "cache"))
+    n = lc.MIN_ROWS
+    src = str(tmp_path / "lineitem.parquet")
+    t0 = 1_700_000_000 * 10**9
+    dests, sizes = [], []
+    for i, mtime in enumerate((t0 + 100_000_000, t0 + 600_000_000)):
+        tbl = pa.table({
+            "l_shipdate": pa.array([k % 1000 for k in range(n)], pa.int64()),
+            "v": pa.array(range(i * n, (i + 1) * n), pa.int64()),
+        })
+        # plain, uncompressed int64: both versions have the same byte size
+        pq.write_table(tbl, src, row_group_size=n, compression="none", use_dictionary=False)
+        os.utime(src, ns=(mtime, mtime))
+        sizes.append(os.path.getsize(src))
+        dests.append(lc.split_layout_path(src, "lineitem"))
+    assert sizes[0] == sizes[1]
+    assert dests[0] != dests[1]
+    assert sorted(pq.read_table(dests[1]).column("v").to_pylist()) == list(range(n, 2 * n))
