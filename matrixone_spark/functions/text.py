@@ -16,7 +16,8 @@ round-trip per Column-API node. The scorers (token count, token length,
 stopword hits, quality) are regex/string expressions directly on the text —
 codegen-able, no per-row token array; see the equivalence note above
 ``token_count_rx_sql``. Queries that need several scorers over the same text
-stage the shared primitives in their own projection (``quality_score_sql``).
+stage the shared primitives in their own projection and compose over the
+columns (``quality_score_sql``, ``lang_guess_sql``).
 """
 
 from __future__ import annotations
@@ -280,20 +281,27 @@ def lang_score_rx_sql(col_sql: str, lang: str, stopwords: "dict | None" = None) 
     )
 
 
-def lang_guess_rx_sql(col_sql: str, stopwords: "dict | None" = None) -> str:
-    """Argmax language by stopword hits; 'und' when no signature fires.
-    The first language (alphabetical) wins ties — mirrored in the oracle
-    SQL."""
-    sw = stopwords or DEFAULT_STOPWORDS
-    scores = [(lang, lang_score_rx_sql(col_sql, lang, sw)) for lang in sorted(sw)]
-    best = "greatest(" + ", ".join(s for _, s in scores) + ")"
+def lang_guess_sql(scores: dict) -> str:
+    """Argmax language over its stopword-hit counts, given as a
+    ``{lang: SQL operand}`` map; 'und' when no signature fires. The first
+    language (alphabetical) wins ties — mirrored in the oracle SQL. Like
+    ``quality_score_sql``, each operand is referenced several times, so
+    callers that can keep the scores in a separate projection should pass
+    their column NAMES."""
+    langs = sorted(scores)
+    best = "greatest(" + ", ".join(scores[lang] for lang in langs) + ")"
     expr = "'und'"
-    for lang, s in reversed(scores):
+    for lang in reversed(langs):
         expr = (
-            f"CASE WHEN (({s}) = {best}) AND ({best} > 0)"
+            f"CASE WHEN (({scores[lang]}) = {best}) AND ({best} > 0)"
             f" THEN '{lang}' ELSE {expr} END"
         )
     return expr
+
+
+def lang_guess_rx_sql(col_sql: str, stopwords: "dict | None" = None) -> str:
+    sw = stopwords or DEFAULT_STOPWORDS
+    return lang_guess_sql({lang: lang_score_rx_sql(col_sql, lang, sw) for lang in sw})
 
 
 def quality_score_sql(n_sql: str, sum_sql: str, pr_sql: str) -> str:
@@ -305,7 +313,12 @@ def quality_score_sql(n_sql: str, sum_sql: str, pr_sql: str) -> str:
     where codegen subexpression elimination cannot hoist them out of CASE
     branches (measured −34% executor time on text_quality_filter;
     CollapseProject keeps the split because the aliases are non-cheap and
-    multi-referenced)."""
+    multi-referenced). A projection does not keep the split under a Filter
+    on the score: predicate pushdown substitutes the aliases back into the
+    predicate, and a FilterExec has no subexpression elimination, so every
+    reference re-runs its regex. Gated callers stage the primitives in an
+    operator the predicate cannot move below — a one-row
+    ``inline(array(struct(...)))`` generator (pipeline_clean_corpus)."""
     atl = _avg_token_len_sql(n_sql, sum_sql)
     len_ok = f"CASE WHEN ({n_sql} >= 20) AND ({n_sql} <= 1000) THEN 1.0D ELSE 0.4D END"
     shape_ok = (

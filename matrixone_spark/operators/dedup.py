@@ -51,17 +51,19 @@ def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
 
 
 def word_shingles_sql(col_sql: str, n: int = 3) -> str:
-    """Distinct word n-grams of a text column (array expression). The
-    tokenize subtree is repeated at each use in the string; Catalyst's
-    subexpression elimination evaluates it once."""
-    toks = tokenize_sql(col_sql)
+    """Distinct word n-grams of a text column (array expression).
+
+    The token array is bound once, as the single element an outer
+    ``transform`` maps over: lambda bodies are interpreted per element and
+    get no subexpression elimination, so a tokenize subtree inside the
+    n-gram lambda would re-split the document once per shingle."""
     grams = (
-        f"transform(sequence(0, greatest(size({toks}) - {n}, 0)),"
-        f" i -> array_join(slice({toks}, i + 1, {n}), ' '))"
+        f"transform(sequence(0, greatest(size(w) - {n}, 0)),"
+        f" i -> array_join(slice(w, i + 1, {n}), ' '))"
     )
     return (
-        f"array_distinct(CASE WHEN size({toks}) >= {n} THEN {grams}"
-        f" ELSE array() END)"
+        f"transform(array({tokenize_sql(col_sql)}), w -> array_distinct("
+        f"CASE WHEN size(w) >= {n} THEN {grams} ELSE array() END))[0]"
     )
 
 
@@ -109,10 +111,20 @@ def ngram_jaccard_pairs(
     # parsed JVM-side — the Column-API form cost ~250 py4j round-trips of
     # driver-side Python latency per plan build; identical expression trees
     # (plan-diff-verified).
-    sh = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.expr(f"{word_shingles_sql(text_col, n)} AS _sh"),
-    ).selectExpr("doc_id", "size(_sh) AS sz", "explode(_sh) AS shingle")
+    # explode_outer + IS NOT NULL instead of explode: the optimizer infers a
+    # `size(_sh) > 0` filter for a plain explode of a column and pushes it
+    # below the projection, inlining the whole shingle expression into the
+    # scan Filter, which evaluates it a second time per row. The outer form
+    # infers nothing, and a predicate on the generated column cannot move
+    # below the Generate. A zero-shingle doc yields one NULL row, dropped.
+    sh = (
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.expr(f"{word_shingles_sql(text_col, n)} AS _sh"),
+        )
+        .selectExpr("doc_id", "size(_sh) AS sz", "explode_outer(_sh) AS shingle")
+        .filter("shingle IS NOT NULL")
+    )
     posts = (
         sh.groupBy("shingle")
         .agg(F.expr("array_sort(collect_list(struct(doc_id, sz))) AS ids"))
@@ -220,7 +232,13 @@ def minhash_lsh_pairs(
     # multiset) and the verification join. The r12 shape tokenized the corpus
     # twice — once under the signature agg, once (with a redundant second
     # array_distinct on top) under the verify broadcast — and Spark shares no
-    # subtrees across them. Measured at sf1: −35% operator ERT. Memory note
+    # subtrees across them. Re-measured with the once-per-row shingle
+    # builder (perfbench seed-1 corpus, sf0.02, local[3] on 4 vCPUs, 3
+    # interleaved processes of 9 warm runs each): keeping the checkpoint
+    # gives a median wall of 0.71-0.72 s and 135-157 ms operator ERT;
+    # dropping it gives 0.79-0.98 s and 201-280 ms, since the shingle sets
+    # are then built twice. (The older "−35% ERT at sf1" was measured with
+    # a builder that re-split each document per shingle.) Memory note
     # (§5): the checkpoint holds doc_id + shingle set, about the tokenized
     # corpus size, spilling to disk past storage memory; the trade is one
     # full corpus re-read + re-tokenize against that footprint, and the

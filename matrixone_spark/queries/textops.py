@@ -83,9 +83,15 @@ GROUP BY 1, 2
 )
 def text_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    # lookaround-bounded regex stopword counts (see functions/text.py)
+    # lookaround-bounded regex stopword counts (see functions/text.py),
+    # staged in their own projection; the guess composes over the columns
+    scores = d.selectExpr(
+        "lang AS actual_lang", *[f"{T.lang_score_rx_sql('text', g)} AS _sw_{g}" for g in _LANGS]
+    )
     return (
-        d.selectExpr("lang AS actual_lang", f"{T.lang_guess_rx_sql('text')} AS guessed")
+        scores.selectExpr(
+            "actual_lang", f"{T.lang_guess_sql({g: f'_sw_{g}' for g in _LANGS})} AS guessed"
+        )
         .groupBy("actual_lang", "guessed")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -538,22 +544,38 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = Catalog(spark, sf_dir).table("documents")
-    # Per-task work (guide §1.2): the scoring gate uses the regex-count
-    # scorers (functions/text.py) — token-array forms desugar to
-    # CodegenFallback higher-order functions, which would kick the
-    # pushed-down quality/langid Filter (and the projections) out of
-    # whole-stage codegen and materialize token arrays per metric per row.
-    # Only the fingerprint still needs the token array (sorted distinct
-    # tokens), and it is computed AFTER the filter, on survivors only.
-    # r13 (guide §5, driver work): the whole scored projection and the final
-    # aggregates are SQL strings (one parse call each) — the Column-API form
-    # cost ~1100 py4j round-trips (~0.24 s driver-side Python) per plan build
+    # Per-task work (guide §1.2): the gate uses the regex-count scorers
+    # (functions/text.py) — token-array forms desugar to CodegenFallback
+    # higher-order functions, which would kick the gate Filter and the
+    # projections out of whole-stage codegen. The seven regex primitives
+    # (token count, token chars, punct ratio, four stopword scores) are
+    # staged ONCE per row in a one-row inline() generator. A plain
+    # projection does not hold them: predicate pushdown moves the gate
+    # below it and substitutes the composite scores into the FilterExec,
+    # which has no subexpression elimination (26 regexp_extract_all calls
+    # per row instead of 5). A predicate on generated columns cannot move
+    # below the Generate. Quality and guess compose over the staged
+    # columns. Only the fingerprint needs the token array (sorted distinct
+    # tokens), and it is computed AFTER the gate, on survivors only.
+    # r13 (guide §5, driver work): the projections and the final aggregates
+    # are SQL strings (one parse call each) — the Column-API form cost
+    # ~1100 py4j round-trips (~0.24 s driver-side Python) per plan build
+    prims = ", ".join(
+        [
+            f"{T.token_count_rx_sql('text')} AS n_tokens",
+            f"{T.sum_token_len_rx_sql('text')} AS _s",
+            f"{T.punct_ratio_sql('text')} AS _pr",
+            *[f"{T.lang_score_rx_sql('text', g)} AS _sw_{g}" for g in _LANGS],
+        ]
+    )
     scored = d.selectExpr(
+        "doc_id", "source", "text", f"inline(array(struct({prims})))"
+    ).selectExpr(
         "doc_id",
         "source",
-        f"{T.token_count_rx_sql('text')} AS n_tokens",
-        f"{T.quality_score_rx_sql('text')} AS quality",
-        f"{T.lang_guess_rx_sql('text')} AS guessed",
+        "n_tokens",
+        f"{T.quality_score_sql('n_tokens', '_s', '_pr')} AS quality",
+        f"{T.lang_guess_sql({g: f'_sw_{g}' for g in _LANGS})} AS guessed",
         f"{T.fingerprint_sql('text')} AS fp",
     )
     kept = scored.filter("quality >= 0.8D AND guessed = 'en'")

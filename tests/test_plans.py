@@ -13,6 +13,25 @@ def _plan(spark, name: str) -> str:
     return load_all()[name].fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
 
 
+def _final_plan(df) -> str:
+    """Run ``df`` and return its AQE final plan (AQE prints the final and
+    the initial plan; only the first section ran)."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+
+
+def _lambda_bodies(plan: str) -> "list[str]":
+    """The argument text of every ``lambdafunction(...)`` in ``plan``."""
+    bodies = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        bodies.append(plan[m.end() : i - 1])
+    return bodies
+
+
 def test_q5_broadcasts_dims_after_aqe(spark):
     """Bounded dims broadcast statically; supplier-sized frames convert to
     broadcast at runtime via AQE at this SF (and stay shuffled at 100 TB —
@@ -141,9 +160,7 @@ def test_fulltext_boolean_single_postings_scan(spark):
     d = Catalog(spark, SF_DIR).table("documents")
     idx = FullTextIndex.build_cached(d, "doc_id", "text")
     df = idx.match_pattern("table <query >spark ~slow", algo="tfidf")
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]  # AQE prints both sections
+    final = _final_plan(df)
     assert final.count("InMemoryTableScan") <= 2, final[:800]
     assert "Generate" in final, final[:800]  # the explode probe
 
@@ -159,8 +176,49 @@ def test_simhash_pairs_single_signature_subtree(spark):
 
     d = Catalog(spark, SF_DIR).table("documents").filter(F.col("doc_id") < 60)
     df = simhash_pairs(d, "doc_id", "text", max_hamming=10)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]  # AQE prints both sections
+    final = _final_plan(df)
     n_scans = len(re.findall(r"FileScan parquet[^\n]*documents", final))
     assert n_scans == 1, (n_scans, final[:800])
+
+
+def test_search_scan_stages_do_per_row_work_once(spark, monkeypatch):
+    """Each document is tokenized, and regex-scored, once per row:
+    - pipeline_clean_corpus's gate reads 5 staged regex-count primitives
+      (a gate pushed through a plain projection inlines the composite
+      scores into the FilterExec, which has no subexpression elimination:
+      26 passes);
+    - text_lang_guess keeps its 4 stopword scores in their own projection;
+    - dedup_ngram_jaccard and the shingle sets dedup_minhash_lsh
+      checkpoints split the text once: no lambda body re-splits it per
+      shingle, and no inferred explode filter evaluates the shingles
+      twice."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    checkpointed = []
+    real = DataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpointed.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    registry = load_all()
+    plans = {
+        name: _final_plan(registry[name].fn(spark, SF_DIR))
+        for name in (
+            "pipeline_clean_corpus", "text_lang_guess", "dedup_ngram_jaccard",
+            "dedup_minhash_lsh",
+        )
+    }
+    (sets,) = checkpointed
+    plans["minhash shingle sets"] = _final_plan(sets)
+    for name, needle, want in (
+        ("pipeline_clean_corpus", "regexp_extract_all(", 5),
+        ("text_lang_guess", "regexp_extract_all(", 4),
+        ("dedup_ngram_jaccard", "split(lower(", 1),
+        ("minhash shingle sets", "split(lower(", 1),
+    ):
+        assert plans[name].count(needle) == want, (name, needle, plans[name][:3000])
+    for name, plan in plans.items():
+        for body in _lambda_bodies(plan):
+            assert "split(" not in body, (name, body[:300])

@@ -95,21 +95,28 @@ def test_text_builders_match_python_spec(spark):
 
 
 def test_pipeline_scan_stage_codegen(spark):
-    """The pushed-down quality/langid Filter must contain no lambdafunction
-    (CodegenFallback) — the only higher-order expressions left in the plan
-    are the survivors-only fingerprint projection."""
+    """The one-row generator that evaluates the regex primitives and the
+    quality/langid gate Filter above it must both sit inside whole-stage
+    codegen (`*(n)`) and hold no lambdafunction (CodegenFallback) — the
+    only higher-order expressions left in the plan are the survivors-only
+    fingerprint projection."""
     df = load_all()["pipeline_clean_corpus"].fn(spark, SF_DIR)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # the scoring predicate (regexp_count desugars to size(regexp_extract_all))
-    # must sit in a `*(n) Filter` — i.e. INSIDE whole-stage codegen, which is
-    # impossible if any CodegenFallback higher-order function leaked back in
-    for line in plan.splitlines():
-        if "Filter" in line and "regexp_extract_all" in line:
-            assert line.lstrip().lstrip("+-: ").startswith("*("), line[:300]
-            break
-    else:
-        raise AssertionError("no regex scoring Filter found:\n" + plan[:2000])
+    final = plan.split("== Initial Plan ==")[0]  # AQE prints both sections
+    ops = {}
+    for line in final.splitlines():
+        op = line.lstrip().lstrip("+-: ")
+        # regexp_count desugars to size(regexp_extract_all)
+        if "Generate inline(" in op and "regexp_extract_all" in op:
+            ops["primitives"] = op
+        # the gate reads the staged English stopword score
+        if re.match(r"(\*\(\d+\) )?Filter ", op) and "_sw_en" in op:
+            ops["gate"] = op
+    assert set(ops) == {"primitives", "gate"}, final[:3000]
+    for what, op in ops.items():
+        assert op.startswith("*("), (what, op[:300])
+        assert "lambdafunction" not in op, (what, op[:300])
 
 
 def test_token_stats_no_higher_order_functions(spark):
