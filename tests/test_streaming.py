@@ -142,9 +142,9 @@ def test_stateful_state_survives_micro_batches(spark, tmp_path):
 def test_stream_session_isolates_caller_confs(spark):
     """r13 advice fix: bounded drains run on an isolated child session — the
     caller's session-global confs (shuffle.partitions) must never be mutated,
-    even transiently, and the child carries the drain confs."""
+    even transiently, and the child carries the drain confs: one state store
+    per task slot, at most 8."""
     from matrixone_spark.streaming.events import (
-        _STATE_PARTITIONS,
         _stream_session,
         run_streaming_aggregate,
         tumbling_event_counts,
@@ -156,10 +156,34 @@ def test_stream_session_isolates_caller_confs(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     ss = _stream_session(spark)
     assert ss is not spark
-    assert ss.conf.get("spark.sql.shuffle.partitions") == _STATE_PARTITIONS
+    stores = min(spark.sparkContext.defaultParallelism, 8)
+    assert ss.conf.get("spark.sql.shuffle.partitions") == str(stores)
     assert ss.conf.get("spark.sql.streaming.noDataMicroBatches.enabled") == "false"
     # reused across drains (one child per application)
     assert _stream_session(spark) is ss
+
+
+def test_drain_runs_one_state_store_per_slot(spark):
+    """The stateful operator of a drain on the stream session reports one
+    state-store instance per task slot (at most 8), as sized at start."""
+    from matrixone_spark.streaming.events import (
+        _events_stream,
+        _stream_session,
+        tumbling_event_counts,
+    )
+
+    ss = _stream_session(spark)
+    stream = _events_stream(ss, SF_DIR).withWatermark("ts", "1 hour")
+    q = (
+        tumbling_event_counts(stream)
+        .writeStream.outputMode("complete")
+        .format("noop")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    (op,) = q.lastProgress["stateOperators"]
+    assert op["numStateStoreInstances"] == min(spark.sparkContext.defaultParallelism, 8)
 
 
 def test_stream_drains_leave_no_sink_tables(spark, registry):
