@@ -1,39 +1,55 @@
-"""SQL-registered geo UDF surface (st_* names callable from spark.sql).
+"""SQL-registered geo UDF surface (st_*, s2_* and h3_* names callable from
+spark.sql).
 
 The DataFrame-level geo model lives in functions/geo.py / geo_ops.py /
-geomlib.py; this module exposes the same kernels under their MySQL-dialect
-names so the BVT replay (test/distributed/cases/geo/*.sql) and any
-translate()-based query can call them as plain SQL functions. Reference
-surface: pkg/sql/plan/function/func_geo*.go (st_* registrations in
-function_id.go); semantics are the geomlib clean-room kernels already
-oracle-gated by the geofull batteries.
+geomlib.py / s2cell.py / h3cell.py; this module exposes the same kernels
+under their MySQL-dialect names so the BVT replay
+(test/distributed/cases/geo/*.sql) and any translate()-based query can call
+them as plain SQL functions. Reference surface:
+pkg/sql/plan/function/func_geo*.go (st_* registrations in function_id.go)
+and func_s2h3.go:300-616 (the S2/H3 cell wrappers); semantics are the
+geomlib clean-room kernels already oracle-gated by the geofull batteries.
 
-Registration is idempotent (session-tagged), mirroring sql_udfs.register_all.
+``SQL_UDFS`` is this module's part of the one kernel table that
+``sql_surface.register_spark`` registers. Each row's kernel takes one
+argument per SQL argument and carries its MySQL row semantics:
 
-Arity: Spark SQL UDFs are fixed-arity, MySQL's geo functions are not —
-translate() pads optional trailing arguments with NULL (GEO_SQL_ARITY),
-and kernels treat None as "argument omitted".
+- ``_lenient`` (the st_* spec): a NULL first argument gives NULL, trailing
+  NULLs count as omitted (the kernel's own defaults apply), and a kernel
+  exception gives NULL; more arguments than the spec's arity fail the
+  statement.
+- ``_strict`` (S2/H3 cells, st_point, st_point32): any NULL argument gives
+  NULL, and invalid input raises, matching the reference's error contract
+  (``invalid H3Index: 0`` etc.) so the statement fails where the
+  reference's .result shows an error line.
 
 All geometry values travel as EWKT strings ('SRID=n;WKT' or bare WKT),
-the same convention as geo_ops; at 100 TB these are ordinary string
-columns — Arrow-batched pandas UDFs, no driver round-trips.
+the same convention as geo_ops; a CellId/H3Index is DECIMAL(20,0) carrying
+the uint64. At 100 TB these are ordinary per-row scalar transforms over
+string columns — Arrow-batched pandas UDFs, no shuffle, no driver
+round-trips.
 """
 
 from __future__ import annotations
 
+import decimal
+import json
 import math
+import struct
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
+    DecimalType,
     DoubleType,
+    IntegerType,
     LongType,
     StringType,
 )
 
 from matrixone_spark.functions import geomlib as GL
+from matrixone_spark.functions import h3cell as H3
+from matrixone_spark.functions import s2cell as S2
 from matrixone_spark.functions.geo import (
     EARTH_RADIUS_M,
     _geohash_decode,
@@ -267,10 +283,11 @@ def _overlay(op):
 
 
 # ------------------------------------------------------------- spec -------
-# name -> (return_type, arity, kernel(*decoded_args))
-# Kernels receive python objects (str/float/bytes/None); returning None maps
-# to SQL NULL. Exceptions also map to NULL (the reference errors; the
-# replay grades those rows ref_error against the .result file).
+# name -> (return_type, arity, kernel(*decoded_args)), run through
+# _lenient. Kernels receive python objects (str/float/bytes/None);
+# returning None maps to SQL NULL. Exceptions also map to NULL (the
+# reference errors; the replay grades those rows ref_error against the
+# .result file).
 
 _G = StringType()
 
@@ -421,73 +438,144 @@ _SPEC: "dict[str, tuple[object, int, object]]" = {
             _geohash_decode(str(gh)))),
 }
 
-# translate() pads calls to these names with trailing NULLs up to the
-# registered arity (Spark SQL UDFs are fixed-arity, MySQL's are not)
-GEO_SQL_ARITY = {name: spec[1] for name, spec in _SPEC.items()}
-
-# process-local count of swallowed kernel exceptions (executor-side in
-# local mode); lets tests distinguish intentional NULL rows from bugs.
-_KERNEL_ERRORS = [0]
 
 
-def _make_udf(rettype, arity, kernel):
-    # object dtype for every return type: lets None coexist with str/bytes/
-    # float in the same Series; Arrow coerces to the declared Spark type.
-    dtype = "object"
+# ------------------------------------------------------- S2 / H3 cells ----
+# name -> (return_type, kernel(*args)), run through _strict. Optional
+# reference arguments are the kernels' defaults: h3_h3index(p) is
+# resolution 15, h3_h3index_parent(c) the immediate parent (-1).
 
-    def run(*cols):
-        out = []
-        for vals in zip(*cols):
-            args = [None if (v is None or (isinstance(v, float) and pd.isna(v))) else v
-                    for v in vals]
-            # trailing padded NULLs are "argument omitted"
-            while args and args[-1] is None and len(args) > 1:
-                args.pop()
-            if args and args[0] is None:
-                out.append(None)
-                continue
-            try:
-                r = kernel(*args)
-            except Exception:
-                # NULL-on-error matches the reference's st_* reject rows,
-                # but count it so kernel bugs stay observable (see
-                # GEO_SQL_KERNEL_ERRORS in tests / debugging sessions).
-                _KERNEL_ERRORS[0] += 1
-                r = None
-            out.append(r)
-        return pd.Series(out, dtype=dtype)
-
-    if arity == 1:
-        @pandas_udf(rettype)
-        def u(a: pd.Series) -> pd.Series:
-            return run(a)
-    elif arity == 2:
-        @pandas_udf(rettype)
-        def u(a: pd.Series, b: pd.Series) -> pd.Series:
-            return run(a, b)
-    elif arity == 3:
-        @pandas_udf(rettype)
-        def u(a: pd.Series, b: pd.Series, c: pd.Series) -> pd.Series:
-            return run(a, b, c)
-    else:
-        @pandas_udf(rettype)
-        def u(a: pd.Series, b: pd.Series, c: pd.Series, d: pd.Series) -> pd.Series:
-            return run(a, b, c, d)
-    return u
+_DEC20 = DecimalType(20, 0)
 
 
-def register_geo_sql(spark) -> None:
-    """Register every st_* SQL UDF on the session (idempotent)."""
-    tag = "_mospark_geo_sql_registered"
-    jconf = spark.conf
-    try:
-        if jconf.get(f"spark.{tag}", None) == "1":
-            return
-    except Exception:
-        pass
-    for name, (rettype, arity, kernel) in _SPEC.items():
-        spark.udf.register(name, _make_udf(rettype, arity, kernel))
-    try:
-        jconf.set(f"spark.{tag}", "1")
-    except Exception:
-        pass
+def _cell_point(v):
+    """(lon, lat) of a POINT argument to the cell functions."""
+    kind, data = _geom(v)
+    if kind != "POINT" or data is None:
+        raise ValueError("invalid point payload")
+    return float(data[0]), float(data[1])
+
+
+def _s2_cellid(v):
+    lon, lat = _cell_point(v)
+    if not (math.isfinite(lon) and math.isfinite(lat)):
+        raise ValueError(f"longitude/latitude is not finite: ({lon}, {lat})")
+    if abs(lat) > 90.0 or abs(lon) > 180.0:
+        raise ValueError(f"longitude/latitude out of range: ({lon:g}, {lat:g})")
+    return decimal.Decimal(S2.cellid_from_lonlat(lon, lat))
+
+
+def _h3_h3index(v, res=15):
+    lon, lat = _cell_point(v)
+    return decimal.Decimal(H3.latlng_to_cell(lat, lon, int(res)))
+
+
+def _h3_resolution(c):
+    H3._require_valid(int(c))
+    return H3.get_resolution(int(c))
+
+
+def _h3_parent(c, res=-1):
+    res = int(res)
+    return decimal.Decimal(H3.cell_to_parent(int(c), None if res < 0 else res))
+
+
+def _h3_center(c):
+    lat, lng = H3.cell_to_latlng(int(c))
+    return GL.render_wkt(("POINT", (lng, lat)))
+
+
+def _st_point(x, y):
+    x, y = float(x), float(y)
+    if not (math.isfinite(x) and math.isfinite(y)):
+        raise ValueError(f"longitude/latitude is not finite: ({x}, {y})")
+    return GL.render_wkt(("POINT", (x, y)))
+
+
+def _f32(v):
+    return struct.unpack("f", struct.pack("f", float(v)))[0]
+
+
+def _s2_neighbours(c):
+    return json.dumps(S2.cell_edge_neighbors(int(c)))
+
+
+def _s2_all_neighbours(c):
+    return json.dumps(S2.cell_all_neighbors(int(c)))
+
+
+def _s2_are_neighbours(a, b):
+    return S2.cells_are_neighbors(int(a), int(b))
+
+
+def _h3_neighbours(c):
+    return json.dumps(H3.grid_neighbors(int(c)))
+
+
+def _h3_are_neighbours(a, b):
+    return H3.are_neighbor_cells(int(a), int(b))
+
+
+_CELL_SPEC: "dict[str, tuple[object, object]]" = {
+    "st_point": (_G, _st_point),
+    # float32 coordinate precision (reference POINT32 / geometry32)
+    "st_point32": (_G, lambda x, y: GL.render_wkt(("POINT", (_f32(x), _f32(y))))),
+    "s2_cellid": (_DEC20, _s2_cellid),
+    "s2_cellid_level": (IntegerType(), lambda c: S2.cell_level(int(c))),
+    "s2_cellid_parent": (
+        _DEC20, lambda c, lvl: decimal.Decimal(S2.cell_parent(int(c), int(lvl)))),
+    "s2_cellid_center": (
+        _G, lambda c: GL.render_wkt(("POINT", S2.cell_center_lonlat(int(c))))),
+    "s2_cellid_area": (DoubleType(), lambda c: S2.cell_approx_area_m2(int(c))),
+    "s2_cellid_edgeneighbours": (_G, _s2_neighbours),
+    "s2_cellid_edgeneighbors": (_G, _s2_neighbours),
+    "s2_cellid_allneighbours": (_G, _s2_all_neighbours),
+    "s2_cellid_allneighbors": (_G, _s2_all_neighbours),
+    "s2_cellid_areneighbours": (BooleanType(), _s2_are_neighbours),
+    "s2_cellid_areneighbors": (BooleanType(), _s2_are_neighbours),
+    "h3_h3index": (_DEC20, _h3_h3index),
+    "h3_h3index_resolution": (IntegerType(), _h3_resolution),
+    "h3_h3index_parent": (_DEC20, _h3_parent),
+    "h3_h3index_center": (_G, _h3_center),
+    "h3_h3index_boundary": (
+        _G, lambda c: GL.render_wkt(
+            ("MULTIPOINT", [(lng, lat) for lat, lng in H3.cell_boundary(int(c))]))),
+    "h3_h3index_neighbours": (_G, _h3_neighbours),
+    "h3_h3index_neighbors": (_G, _h3_neighbours),
+    "h3_h3index_areneighbours": (BooleanType(), _h3_are_neighbours),
+    "h3_h3index_areneighbors": (BooleanType(), _h3_are_neighbours),
+}
+
+
+# ------------------------------------------------------ row semantics ----
+
+
+def _lenient(kernel, arity):
+    def row(*args):
+        if len(args) > arity:
+            raise TypeError(f"takes at most {arity} arguments ({len(args)} given)")
+        args = list(args)
+        while len(args) > 1 and args[-1] is None:
+            args.pop()  # trailing NULLs are "argument omitted"
+        if args and args[0] is None:
+            return None
+        try:
+            return kernel(*args)
+        except Exception:  # noqa: BLE001 — the reference's st_* reject rows
+            return None
+
+    return row
+
+
+def _strict(kernel):
+    def row(*args):
+        return None if any(a is None for a in args) else kernel(*args)
+
+    return row
+
+
+# (name, row kernel, return type) rows for sql_surface.register_spark
+SQL_UDFS = [
+    (name, _lenient(kernel, arity), rettype)
+    for name, (rettype, arity, kernel) in _SPEC.items()
+] + [(name, _strict(kernel), rettype) for name, (rettype, kernel) in _CELL_SPEC.items()]

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, StringType
 
-from matrixone_spark.functions import col_of
+from matrixone_spark.functions import arrow_udf, col_of
 
 
 def _dumps(obj) -> str:
@@ -670,15 +670,10 @@ def mysql_json_extract_str(doc: "str | None", path: "str | None") -> "str | None
     return _mysql_dumps(matches[0])
 
 
-@pandas_udf(StringType())
-def _mo_json_extract_udf(docs: pd.Series, paths: pd.Series) -> pd.Series:
-    out = []
-    for d, p in zip(docs, paths):
-        # invalid paths / invalid JSON documents propagate: MySQL and the
-        # reference error the whole statement (the BVT replay grades the
-        # pair as both-error), they do not yield NULL rows.
-        out.append(mysql_json_extract_str(d, p))
-    return pd.Series(out, dtype=object)
+# invalid paths / invalid JSON documents propagate: MySQL and the
+# reference error the whole statement (the BVT replay grades the pair as
+# both-error), they do not yield NULL rows.
+_mo_json_extract_udf = arrow_udf(mysql_json_extract_str, StringType())
 
 
 def mo_json_extract(doc, path) -> Column:

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType, StringType
 
-from matrixone_spark.functions import col_of
+from matrixone_spark.functions import arrow_udf, col_of
 
 
 # ---------------------------------------------------------------- comparison
@@ -115,15 +115,7 @@ def _to_base_str(v: int, b: int) -> str:
     return "".join(reversed(out))
 
 
-@pandas_udf(StringType())
-def _conv_udf(n: pd.Series, fb: pd.Series, tb: pd.Series) -> pd.Series:
-    out = []
-    for x, f, t in zip(n, fb, tb):
-        if x is None or (isinstance(x, float) and pd.isna(x)) or pd.isna(f) or pd.isna(t):
-            out.append(None)
-        else:
-            out.append(_conv_scalar(x, f, t))
-    return pd.Series(out, dtype=object)
+_conv_udf = arrow_udf(_conv_scalar, StringType())
 
 
 def conv(x, from_base: int, to_base: int) -> Column:

@@ -19,9 +19,11 @@ functions BY NAME.  This module registers the names, in two tiers:
    (``con.create_function``), so the two replay engines agree by
    construction.
 
-Spark resolves ``system.builtin`` BEFORE session functions, so only names
-Spark does NOT define can live here; builtin-colliding names (dayname,
-date_add, to_date, …) keep their mysql_dialect compose rewrites.  DuckDB-
+``spark.udf.register`` replaces a same-named Spark builtin for the
+session (st_asbinary, st_geomfromwkb and st_srid are deliberate overrides
+of Spark 4.1 builtins), but ``CREATE TEMPORARY FUNCTION`` cannot, so
+builtin-colliding names with pure-SQL semantics (dayname, date_add,
+to_date, …) keep their mysql_dialect compose rewrites.  DuckDB-
 colliding names (week, microsecond, format, …) are renamed ``mo_*`` by
 ``bvt_runner._duckify`` before reaching DuckDB.
 
@@ -35,8 +37,6 @@ import ipaddress
 import json
 import re
 import zlib
-
-import pandas as pd  # module-level: pandas_udf resolves the hint strings here
 
 # --------------------------------------------------------------------------
 # Tier 1: pure-SQL bodies.  SPARK_SQL entries are full CREATE statements;
@@ -1820,80 +1820,49 @@ DUCK_RENAMES = {
 }
 
 
-def register_spark(spark) -> None:
-    """Register the full SQL-text surface on a SparkSession: pure-SQL
-    functions first (Catalyst-inlined), then the Arrow-batched kernels."""
-    from pyspark.sql.functions import pandas_udf
+def spark_udfs() -> "list[tuple[str, object, object]]":
+    """The kernel table: one ``(SQL name, row kernel, Spark return type)``
+    row per Arrow-batched SQL function — PYFUNCS, the geo spec, the MySQL
+    CONV and JSON path kernels, and UNNEST."""
     from pyspark.sql.types import (
-        BinaryType, BooleanType, DoubleType, IntegerType, LongType, StringType,
+        ArrayType, BinaryType, BooleanType, DoubleType, IntegerType, LongType,
+        StringType, StructField, StructType,
     )
 
-    for ddl in SPARK_SQL:
-        spark.sql(ddl)
+    from matrixone_spark.functions.geo_sql import SQL_UDFS as GEO_UDFS
+    from matrixone_spark.functions.json_fns import mysql_json_extract_str
+    from matrixone_spark.functions.mysql import _conv_scalar
 
-    _SPARK_T = {
+    spark_t = {
         "STRING": StringType(), "BOOLEAN": BooleanType(), "INT": IntegerType(),
         "BIGINT": LongType(), "DOUBLE": DoubleType(), "BINARY": BinaryType(),
     }
-
-    def _wrap(fn, arity, ret):
-        if arity == 1:
-            def run(a: pd.Series) -> pd.Series:
-                return pd.Series([fn(_cell(x)) for x in a], dtype=object)
-        elif arity == 2:
-            def run(a: pd.Series, b: pd.Series) -> pd.Series:
-                return pd.Series(
-                    [fn(_cell(x), _cell(y)) for x, y in zip(a, b)], dtype=object
-                )
-        elif arity == 3:
-            def run(a: pd.Series, b: pd.Series, c: pd.Series) -> pd.Series:
-                return pd.Series(
-                    [fn(_cell(x), _cell(y), _cell(z))
-                     for x, y, z in zip(a, b, c)],
-                    dtype=object,
-                )
-        else:
-            def run(a: pd.Series, b: pd.Series, c: pd.Series,
-                    d: pd.Series) -> pd.Series:
-                return pd.Series(
-                    [fn(_cell(x), _cell(y), _cell(z), _cell(w))
-                     for x, y, z, w in zip(a, b, c, d)],
-                    dtype=object,
-                )
-        return pandas_udf(ret)(run)
-
-    def _cell(x):
-        import pandas as _pd
-
-        if x is None or (isinstance(x, float) and _pd.isna(x)):
-            return None
-        return x
-
-    for name, fn, argts, ret in PYFUNCS:
-        spark.udf.register(name, _wrap(fn, len(argts), _SPARK_T[ret[0]]))
-
     # UNNEST table function: ARRAY<STRUCT> terminal for inline()
-    from pyspark.sql.types import ArrayType, StructField, StructType
-
-    _UNNEST_T = ArrayType(StructType([
-        StructField("col", StringType()),
-        StructField("seq", IntegerType()),
-        StructField("key", StringType()),
-        StructField("path", StringType()),
-        StructField("index", StringType()),
-        StructField("value", StringType()),
-        StructField("this", StringType()),
+    unnest_t = ArrayType(StructType([
+        StructField(f, IntegerType() if f == "seq" else StringType())
+        for f in ("col", "seq", "key", "path", "index", "value", "this")
     ]))
+    return (
+        [(name, fn, spark_t[ret[0]]) for name, fn, _argts, ret in PYFUNCS]
+        + GEO_UDFS
+        + [
+            ("mo_conv", _conv_scalar, StringType()),
+            ("mo_json_extract", mysql_json_extract_str, StringType()),
+            ("mo_unnest", lambda d, p, o, c: _k_unnest(d, p, bool(o), c), unnest_t),
+        ]
+    )
 
-    def _unnest_run(d: pd.Series, p: pd.Series, o: pd.Series,
-                    c: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_k_unnest(dd, pp, bool(oo) if oo is not None else False, cc)
-             for dd, pp, oo, cc in zip(d, p, o, c)],
-            dtype=object,
-        )
 
-    spark.udf.register("mo_unnest", pandas_udf(_UNNEST_T)(_unnest_run))
+def register_spark(spark) -> None:
+    """Register the full SQL-text surface on a SparkSession: pure-SQL
+    functions first (Catalyst-inlined), then every kernel-table row as one
+    variadic Arrow-batched UDF."""
+    from matrixone_spark.functions import arrow_udf
+
+    for ddl in SPARK_SQL:
+        spark.sql(ddl)
+    for name, kernel, ret in spark_udfs():
+        spark.udf.register(name, arrow_udf(kernel, ret))
 
 
 def register_duck(con) -> None:

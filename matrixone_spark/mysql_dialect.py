@@ -731,7 +731,7 @@ _FN_RENAME_RE = re.compile(
 _FN_COMPOSE_RE = re.compile(
     r"\b(field|oct|ord|conv|export_set|make_set|random_bytes"
     r"|validate_password_strength|insert|in_range|if|dayname|monthname|bitmap_bit_position|bitmap_bucket_number"
-    r"|h3_h3index_parent|h3_h3index|json_length|json_extract|json_unquote"
+    r"|json_length|json_extract|json_unquote"
     r"|quote|convert|yearweek|week|utc_time|curtime|utc_timestamp|format"
     r"|from_base64|subvector|unnest"
     r"|json_object|json_arrayagg|json_objectagg|json_array|mo_jarragg_ord"
@@ -1399,12 +1399,6 @@ def _compose_fn(
         )
     if name == "oct" and len(args) == 1:
         return f"mo_conv(CAST({args[0]} AS STRING), 10, 8)"
-    # SQL-registered cell UDFs have fixed arity (functions/sql_udfs.py);
-    # normalize the reference's optional-argument forms here.
-    if name == "h3_h3index" and len(args) == 1:
-        return f"h3_h3index({args[0]}, 15)"
-    if name == "h3_h3index_parent" and len(args) == 1:
-        return f"h3_h3index_parent({args[0]}, -1)"
     if name == "json_length" and len(args) == 1:
         x = args[0]
         return (
@@ -3249,7 +3243,6 @@ _JSON_EXTRACT_RE = re.compile(r"\b(json_extract)\s*\(", re.IGNORECASE)
 _JE_CMP_RE = re.compile(
     r"(mo_json_extract\s*\([^()]*\))\s*(=|<>|!=)\s*\x01(\d+)\x01", re.IGNORECASE
 )
-_GEO_FN_RE = re.compile(r"\b(st_[a-z0-9_]+)\s*\(", re.IGNORECASE)
 _REPEAT_RE = re.compile(
     r"(?<![\w.])(repeat|space|split_part|median)\s*\(", re.IGNORECASE
 )
@@ -3314,29 +3307,6 @@ def rewrite_repeat_clamp(masked: str, engine: str = "spark") -> str:
         )
 
     return _rewrite_calls(masked, _REPEAT_RE, None, per_name_builder=build)
-
-
-def _pad_geo_args(masked: str) -> str:
-    """Pad st_* calls with trailing NULLs to the registered UDF arity.
-
-    MySQL's geo functions take optional arguments (st_geomfromtext(wkt[,
-    srid]), st_buffer(g, d[, quads])); Spark SQL UDF registration is
-    fixed-arity, so geo_sql registers the max form and kernels treat
-    trailing NULLs as omitted. Fixpoint: one _rewrite_calls pass skips
-    calls nested inside a rewritten outer call."""
-    from matrixone_spark.functions.geo_sql import GEO_SQL_ARITY
-
-    def build(name, args):
-        n = GEO_SQL_ARITY.get(name.lower())
-        if n is None or len(args) >= n or (len(args) == 1 and not args[0].strip()):
-            return None
-        return f"{name}(" + ", ".join(args + ["NULL"] * (n - len(args))) + ")"
-
-    prev = None
-    while prev != masked:
-        prev = masked
-        masked = _rewrite_calls(masked, _GEO_FN_RE, None, per_name_builder=build)
-    return masked
 
 
 _CHAR_FN_RE = re.compile(r"\bchar\s*\(", re.IGNORECASE)
@@ -3615,8 +3585,6 @@ def translate(sql: str) -> str:
                 else None
             ),
         )
-    if "st_" in masked.lower():
-        masked = _pad_geo_args(masked)
     if _REPEAT_RE.search(masked):
         masked = rewrite_repeat_clamp(masked)
     masked = rewrite_limit(masked)

@@ -48,8 +48,9 @@ def register(name: str, oracle: "str | None", tags: tuple = (), doc: str = ""):
     …) on whatever session it is handed: the driver contract supplies an
     ARBITRARY SparkSession, not our get_spark one, so a translate-based
     query must never assume the session was pre-provisioned (round-4 red
-    row: UNRESOLVED_ROUTINE mo_conv). _ensure_sql_udfs is a per-session-id
-    no-op after the first call, so this costs nothing on the hot path."""
+    row: UNRESOLVED_ROUTINE mo_conv). _ensure_sql_udfs is a no-op after the
+    first call on a session (a session-scoped conf tag), so this costs
+    nothing on the hot path."""
 
     def deco(fn):
         if name in REGISTRY:

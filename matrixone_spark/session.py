@@ -83,15 +83,16 @@ def get_spark(app_name: str = "mospark", master: str | None = None) -> SparkSess
 
 
 def _ensure_sql_udfs(spark: SparkSession) -> None:
-    """Register pandas-UDF-backed MySQL functions for SQL-text use.
+    """Register the SQL-text function surface (functions/sql_surface.py)
+    on ``spark``.
 
-    Idempotent and cheap when already done (per-session-id guard): besides
+    Idempotent and cheap when already done (conf-tag guard): besides
     get_spark, EVERY registry query calls this on its way in (queries/
     __init__.py register wrapper), because the driver contract hands queries
     an arbitrary SparkSession — round-4's only red driver row was a
     translate-based query assuming get_spark had pre-registered mo_conv.
     Only functions whose MySQL semantics can't be expressed as a Spark-SQL
-    rewrite live here — the dialect layer routes their names to the mo_*
+    rewrite live there — the dialect layer routes their names to those
     registrations.
 
     The done-marker is a session-scoped conf tag (RuntimeConfig is
@@ -104,16 +105,8 @@ def _ensure_sql_udfs(spark: SparkSession) -> None:
             return
     except Exception:
         pass
-    from matrixone_spark.functions.geo_sql import register_geo_sql
-    from matrixone_spark.functions.json_fns import _mo_json_extract_udf
-    from matrixone_spark.functions.mysql import _conv_udf
     from matrixone_spark.functions.sql_surface import register_spark
-    from matrixone_spark.functions.sql_udfs import register_all
 
-    spark.udf.register("mo_conv", _conv_udf)
-    spark.udf.register("mo_json_extract", _mo_json_extract_udf)
-    register_all(spark)
-    register_geo_sql(spark)
     register_spark(spark)
     try:
         spark.conf.set(tag, "1")

@@ -21,3 +21,19 @@ def test_udf_queries_on_raw_session(spark, registry, name):
     assert raw is not spark
     rows = registry[name].fn(raw, SF_DIR).limit(5).collect()
     assert rows is not None and len(rows) > 0
+
+
+def test_sql_function_table_registers_once(spark):
+    """One kernel table registers the SQL-text surface on a fresh session:
+    no name appears twice, every name resolves, and the only Spark builtins
+    it replaces are the three deliberate geo overrides."""
+    from matrixone_spark.functions.sql_surface import spark_udfs
+    from matrixone_spark.session import _ensure_sql_udfs
+
+    raw = spark.newSession()
+    builtins = {r[0] for r in raw.sql("SHOW SYSTEM FUNCTIONS").collect()}
+    _ensure_sql_udfs(raw)
+    names = [name for name, _kernel, _ret in spark_udfs()]
+    assert len(names) == len(set(names))
+    assert [n for n in names if not raw.catalog.functionExists(n)] == []
+    assert set(names) & builtins == {"st_asbinary", "st_geomfromwkb", "st_srid"}

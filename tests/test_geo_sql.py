@@ -125,3 +125,52 @@ def test_length_is_bytes(spark):
     sql = translate("select length('中文') as b, char_length('中文') as c")
     row = spark.sql(sql).collect()[0]
     assert (row.b, row.c) == (6, 2)
+
+
+# ---- edge semantics of the SQL-registered function rows ---------------------
+# Each row pins what translate() + spark.sql return for an argument-count,
+# NULL or error edge: too many arguments fail the statement, omitted
+# trailing arguments take the kernel's default, geo accessors answer NULL
+# on a wrong-kind or malformed input, and the S2/H3 cell family raises on
+# invalid input.
+
+_FAILS = object()
+
+
+def _polygon(v):
+    return isinstance(v, str) and v.startswith("POLYGON")
+
+
+@pytest.mark.parametrize(
+    "sql, expected",
+    [
+        ("select st_x(st_geomfromtext('POINT(1 2)'), 5)", (_FAILS, None)),
+        (
+            "select st_distance_sphere(st_geomfromtext('POINT(0 0)'),"
+            " st_geomfromtext('POINT(1 0)'), 5)",
+            (_FAILS, None),
+        ),
+        ("select st_x('LINESTRING(0 0,1 1)')", None),
+        ("select st_pointn(st_geomfromtext('LINESTRING(0 0,1 1)'))", None),
+        ("select st_astext(st_geomfromtext('POINT(1 2)', NULL))", "POINT(1 2)"),
+        ("select st_astext(CAST('POINT(7 8)' AS GEOMETRY))", "POINT(7 8)"),
+        ("select st_buffer(st_geomfromtext('POINT(0 0)'), 1)", _polygon),
+        ("select h3_h3index(st_point(1.0, 2.0))", 646077806716512457),
+        (
+            "select h3_h3index_parent(h3_h3index(st_point(1.0, 2.0), 5))",
+            596538212583735295,
+        ),
+        ("select h3_h3index_resolution(0)", (_FAILS, "invalid H3Index: 0")),
+        ("select s2_cellid(st_point(200.0, 2.0))", (_FAILS, "out of range")),
+        ("select s2_cellid_level(NULL)", None),
+        ("select mo_conv('17', -10, 16)", "11"),
+    ],
+)
+def test_sql_function_edge_semantics(spark, sql, expected):
+    if isinstance(expected, tuple) and expected[0] is _FAILS:
+        with pytest.raises(Exception, match=expected[1]):
+            _one(spark, sql)
+    elif callable(expected):
+        assert expected(_one(spark, sql))
+    else:
+        assert _one(spark, sql) == expected

@@ -9,12 +9,12 @@ Usage:
 Round directory from $SPARK_GRAFT_PLAN_ROUND (default r13).
 
 ``compare`` pairs the files of two dump directories by name, normalises
-expression ids (``#123``), exchange plan ids, codegen and query-stage ids,
-the checkout root of layout-cache paths and lambda variable names
-(``lambda x_2#1440`` becomes ``lambda λ1``, numbered by first appearance
-in the file, so the binding structure is kept), prints a unified diff per
-differing plan and a summary line, and exits 1 on any difference or
-unpaired file.
+expression ids (``#123``), exchange plan ids, RDD ids, codegen and
+query-stage ids, the checkout root of layout-cache paths and lambda
+variable names (``lambda x_2#1440`` becomes ``lambda λ1``, numbered by
+first appearance in the file, so the binding structure is kept), prints a
+unified diff per differing plan and a summary line, and exits 1 on any
+difference or unpaired file.
 """
 
 from __future__ import annotations
@@ -30,6 +30,9 @@ from matrixone_spark.session import get_spark
 _LAMBDA_VAR = re.compile(r"lambda ([A-Za-z_][A-Za-z_0-9]*#\d+)")
 _EXPR_ID = re.compile(r"#\d+")
 _PLAN_ID = re.compile(r"plan_id=\d+")
+# scans of checkpointed or Python-built frames name their RDD, numbered in
+# creation order across the whole process
+_RDD_ID = re.compile(r"RDD\[\d+\]")
 _CHECKOUT = re.compile(r"file:\S*?/\.layout_cache/")
 # AQE numbers codegen stages and query stages in the order stages finish,
 # which varies run to run on the same code
@@ -45,6 +48,7 @@ def normalize_plan(text: str) -> str:
 
     text = _EXPR_ID.sub("#N", _LAMBDA_VAR.sub(canon, text))
     text = _CHECKOUT.sub("file:.../.layout_cache/", _PLAN_ID.sub("plan_id=N", text))
+    text = _RDD_ID.sub("RDD[N]", text)
     return _STAGE_ID.sub(r"\1Arguments: N", _CODEGEN_ID.sub("codegen id : N", text))
 
 
