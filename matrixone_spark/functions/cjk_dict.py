@@ -12,7 +12,7 @@ single-character tokens). No reference code was consulted; the algorithm
 is as published (Sun Junyi's jieba README and standard NLP texts describe
 it; it is also the classic "unigram language model" segmenter).
 
-Scale notes: segmentation runs as an Arrow-batched pandas UDF — the
+Scale notes: segmentation runs as an Arrow-batched row kernel — the
 prefix dictionary is a plain Python dict living in the UDF closure,
 broadcast once per executor by Spark's task serialization; per-batch cost
 is linear in text length × max word length (4 here). At 100 TB the
@@ -32,13 +32,10 @@ from __future__ import annotations
 import math
 from functools import lru_cache
 
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
 
-from matrixone_spark.functions import col_of
+from matrixone_spark.functions import _strict, arrow_udf, col_of
 
 # word -> relative frequency. Rough magnitudes are enough: the DP only
 # compares log-frequencies, and ties never arise between a multi-char word
@@ -263,17 +260,16 @@ def make_tokenizer(words: "dict[str, int] | None" = None):
     else:
         prefix, logtotal = build_prefix_dict(words)
 
-    @pandas_udf(ArrayType(StringType()))
-    def dict_tokens(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: None if t is None else cut_mixed_dict(t, prefix, logtotal))
+    def _k_dict_tokens(t):
+        return cut_mixed_dict(t, prefix, logtotal)
 
-    @pandas_udf(_POS_SCHEMA)
-    def dict_tokens_pos(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda t: None if t is None else cut_mixed_dict_pos(t, prefix, logtotal)
-        )
+    def _k_dict_tokens_pos(t):
+        return cut_mixed_dict_pos(t, prefix, logtotal)
 
-    return dict_tokens, dict_tokens_pos
+    return (
+        arrow_udf(_strict(_k_dict_tokens), ArrayType(StringType())),
+        arrow_udf(_strict(_k_dict_tokens_pos), _POS_SCHEMA),
+    )
 
 
 @lru_cache(maxsize=1)

@@ -14,11 +14,11 @@ declared out of round-1 scope (SURVEY §2.12).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, DoubleType, StringType
 
-from matrixone_spark.functions import col_of
+from matrixone_spark.functions import _strict, arrow_udf, col_of
 
 
 def st_point(x, y) -> Column:
@@ -478,48 +478,34 @@ def _geohash_decode(gh: str) -> "tuple[float, float] | None":
     return ((lo_lon + hi_lon) / 2, (lo_lat + hi_lat) / 2)
 
 
+def _k_geohash_lon(gh):
+    return (_geohash_decode(str(gh)) or (None, None))[0]
+
+
+def _k_geohash_lat(gh):
+    return (_geohash_decode(str(gh)) or (None, None))[1]
+
+
+_geohash_lon_udf = arrow_udf(_strict(_k_geohash_lon), DoubleType())
+_geohash_lat_udf = arrow_udf(_strict(_k_geohash_lat), DoubleType())
+
+
 def st_geohash(lon, lat, precision: int = 9) -> Column:
     """Geohash of lon/lat (cell-prefix property: shared prefixes = nearby
     cells — the bucketing key for geo joins at scale)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StringType
 
-    @pandas_udf(StringType())
-    def enc(lons: pd.Series, lats: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_geohash_encode(lo, la, precision) for lo, la in zip(lons, lats)],
-            dtype="object",
-        )
+    def _k_geohash(lo, la):
+        return _geohash_encode(lo, la, precision)
 
-    return enc(col_of(lon), col_of(lat))
+    return arrow_udf(_k_geohash, StringType())(col_of(lon), col_of(lat))
 
 
 def st_longfromgeohash(gh) -> Column:
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def dec(ghs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [(r[0] if (r := _geohash_decode(g)) else None) for g in ghs],
-            dtype="float64",
-        )
-
-    return dec(col_of(gh))
+    return _geohash_lon_udf(col_of(gh))
 
 
 def st_latfromgeohash(gh) -> Column:
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def dec(ghs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [(r[1] if (r := _geohash_decode(g)) else None) for g in ghs],
-            dtype="float64",
-        )
-
-    return dec(col_of(gh))
+    return _geohash_lat_udf(col_of(gh))
 
 
 def st_pointfromgeohash(gh) -> Column:
@@ -560,7 +546,7 @@ def mbr_overlaps(a, b) -> Column:
 # WKB codec + WKT constructor/accessor long tail (function_id.go st_* family).
 # WKB layout (OGC): byte order (01=LE), geometry type uint32, then f64
 # coordinates; polygons carry ring count + per-ring point counts. Codec runs
-# as Arrow-batched pandas UDFs over the WKT rendering (multimodal-operator
+# as Arrow-batched row kernels over the WKT rendering (multimodal-operator
 # precedent) since binary packing has no Column-expression form; everything
 # else below stays pure expressions.
 # ---------------------------------------------------------------------------
@@ -639,41 +625,19 @@ def _wkb_to_wkt_py(raw: "bytes | None") -> "str | None":
         return None
 
 
+_wkt_to_wkb_udf = arrow_udf(_wkt_to_wkb_py, BinaryType())
+_wkb_to_wkt_udf = arrow_udf(_wkb_to_wkt_py, StringType())
+
+
 def st_aswkb(g) -> Column:
     """ST_AsWKB/ST_AsBinary: geometry struct → OGC WKB (little-endian)."""
-    import pandas as _pd
-    from pyspark.sql.functions import pandas_udf as _pudf
-    from pyspark.sql.types import BinaryType
-
-    @_pudf(BinaryType())
-    def enc(ss):
-        return ss.map(_wkt_to_wkb_py)
-
-    return enc(st_astext(g))
-
-
-st_asbinary = st_aswkb
-
-
-def _wkb_to_wkt(col) -> Column:
-    import pandas as _pd
-    from pyspark.sql.functions import pandas_udf as _pudf
-    from pyspark.sql.types import StringType
-
-    @_pudf(StringType())
-    def dec(ss):
-        return ss.map(lambda b: _wkb_to_wkt_py(bytes(b) if b is not None else None))
-
-    return dec(col_of(col))
+    return _wkt_to_wkb_udf(st_astext(g))
 
 
 def st_geomfromwkb(b) -> Column:
     """ST_GeomFromWKB/ST_GeomFromBinary: WKB → geometry struct (NULL on
     malformed/unsupported input, the reference's per-row error analogue)."""
-    return st_geomfromtext(_wkb_to_wkt(b))
-
-
-st_geomfrombinary = st_geomfromwkb
+    return st_geomfromtext(_wkb_to_wkt_udf(col_of(b)))
 
 
 def _typed(g: Column, expect: str) -> Column:
@@ -688,14 +652,8 @@ def st_linestringfromwkb(b) -> Column:
     return _typed(st_geomfromwkb(b), "LINESTRING")
 
 
-st_linefromwkb = st_linestringfromwkb
-
-
 def st_polygonfromwkb(b) -> Column:
     return _typed(st_geomfromwkb(b), "POLYGON")
-
-
-st_polyfromwkb = st_polygonfromwkb
 
 
 def st_geometryfromtext(wkt) -> Column:
@@ -714,9 +672,6 @@ def st_linestringfromtext(wkt) -> Column:
 
 def st_polygonfromtext(wkt) -> Column:
     return _typed(st_geomfromtext(wkt), "POLYGON")
-
-
-st_aswkt = st_astext
 
 
 def st_longitude(g) -> Column:
@@ -754,9 +709,6 @@ def st_numinteriorrings(g) -> Column:
     """Outer-ring-only representation ⇒ polygons report 0 interior rings."""
     g = col_of(g)
     return F.when(g.gtype == "POLYGON", F.lit(0))
-
-
-st_numinteriorring = st_numinteriorrings
 
 
 def st_srid(g) -> Column:

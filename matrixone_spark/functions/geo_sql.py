@@ -1,14 +1,15 @@
 """SQL-registered geo UDF surface (st_*, s2_* and h3_* names callable from
 spark.sql).
 
-The DataFrame-level geo model lives in functions/geo.py / geo_ops.py /
-geomlib.py / s2cell.py / h3cell.py; this module exposes the same kernels
-under their MySQL-dialect names so the BVT replay
-(test/distributed/cases/geo/*.sql) and any translate()-based query can call
-them as plain SQL functions. Reference surface:
-pkg/sql/plan/function/func_geo*.go (st_* registrations in function_id.go)
-and func_s2h3.go:300-616 (the S2/H3 cell wrappers); semantics are the
-geomlib clean-room kernels already oracle-gated by the geofull batteries.
+The DataFrame-level geo builders live in functions/geo.py, s2cell.py and
+h3cell.py, and the geofull batteries call the geomlib.py kernel directly;
+this module exposes geomlib and the cell kernels under their MySQL-dialect
+names so the BVT replay (test/distributed/cases/geo/*.sql) and any
+translate()-based query can call them as plain SQL functions. Reference
+surface: pkg/sql/plan/function/func_geo*.go (st_* registrations in
+function_id.go) and func_s2h3.go:300-616 (the S2/H3 cell wrappers);
+semantics are the geomlib clean-room kernels already oracle-gated by the
+geofull batteries.
 
 ``SQL_UDFS`` is this module's part of the one kernel table that
 ``sql_surface.register_spark`` registers. Each row's kernel takes one
@@ -18,13 +19,14 @@ argument per SQL argument and carries its MySQL row semantics:
   NULLs count as omitted (the kernel's own defaults apply), and a kernel
   exception gives NULL; more arguments than the spec's arity fail the
   statement.
-- ``_strict`` (S2/H3 cells, st_point, st_point32): any NULL argument gives
-  NULL, and invalid input raises, matching the reference's error contract
-  (``invalid H3Index: 0`` etc.) so the statement fails where the
+- ``functions._strict`` (S2/H3 cells, st_point, st_point32; the cell rows
+  share their kernels with the s2cell/h3cell builders): any NULL argument
+  gives NULL, and invalid input raises, matching the reference's error
+  contract (``invalid H3Index: 0`` etc.) so the statement fails where the
   reference's .result shows an error line.
 
 All geometry values travel as EWKT strings ('SRID=n;WKT' or bare WKT),
-the same convention as geo_ops; a CellId/H3Index is DECIMAL(20,0) carrying
+as in the geofull batteries; a CellId/H3Index is DECIMAL(20,0) carrying
 the uint64. At 100 TB these are ordinary per-row scalar transforms over
 string columns — Arrow-batched pandas UDFs, no shuffle, no driver
 round-trips.
@@ -33,7 +35,6 @@ round-trips.
 from __future__ import annotations
 
 import decimal
-import json
 import math
 import struct
 
@@ -47,6 +48,7 @@ from pyspark.sql.types import (
     StringType,
 )
 
+from matrixone_spark.functions import _strict
 from matrixone_spark.functions import geomlib as GL
 from matrixone_spark.functions import h3cell as H3
 from matrixone_spark.functions import s2cell as S2
@@ -54,6 +56,8 @@ from matrixone_spark.functions.geo import (
     EARTH_RADIUS_M,
     _geohash_decode,
     _geohash_encode,
+    _k_geohash_lat,
+    _k_geohash_lon,
 )
 
 # ------------------------------------------------------------- helpers ----
@@ -389,7 +393,7 @@ _SPEC: "dict[str, tuple[object, int, object]]" = {
         DoubleType(), 2, lambda a, b: GL.hausdorff(_geom(a), _geom(b))),
     "st_frechetdistance": (
         DoubleType(), 2, lambda a, b: GL.frechet(_geom(a), _geom(b))),
-    # geometry -> geometry (SRID-preserving, geo_ops convention)
+    # geometry -> geometry (the result keeps the input's SRID prefix)
     "st_centroid": (
         _G, 1, lambda v: (lambda sr, g: _render(sr, GL.centroid(g)))(*_parse(v))),
     "st_envelope": (
@@ -429,10 +433,8 @@ _SPEC: "dict[str, tuple[object, int, object]]" = {
             sr, GL.point_at_distance(g, float(d))))(*_parse(v))),
     # geohash
     "st_geohash": (_G, 3, _geohash),
-    "st_latfromgeohash": (
-        DoubleType(), 1, lambda gh: (_geohash_decode(str(gh)) or (None, None))[1]),
-    "st_longfromgeohash": (
-        DoubleType(), 1, lambda gh: (_geohash_decode(str(gh)) or (None, None))[0]),
+    "st_latfromgeohash": (DoubleType(), 1, _k_geohash_lat),
+    "st_longfromgeohash": (DoubleType(), 1, _k_geohash_lon),
     "st_pointfromgeohash": (
         _G, 1, lambda gh: (lambda ll: GL.render_wkt(("POINT", ll)) if ll else None)(
             _geohash_decode(str(gh)))),
@@ -470,11 +472,6 @@ def _h3_h3index(v, res=15):
     return decimal.Decimal(H3.latlng_to_cell(lat, lon, int(res)))
 
 
-def _h3_resolution(c):
-    H3._require_valid(int(c))
-    return H3.get_resolution(int(c))
-
-
 def _h3_parent(c, res=-1):
     res = int(res)
     return decimal.Decimal(H3.cell_to_parent(int(c), None if res < 0 else res))
@@ -496,26 +493,6 @@ def _f32(v):
     return struct.unpack("f", struct.pack("f", float(v)))[0]
 
 
-def _s2_neighbours(c):
-    return json.dumps(S2.cell_edge_neighbors(int(c)))
-
-
-def _s2_all_neighbours(c):
-    return json.dumps(S2.cell_all_neighbors(int(c)))
-
-
-def _s2_are_neighbours(a, b):
-    return S2.cells_are_neighbors(int(a), int(b))
-
-
-def _h3_neighbours(c):
-    return json.dumps(H3.grid_neighbors(int(c)))
-
-
-def _h3_are_neighbours(a, b):
-    return H3.are_neighbor_cells(int(a), int(b))
-
-
 _CELL_SPEC: "dict[str, tuple[object, object]]" = {
     "st_point": (_G, _st_point),
     # float32 coordinate precision (reference POINT32 / geometry32)
@@ -526,24 +503,24 @@ _CELL_SPEC: "dict[str, tuple[object, object]]" = {
         _DEC20, lambda c, lvl: decimal.Decimal(S2.cell_parent(int(c), int(lvl)))),
     "s2_cellid_center": (
         _G, lambda c: GL.render_wkt(("POINT", S2.cell_center_lonlat(int(c))))),
-    "s2_cellid_area": (DoubleType(), lambda c: S2.cell_approx_area_m2(int(c))),
-    "s2_cellid_edgeneighbours": (_G, _s2_neighbours),
-    "s2_cellid_edgeneighbors": (_G, _s2_neighbours),
-    "s2_cellid_allneighbours": (_G, _s2_all_neighbours),
-    "s2_cellid_allneighbors": (_G, _s2_all_neighbours),
-    "s2_cellid_areneighbours": (BooleanType(), _s2_are_neighbours),
-    "s2_cellid_areneighbors": (BooleanType(), _s2_are_neighbours),
+    "s2_cellid_area": (DoubleType(), S2._k_area),
+    "s2_cellid_edgeneighbours": (_G, S2._k_edge_neighbors),
+    "s2_cellid_edgeneighbors": (_G, S2._k_edge_neighbors),
+    "s2_cellid_allneighbours": (_G, S2._k_all_neighbors),
+    "s2_cellid_allneighbors": (_G, S2._k_all_neighbors),
+    "s2_cellid_areneighbours": (BooleanType(), S2._k_are_neighbors),
+    "s2_cellid_areneighbors": (BooleanType(), S2._k_are_neighbors),
     "h3_h3index": (_DEC20, _h3_h3index),
-    "h3_h3index_resolution": (IntegerType(), _h3_resolution),
+    "h3_h3index_resolution": (IntegerType(), H3._k_resolution),
     "h3_h3index_parent": (_DEC20, _h3_parent),
     "h3_h3index_center": (_G, _h3_center),
     "h3_h3index_boundary": (
         _G, lambda c: GL.render_wkt(
             ("MULTIPOINT", [(lng, lat) for lat, lng in H3.cell_boundary(int(c))]))),
-    "h3_h3index_neighbours": (_G, _h3_neighbours),
-    "h3_h3index_neighbors": (_G, _h3_neighbours),
-    "h3_h3index_areneighbours": (BooleanType(), _h3_are_neighbours),
-    "h3_h3index_areneighbors": (BooleanType(), _h3_are_neighbours),
+    "h3_h3index_neighbours": (_G, H3._k_neighbors),
+    "h3_h3index_neighbors": (_G, H3._k_neighbors),
+    "h3_h3index_areneighbours": (BooleanType(), H3._k_are_neighbors),
+    "h3_h3index_areneighbors": (BooleanType(), H3._k_are_neighbors),
 }
 
 
@@ -563,13 +540,6 @@ def _lenient(kernel, arity):
             return kernel(*args)
         except Exception:  # noqa: BLE001 — the reference's st_* reject rows
             return None
-
-    return row
-
-
-def _strict(kernel):
-    def row(*args):
-        return None if any(a is None for a in args) else kernel(*args)
 
     return row
 

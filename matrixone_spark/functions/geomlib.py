@@ -27,8 +27,9 @@ Geometry value = (gtype, data):
   "GEOMETRYCOLLECTION" -> [geom, ...]
 
 Functions raise ValueError on semantic misuse (messages mirror the
-reference's `invalid input:` text); the Spark wrappers (functions/geo_ops)
-map errors to NULL, the engine's non-throwing batch analogue.
+reference's `invalid input:` text); the Spark callers (the st_* rows of
+functions/geo_sql and the geofull batteries' geo_eval) map errors to NULL,
+the engine's non-throwing batch analogue.
 """
 
 from __future__ import annotations

@@ -3,7 +3,7 @@
 Reference: binary-JSON functions in pkg/sql/plan/function/func_builtin_json.go
 over pkg/container/bytejson/ (json_set/insert/replace/remove/merge_patch...).
 Spark covers extraction (get_json_object, from_json, json_tuple) natively;
-the mutators below are Arrow-batched pandas UDFs over Python's json — the
+the mutators below are Arrow-batched row kernels over Python's json — the
 sanctioned slow path for semantics built-ins can't express (they never sit on
 the 100 TB hot path; extraction does, and stays JVM-side).
 """
@@ -12,14 +12,13 @@ from __future__ import annotations
 
 import json
 import re
+from functools import lru_cache
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, StringType
 
-from matrixone_spark.functions import arrow_udf, col_of
+from matrixone_spark.functions import _strict, arrow_udf, col_of
 
 
 def _dumps(obj) -> str:
@@ -74,25 +73,28 @@ def _walk_set(doc, path: str, value, *, create: bool, replace: bool):
     return doc
 
 
-def _json_mutator(create: bool, replace: bool):
-    @pandas_udf(StringType())
-    def fn(docs: pd.Series, paths: pd.Series, values: pd.Series) -> pd.Series:
-        out = []
-        for d, p, v in zip(docs, paths, values):
-            doc = _loads_or_none(d)
-            if doc is None:
-                out.append(None)
-                continue
-            val = _loads_or_none(v)
-            out.append(_dumps(_walk_set(doc, p, val, create=create, replace=replace)))
-        return pd.Series(out)
-
-    return fn
+def _json_mutate(d, p, v, *, create: bool, replace: bool):
+    doc = _loads_or_none(d)
+    if doc is None:
+        return None
+    return _dumps(_walk_set(doc, p, _loads_or_none(v), create=create, replace=replace))
 
 
-_json_set_udf = _json_mutator(create=True, replace=True)
-_json_insert_udf = _json_mutator(create=True, replace=False)
-_json_replace_udf = _json_mutator(create=False, replace=True)
+def _k_json_set(d, p, v):
+    return _json_mutate(d, p, v, create=True, replace=True)
+
+
+def _k_json_insert(d, p, v):
+    return _json_mutate(d, p, v, create=True, replace=False)
+
+
+def _k_json_replace(d, p, v):
+    return _json_mutate(d, p, v, create=False, replace=True)
+
+
+_json_set_udf = arrow_udf(_k_json_set, StringType())
+_json_insert_udf = arrow_udf(_k_json_insert, StringType())
+_json_replace_udf = arrow_udf(_k_json_replace, StringType())
 
 
 def json_set(doc, path, value) -> Column:
@@ -110,18 +112,16 @@ def json_replace(doc, path, value) -> Column:
     return _json_replace_udf(doc, path, value)
 
 
-@pandas_udf(StringType())
-def _json_remove_udf(docs: pd.Series, paths: pd.Series) -> pd.Series:
-    def rm(d, p):
-        doc = _loads_or_none(d)
-        if doc is None or not p.startswith("$."):
-            return None if doc is None else _dumps(doc)
-        key = p[2:]
-        if isinstance(doc, dict):
-            doc.pop(key, None)
-        return _dumps(doc)
+def _k_json_remove(d, p):
+    doc = _loads_or_none(d)
+    if doc is None or not p.startswith("$."):
+        return None if doc is None else _dumps(doc)
+    if isinstance(doc, dict):
+        doc.pop(p[2:], None)
+    return _dumps(doc)
 
-    return pd.Series([rm(d, p) for d, p in zip(docs, paths)])
+
+_json_remove_udf = arrow_udf(_k_json_remove, StringType())
 
 
 def json_remove(doc, path) -> Column:
@@ -129,27 +129,24 @@ def json_remove(doc, path) -> Column:
     return _json_remove_udf(doc, path)
 
 
-@pandas_udf(StringType())
-def _json_merge_patch_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    def merge(x, y):
-        if not isinstance(x, dict) or not isinstance(y, dict):
-            return y
-        out = dict(x)
-        for k, v in y.items():
-            if v is None:
-                out.pop(k, None)
-            else:
-                out[k] = merge(out.get(k), v)
-        return out
-
-    res = []
-    for da, db in zip(a, b):
-        xa, xb = _loads_or_none(da), _loads_or_none(db)
-        if xa is None or xb is None:
-            res.append(None)
+def _merge_patch(x, y):
+    if not isinstance(x, dict) or not isinstance(y, dict):
+        return y
+    out = dict(x)
+    for k, v in y.items():
+        if v is None:
+            out.pop(k, None)
         else:
-            res.append(_dumps(merge(xa, xb)))
-    return pd.Series(res)
+            out[k] = _merge_patch(out.get(k), v)
+    return out
+
+
+def _k_json_merge_patch(a, b):
+    xa, xb = _loads_or_none(a), _loads_or_none(b)
+    return None if xa is None or xb is None else _dumps(_merge_patch(xa, xb))
+
+
+_json_merge_patch_udf = arrow_udf(_k_json_merge_patch, StringType())
 
 
 def json_merge_patch(a, b) -> Column:
@@ -225,17 +222,16 @@ def _mysql_json_contains(target, candidate) -> bool:
     return target == candidate
 
 
-@pandas_udf(BooleanType())
-def _json_contains_udf(targets: pd.Series, candidates: pd.Series) -> pd.Series:
-    def one(t, c):
-        if t is None or c is None:
-            return None
-        try:
-            return _mysql_json_contains(json.loads(t), json.loads(c))
-        except (ValueError, TypeError):
-            return None
+def _k_json_contains(t, c):
+    if t is None or c is None:
+        return None
+    try:
+        return bool(_mysql_json_contains(json.loads(t), json.loads(c)))
+    except (ValueError, TypeError):
+        return None
 
-    return pd.Series([one(t, c) for t, c in zip(targets, candidates)], dtype="object")
+
+_json_contains_udf = arrow_udf(_k_json_contains, BooleanType())
 
 
 def json_contains(target, candidate) -> Column:
@@ -291,18 +287,17 @@ def _path_exists(doc, path: str) -> bool:
     return True
 
 
-@pandas_udf(BooleanType())
-def _json_contains_path_udf(docs: pd.Series, modes: pd.Series, paths: pd.Series) -> pd.Series:
-    def one(d, m, ps):
-        if d is None or ps is None:
-            return None
-        obj = _loads_or_none(d)
-        if obj is None and d.strip() != "null":
-            return None
-        checks = [_path_exists(obj, p) for p in ps.split("|")]
-        return all(checks) if (m or "one").lower() == "all" else any(checks)
+def _k_json_contains_path(d, m, ps):
+    if d is None or ps is None:
+        return None
+    obj = _loads_or_none(d)
+    if obj is None and d.strip() != "null":
+        return None
+    checks = [_path_exists(obj, p) for p in ps.split("|")]
+    return all(checks) if (m or "one").lower() == "all" else any(checks)
 
-    return pd.Series([one(d, m, p) for d, m, p in zip(docs, modes, paths)], dtype="object")
+
+_json_contains_path_udf = arrow_udf(_k_json_contains_path, BooleanType())
 
 
 def json_contains_path(doc, mode, paths) -> Column:
@@ -321,23 +316,20 @@ def _scalar_overlap(a, b) -> bool:
     return type(a) is type(b) and a == b
 
 
-@pandas_udf(BooleanType())
-def _json_overlaps_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    def over(x, y):
-        if x is None or y is None:
-            return None
-        xo, yo = _loads_or_none(x), _loads_or_none(y)
-        xa = xo if isinstance(xo, list) else [xo]
-        ya = yo if isinstance(yo, list) else [yo]
-        if isinstance(xo, dict) and isinstance(yo, dict):
-            return any(k in yo and _scalar_overlap(v, yo[k]) for k, v in xo.items())
-        return any(
-            _scalar_overlap(e, f) if not isinstance(e, (dict, list)) else e == f
-            for e in xa
-            for f in ya
-        )
+def _k_json_overlaps(x, y):
+    xo, yo = _loads_or_none(x), _loads_or_none(y)
+    xa = xo if isinstance(xo, list) else [xo]
+    ya = yo if isinstance(yo, list) else [yo]
+    if isinstance(xo, dict) and isinstance(yo, dict):
+        return any(k in yo and _scalar_overlap(v, yo[k]) for k, v in xo.items())
+    return any(
+        _scalar_overlap(e, f) if not isinstance(e, (dict, list)) else e == f
+        for e in xa
+        for f in ya
+    )
 
-    return pd.Series([over(x, y) for x, y in zip(a, b)], dtype="object")
+
+_json_overlaps_udf = arrow_udf(_strict(_k_json_overlaps), BooleanType())
 
 
 def json_overlaps(a, b) -> Column:
@@ -346,15 +338,14 @@ def json_overlaps(a, b) -> Column:
     return _json_overlaps_udf(col_of(a), col_of(b))
 
 
-@pandas_udf(StringType())
-def _json_pretty_udf(docs: pd.Series) -> pd.Series:
-    def pretty(d):
-        obj = _loads_or_none(d)
-        if obj is None and (d is None or d.strip() != "null"):
-            return None
-        return json.dumps(obj, indent=2, ensure_ascii=False)
+def _k_json_pretty(d):
+    obj = _loads_or_none(d)
+    if obj is None and d.strip() != "null":
+        return None
+    return json.dumps(obj, indent=2, ensure_ascii=False)
 
-    return pd.Series([pretty(d) for d in docs], dtype="object")
+
+_json_pretty_udf = arrow_udf(_strict(_k_json_pretty), StringType())
 
 
 def json_pretty(doc) -> Column:
@@ -375,15 +366,11 @@ def _merge_preserve(x, y):
     return xa + ya
 
 
-@pandas_udf(StringType())
-def _json_merge_preserve_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    def merge(x, y):
-        if x is None or y is None:
-            return None
-        xo, yo = _loads_or_none(x), _loads_or_none(y)
-        return _dumps(_merge_preserve(xo, yo))
+def _k_json_merge_preserve(x, y):
+    return _dumps(_merge_preserve(_loads_or_none(x), _loads_or_none(y)))
 
-    return pd.Series([merge(x, y) for x, y in zip(a, b)], dtype="object")
+
+_json_merge_preserve_udf = arrow_udf(_strict(_k_json_merge_preserve), StringType())
 
 
 def json_merge_preserve(a, b) -> Column:
@@ -407,6 +394,7 @@ def json_extract_float64(doc, path) -> Column:
 _IDENT_KEY_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 
+@lru_cache(maxsize=256)
 def _like_regex(pattern: str, escape: str) -> "re.Pattern":
     """SQL LIKE pattern → anchored regex (MySQL JSON_SEARCH match rules)."""
     out, i = [], 0
@@ -439,35 +427,6 @@ def _search_paths(node, rx, path: str, acc: "list[str]") -> None:
             _search_paths(v, rx, f"{path}[{i}]", acc)
 
 
-def _make_json_search_udf(one_or_all: str, escape: str):
-    mode = one_or_all.lower()
-
-    @pandas_udf(StringType())
-    def _udf(docs: pd.Series, patterns: pd.Series) -> pd.Series:
-        cache: "dict[str, re.Pattern]" = {}
-
-        def run(doc, pat):
-            if doc is None or pat is None:
-                return None
-            parsed = _loads_or_none(doc)
-            if parsed is None:
-                return None
-            rx = cache.get(pat)
-            if rx is None:
-                rx = cache[pat] = _like_regex(pat, escape)
-            acc: "list[str]" = []
-            _search_paths(parsed, rx, "$", acc)
-            if not acc:
-                return None
-            if mode == "one":
-                return _dumps(acc[0])
-            return _dumps(acc[0] if len(acc) == 1 else acc)
-
-        return pd.Series([run(d, p) for d, p in zip(docs, patterns)])
-
-    return _udf
-
-
 def json_search(doc, one_or_all: str, pattern, escape: str = "\\") -> Column:
     """MySQL JSON_SEARCH(doc, 'one'|'all', like_pattern[, escape]): paths of
     string values matching the LIKE pattern, as a JSON string ('one' / single
@@ -475,7 +434,19 @@ def json_search(doc, one_or_all: str, pattern, escape: str = "\\") -> Column:
     MySQL-compat surface beyond the reference registry (function_id.go:1082
     stops at json_extract/set/contains families); document-order DFS matches
     MySQL's path ordering."""
-    return _make_json_search_udf(one_or_all, escape)(col_of(doc), col_of(pattern))
+    mode = one_or_all.lower()
+
+    def _k_json_search(d, pat):
+        parsed = _loads_or_none(d)
+        if parsed is None:
+            return None
+        acc: "list[str]" = []
+        _search_paths(parsed, _like_regex(pat, escape), "$", acc)
+        if not acc:
+            return None
+        return _dumps(acc[0] if mode == "one" or len(acc) == 1 else acc)
+
+    return arrow_udf(_strict(_k_json_search), StringType())(col_of(doc), col_of(pattern))
 
 
 # ---------------------------------------------------------------------------
@@ -499,24 +470,15 @@ def _jq_run(doc: "str | None", program: str) -> "str | None":
     return "\n".join(_dumps(v) for v in values)  # jq emits one result per line
 
 
-def _make_jq_udf(swallow: bool):
-    @pandas_udf(StringType())
-    def fn(docs: pd.Series, programs: pd.Series) -> pd.Series:
-        res = []
-        for d, p in zip(docs, programs):
-            try:
-                res.append(_jq_run(d, p))
-            except Exception:
-                if not swallow:
-                    raise
-                res.append(None)
-        return pd.Series(res, dtype=object)
-
-    return fn
+def _try_jq_run(doc: "str | None", program: str) -> "str | None":
+    try:
+        return _jq_run(doc, program)
+    except Exception:  # noqa: BLE001 — try_jq swallows by contract
+        return None
 
 
-_jq_udf = _make_jq_udf(swallow=False)
-_try_jq_udf = _make_jq_udf(swallow=True)
+_jq_udf = arrow_udf(_jq_run, StringType())
+_try_jq_udf = arrow_udf(_try_jq_run, StringType())
 
 
 def jq(doc, program) -> Column:

@@ -4,8 +4,9 @@ The reference registers ~700 function names (pkg/sql/plan/function/
 function_id.go:813-1420) with typed overloads in function/list_builtIn.go.
 Most map 1:1 to pyspark.sql.functions (SURVEY §2.8 table); this module fills
 the gaps as *expression builders* — pure Column compositions that stay inside
-whole-stage codegen (JVM), never row-at-a-time Python. The only Python UDF
-here is crc32 (zlib), Arrow-batched.
+whole-stage codegen (JVM). Semantics with no Column form (CONV, crc32,
+COMPRESS, inet6) are plain row kernels run through one Arrow-batched UDF
+wrapper (``functions.arrow_udf``).
 
 Each builder cites the reference implementation it mirrors. MySQL semantic
 notes (zero-dates, implicit casts) follow the reference's BVT expectations.
@@ -13,15 +14,15 @@ notes (zero-dates, implicit casts) follow the reference's BVT expectations.
 
 from __future__ import annotations
 
+import ipaddress
+import struct
 import zlib
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType, StringType
+from pyspark.sql.types import BinaryType, BooleanType, LongType, StringType
 
-from matrixone_spark.functions import arrow_udf, col_of
+from matrixone_spark.functions import _strict, arrow_udf, col_of
 
 
 # ---------------------------------------------------------------- comparison
@@ -128,13 +129,16 @@ def oct_(x) -> Column:
     return F.conv(col_of(x).cast("string"), 10, 8)
 
 
-@pandas_udf(LongType())
-def _crc32_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda v: None if v is None else zlib.crc32(str(v).encode("utf-8")))
+def _k_crc32(v):
+    """Binary values hash as they are; anything else as its UTF-8 text."""
+    return zlib.crc32(v if isinstance(v, (bytes, bytearray)) else str(v).encode("utf-8"))
+
+
+_crc32_udf = arrow_udf(_strict(_k_crc32), LongType())
 
 
 def crc32(x) -> Column:
-    """CRC32(s). Reference: func_unary.go crc32. Arrow-batched pandas UDF
+    """CRC32(s). Reference: func_unary.go crc32. Arrow-batched row kernel
     (no Spark builtin); cheap enough off the hot path."""
     return _crc32_udf(col_of(x))
 
@@ -459,56 +463,36 @@ def _name(x) -> str:
 
 # --- COMPRESS/UNCOMPRESS/UNCOMPRESSED_LENGTH (func_unary.go:5920 Compress:
 # MySQL layout = 4-byte little-endian uncompressed length + zlib stream;
-# empty string compresses to empty). Arrow-batched zlib UDFs. ---
-
-import struct as _struct
-import zlib as _zlib
-
-from pyspark.sql.functions import pandas_udf as _pandas_udf
-from pyspark.sql.types import BinaryType as _BinaryType
-from pyspark.sql.types import LongType as _LongType
+# empty string compresses to empty). ---
 
 
-@_pandas_udf(_BinaryType())
-def _compress_udf(ss: pd.Series) -> pd.Series:
-    def one(s):
-        if s is None:
-            return None
-        b = s if isinstance(s, (bytes, bytearray)) else str(s).encode("utf-8")
-        if not b:
-            return b""
-        return _struct.pack("<I", len(b)) + _zlib.compress(b)
-
-    return pd.Series([one(s) for s in ss], dtype="object")
+def _k_compress(s):
+    b = s if isinstance(s, (bytes, bytearray)) else str(s).encode("utf-8")
+    if not b:
+        return b""
+    return struct.pack("<I", len(b)) + zlib.compress(b)
 
 
-@_pandas_udf(_BinaryType())
-def _uncompress_udf(ss: pd.Series) -> pd.Series:
-    def one(s):
-        if s is None:
-            return None
-        if not s:
-            return b""
-        try:
-            n = _struct.unpack("<I", bytes(s[:4]))[0]
-            out = _zlib.decompress(bytes(s[4:]))
-            return out if len(out) == n else None
-        except Exception:
-            return None
-
-    return pd.Series([one(s) for s in ss], dtype="object")
+def _k_uncompress(s):
+    if not s:
+        return b""
+    try:
+        n = struct.unpack("<I", bytes(s[:4]))[0]
+        out = zlib.decompress(bytes(s[4:]))
+        return out if len(out) == n else None
+    except Exception:
+        return None
 
 
-@_pandas_udf(_LongType())
-def _uncompressed_length_udf(ss: pd.Series) -> pd.Series:
-    def one(s):
-        if s is None:
-            return None
-        if not s:
-            return 0
-        return int(_struct.unpack("<I", bytes(s[:4]))[0])
+def _k_uncompressed_length(s):
+    if not s:
+        return 0
+    return int(struct.unpack("<I", bytes(s[:4]))[0])
 
-    return pd.Series([one(s) for s in ss], dtype="object")
+
+_compress_udf = arrow_udf(_strict(_k_compress), BinaryType())
+_uncompress_udf = arrow_udf(_strict(_k_uncompress), BinaryType())
+_uncompressed_length_udf = arrow_udf(_strict(_k_uncompressed_length), LongType())
 
 
 def compress(s) -> Column:
@@ -602,23 +586,40 @@ def microsecond(x) -> Column:
 # Binary addresses surface as lowercase hex strings here: parquet-friendly,
 # byte-faithful, and directly comparable across engines.
 
-from pyspark.sql.types import BooleanType as _BooleanType
-from pyspark.sql.types import StringType as _StringType
+
+def _k_inet6_aton_hex(a):
+    try:
+        return ipaddress.ip_address(a.strip()).packed.hex()
+    except ValueError:
+        return None
 
 
-@pandas_udf(_StringType())
-def _inet6_aton_hex_udf(addrs: pd.Series) -> pd.Series:
-    import ipaddress
+def _k_inet6_ntoa_hex(h):
+    try:
+        b = bytes.fromhex(h)
+    except ValueError:
+        return None
+    if len(b) == 4:
+        return str(ipaddress.IPv4Address(b))
+    if len(b) == 16:
+        v6 = ipaddress.IPv6Address(b)
+        # MySQL keeps the dotted-quad rendering for mapped addresses
+        if v6.ipv4_mapped is not None:
+            return f"::ffff:{v6.ipv4_mapped}"
+        return str(v6)  # RFC 5952 compressed form
+    return None
 
-    def conv(a):
-        if a is None:
-            return None
-        try:
-            return ipaddress.ip_address(a.strip()).packed.hex()
-        except ValueError:
-            return None
 
-    return pd.Series([conv(a) for a in addrs], dtype="object")
+def _k_is_ipv6(a):
+    try:
+        return ipaddress.ip_address(a.strip()).version == 6
+    except ValueError:
+        return False
+
+
+_inet6_aton_hex_udf = arrow_udf(_strict(_k_inet6_aton_hex), StringType())
+_inet6_ntoa_hex_udf = arrow_udf(_strict(_k_inet6_ntoa_hex), StringType())
+_is_ipv6_udf = arrow_udf(_strict(_k_is_ipv6), BooleanType())
 
 
 def inet6_aton_hex(addr) -> Column:
@@ -627,49 +628,10 @@ def inet6_aton_hex(addr) -> Column:
     return _inet6_aton_hex_udf(col_of(addr))
 
 
-@pandas_udf(_StringType())
-def _inet6_ntoa_hex_udf(hexes: pd.Series) -> pd.Series:
-    import ipaddress
-
-    def conv(h):
-        if h is None:
-            return None
-        try:
-            b = bytes.fromhex(h)
-        except ValueError:
-            return None
-        if len(b) == 4:
-            return str(ipaddress.IPv4Address(b))
-        if len(b) == 16:
-            v6 = ipaddress.IPv6Address(b)
-            # MySQL keeps the dotted-quad rendering for mapped addresses
-            if v6.ipv4_mapped is not None:
-                return f"::ffff:{v6.ipv4_mapped}"
-            return str(v6)  # RFC 5952 compressed form
-        return None
-
-    return pd.Series([conv(h) for h in hexes], dtype="object")
-
-
 def inet6_ntoa_hex(h) -> Column:
     """INET6_NTOA over the hex-string binary form (inverse of
     inet6_aton_hex; v6 renders RFC 5952 compressed, matching MySQL)."""
     return _inet6_ntoa_hex_udf(col_of(h))
-
-
-@pandas_udf(_BooleanType())
-def _is_ipv6_udf(addrs: pd.Series) -> pd.Series:
-    import ipaddress
-
-    def chk(a):
-        if a is None:
-            return None
-        try:
-            return ipaddress.ip_address(a.strip()).version == 6
-        except ValueError:
-            return False
-
-    return pd.Series([chk(a) for a in addrs], dtype="object")
 
 
 def is_ipv6(addr) -> Column:

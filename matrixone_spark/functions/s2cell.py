@@ -28,6 +28,7 @@ no per-row Python round trips outside the batch loop, no driver state.
 
 from __future__ import annotations
 
+import json
 import math
 
 import pandas as pd
@@ -36,9 +37,9 @@ from decimal import Decimal
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DecimalType, DoubleType, IntegerType, StringType
+from pyspark.sql.types import BooleanType, DecimalType, DoubleType, StringType
 
-from matrixone_spark.functions import col_of
+from matrixone_spark.functions import _strict, arrow_udf, col_of
 
 EARTH_RADIUS_M = 6371008.8  # func_s2h3.go:48
 
@@ -353,11 +354,11 @@ def s2_cellid(lon, lat) -> Column:
     columns (our WKT layer extracts x/y); DECIMAL(20,0) carries uint64.
 
     Arrow-batched pandas UDF: the expression-context form. For spatial-join
-    bucketing pipelines use ``with_s2_cellid`` (staged pure-Catalyst form,
-    ~2x this throughput and no Python worker) — a single-Column Catalyst
-    version was tried and rejected: HOF lets keep the tree linear but fall
-    out of whole-stage codegen (8.7 s vs 1.8 s UDF vs 0.95 s staged on 2M
-    rows) and nested-lambda analysis costs ~6 s of planning per query."""
+    bucketing pipelines use ``with_s2_buckets`` (one mapInArrow pass that
+    also emits the neighbour buckets) — a single-Column Catalyst version
+    was tried and rejected: HOF lets keep the tree linear but fall out of
+    whole-stage codegen (8.7 s vs 1.8 s UDF on 2M rows) and nested-lambda
+    analysis costs ~6 s of planning per query."""
 
     @pandas_udf(_DEC20)
     def udf(lons: pd.Series, lats: pd.Series) -> pd.Series:
@@ -373,16 +374,6 @@ def s2_cellid(lon, lat) -> Column:
         )
 
     return udf(col_of(lon), col_of(lat))
-
-
-def _id_udf(fn, rtype):
-    @pandas_udf(rtype)
-    def udf(ids: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if v is None else fn(int(v)) for v in ids], dtype=object
-        )
-
-    return udf
 
 
 def _cellids_np(lons, lats, level: int = _MAX_LEVEL):
@@ -450,53 +441,6 @@ def _hilbert_tab_np():
 
         _HILBERT_TAB_NP = np.asarray(_HILBERT_TAB, dtype=np.int64)
     return _HILBERT_TAB_NP
-
-
-def with_s2_cellid(df, lon, lat, out: str, level: int = _MAX_LEVEL):
-    """Hot-path form: add column ``out`` = s2_cellid_parent(s2_cellid(lon,
-    lat), level) in ONE vectorized mapInArrow pass (numpy batch math, Arrow
-    zero-copy in/out, DECIMAL(20,0) uint64 carrier on the way out).
-
-    Why not pure Catalyst: the round-4 staged-projection form was collapsed
-    by CollapseProject *by substitution* — the Hilbert state column is
-    referenced twice per round, so the optimized tree doubled per round
-    (~2^6 clones of the upstream expression, each embedding the 4 KB
-    transition-table literal; 123 KB of plan text for one column) and a
-    two-branch join over it OOMed the driver. A single HOF-fold form avoids
-    the blowup but falls out of whole-stage codegen (8.7 s vs 1.8 s UDF on
-    2M rows). The Arrow pass keeps the plan a single opaque node — O(1)
-    plan size — and the numpy core runs the whole batch through ~40 array
-    ops, far from the old per-row-Decimal pandas loop.
-
-    Scale story: this is the scan-stage cell annotation for the 100 TB
-    geo-join (bucket by parent cell, equi-join, exact verify inside); at
-    ingest you would write this column once, partitioned by cell."""
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql.types import StructField, StructType
-
-    tmp = []
-    if not isinstance(lon, str):
-        df = df.withColumn("__s2_lon", col_of(lon))
-        lon, tmp = "__s2_lon", tmp + ["__s2_lon"]
-    if not isinstance(lat, str):
-        df = df.withColumn("__s2_lat", col_of(lat))
-        lat, tmp = "__s2_lat", tmp + ["__s2_lat"]
-    lon_i, lat_i = df.columns.index(lon), df.columns.index(lat)
-    out_schema = StructType(list(df.schema.fields) + [StructField(out, _DEC20, True)])
-    lvl = int(level)
-
-    def add_cell(batches):
-        for b in batches:
-            lons = b.column(lon_i).cast(pa.float64()).to_numpy(zero_copy_only=False)
-            lats = b.column(lat_i).cast(pa.float64()).to_numpy(zero_copy_only=False)
-            bad = np.isnan(lons) | np.isnan(lats)
-            ids = _cellids_np(np.where(bad, 0.0, lons), np.where(bad, 0.0, lats), lvl)
-            arr = pa.array(ids, mask=bad).cast(pa.decimal128(20, 0))
-            yield b.append_column(out, arr)
-
-    res = df.mapInArrow(add_cell, out_schema)
-    return res.drop(*tmp) if tmp else res
 
 
 def with_s2_buckets(df, lon, lat, cell_out: str, buckets_out: str, level: int):
@@ -580,57 +524,57 @@ def s2_cellid_parent(cid, level: int) -> Column:
     """Pure Catalyst bucketing key: (cid & −lsb) | lsb on the signed 64-bit
     pattern. Pass a COLUMN (not a nested s2_cellid(...) expression — the
     argument is referenced several times; for the fused compute-and-bucket
-    pipeline use with_s2_cellid)."""
+    pipeline use with_s2_buckets)."""
     lsb = 1 << (2 * (_MAX_LEVEL - int(level)))
     sig = _to_signed64(col_of(cid))
     return _to_unsigned64(sig.bitwiseAND(F.lit(-lsb)).bitwiseOR(F.lit(lsb)))
 
 
+def _k_center_wkt(c):
+    lon, lat = cell_center_lonlat(int(c))
+    return f"POINT({lon!r} {lat!r})"
+
+
+def _k_area(c):
+    return cell_approx_area_m2(int(c))
+
+
+def _k_edge_neighbors(c):
+    """JSON array of uint64 ids (func_s2h3.go:363 returns JSON)."""
+    return json.dumps(cell_edge_neighbors(int(c)))
+
+
+def _k_all_neighbors(c):
+    return json.dumps(cell_all_neighbors(int(c)))
+
+
+def _k_are_neighbors(a, b):
+    return cells_are_neighbors(int(a), int(b))
+
+
+_center_wkt_udf = arrow_udf(_strict(_k_center_wkt), StringType())
+_area_udf = arrow_udf(_strict(_k_area), DoubleType())
+_edge_neighbors_udf = arrow_udf(_strict(_k_edge_neighbors), StringType())
+_all_neighbors_udf = arrow_udf(_strict(_k_all_neighbors), StringType())
+_are_neighbors_udf = arrow_udf(_strict(_k_are_neighbors), BooleanType())
+
+
 def s2_cellid_center_wkt(cid) -> Column:
     """Center as 'POINT(lon lat)' WKT (func_s2h3.go:321)."""
-
-    def fn(c):
-        lon, lat = cell_center_lonlat(c)
-        return f"POINT({lon!r} {lat!r})"
-
-    return _id_udf(fn, StringType())(col_of(cid))
+    return _center_wkt_udf(col_of(cid))
 
 
 def s2_cellid_area(cid) -> Column:
-    return _id_udf(cell_approx_area_m2, DoubleType())(col_of(cid))
+    return _area_udf(col_of(cid))
 
 
 def s2_cellid_edgeneighbors(cid) -> Column:
-    """JSON array of uint64 ids (func_s2h3.go:363 returns JSON)."""
-    import json
-
-    return _id_udf(lambda c: json.dumps(cell_edge_neighbors(c)), StringType())(col_of(cid))
+    return _edge_neighbors_udf(col_of(cid))
 
 
 def s2_cellid_allneighbors(cid) -> Column:
-    import json
-
-    return _id_udf(lambda c: json.dumps(cell_all_neighbors(c)), StringType())(col_of(cid))
+    return _all_neighbors_udf(col_of(cid))
 
 
 def s2_cellid_areneighbors(a, b) -> Column:
-    from pyspark.sql.types import BooleanType
-
-    @pandas_udf(BooleanType())
-    def udf(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None if x is None or y is None else cells_are_neighbors(int(x), int(y))
-                for x, y in zip(xs, ys)
-            ],
-            dtype=object,
-        )
-
-    return udf(col_of(a), col_of(b))
-
-
-# Reference registers both spellings (function_id.go s2_cellid_*neighbours);
-# the US forms above are the implementations.
-s2_cellid_edgeneighbours = s2_cellid_edgeneighbors
-s2_cellid_allneighbours = s2_cellid_allneighbors
-s2_cellid_areneighbours = s2_cellid_areneighbors
+    return _are_neighbors_udf(col_of(a), col_of(b))

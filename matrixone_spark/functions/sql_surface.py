@@ -38,6 +38,8 @@ import json
 import re
 import zlib
 
+from matrixone_spark.functions.json_fns import _jq_run, _k_json_contains, _try_jq_run
+
 # --------------------------------------------------------------------------
 # Tier 1: pure-SQL bodies.  SPARK_SQL entries are full CREATE statements;
 # DUCK_SQL are CREATE MACRO twins (omitted where DuckDB's builtin already
@@ -1137,17 +1139,6 @@ def _k_json_type(j):
     return "OBJECT"
 
 
-def _k_json_contains(t, c):
-    from matrixone_spark.functions.json_fns import _mysql_json_contains
-
-    if t is None or c is None:
-        return None
-    try:
-        return bool(_mysql_json_contains(json.loads(t), json.loads(c)))
-    except (ValueError, TypeError):
-        return None
-
-
 def _k_json_contains_path(doc, mode, paths_packed):
     from matrixone_spark.functions.json_fns import _path_exists
 
@@ -1496,21 +1487,6 @@ def _k_json_quote(s):
     return json.dumps(str(s), ensure_ascii=False)
 
 
-def _k_jq(doc, prog):
-    from matrixone_spark.functions.json_fns import _jq_run
-
-    return _jq_run(doc, prog)
-
-
-def _k_try_jq(doc, prog):
-    from matrixone_spark.functions.json_fns import _jq_run
-
-    try:
-        return _jq_run(doc, prog)
-    except Exception:  # noqa: BLE001 — try_jq swallows by contract
-        return None
-
-
 def _k_dec_mul(a, b, scale):
     """Decimal128 multiply at the reference's result scale
     (types/decimal.go:1331 — scale = clamp(max(12, s1, s2) ≤ s1+s2),
@@ -1765,8 +1741,8 @@ PYFUNCS: "list[tuple[str, object, list, tuple]]" = [
     ("json_merge_patch", _k_json_merge_patch, [_T_STR, _T_STR], _T_STR),
     ("json_merge_preserve", _k_json_merge_preserve, [_T_STR, _T_STR], _T_STR),
     ("json_quote", _k_json_quote, [_T_STR], _T_STR),
-    ("jq", _k_jq, [_T_STR, _T_STR], _T_STR),
-    ("try_jq", _k_try_jq, [_T_STR, _T_STR], _T_STR),
+    ("jq", _jq_run, [_T_STR, _T_STR], _T_STR),
+    ("try_jq", _try_jq_run, [_T_STR, _T_STR], _T_STR),
     ("mo_json_vals", _k_json_vals, [_T_STR], _T_STR),
     ("mo_json_arr_from", _k_json_arr_from, [_T_STR], _T_STR),
     ("mo_json_obj_from", _k_json_obj_from, [_T_STR], _T_STR),

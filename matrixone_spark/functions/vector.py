@@ -118,17 +118,18 @@ def subvector_sql(col_sql: str, start: int, length: "int | None" = None) -> str:
 # --- base64 vector codecs (func_unary.go:5849 VecFromBase64: base64 of the
 # raw little-endian element bytes, as produced by to_base64(vec);
 # function_id.go vecf32/vecf64/vecf16/vecbf16/vecint8/vecuint8_from_base64).
-# Arrow-batched numpy codecs — byte reinterpretation has no Column form. ---
+# Arrow-batched numpy row kernels — byte reinterpretation has no Column
+# form. ---
 
 import base64 as _b64
 
 import numpy as _np
-import pandas as _pd
-from pyspark.sql.functions import pandas_udf as _pandas_udf
 from pyspark.sql.types import ArrayType as _ArrayType
 from pyspark.sql.types import DoubleType as _DoubleType
 from pyspark.sql.types import FloatType as _FloatType
 from pyspark.sql.types import StringType as _StringType
+
+from matrixone_spark.functions import _strict, arrow_udf
 
 _NP_DTYPES = {
     "float32": "<f4",
@@ -139,23 +140,24 @@ _NP_DTYPES = {
 }
 
 
+def _b64_elements(s: str, itemsize: int) -> "bytes | None":
+    """The bytes ``s`` encodes, or None for invalid base64 or a length that
+    is not a multiple of ``itemsize``."""
+    try:
+        raw = _b64.b64decode(s, validate=True)
+    except Exception:
+        return None
+    return raw if len(raw) % itemsize == 0 else None
+
+
 def vec_to_base64(col, dtype: str = "float32") -> Column:
     """to_base64(vector): base64 of the little-endian element bytes."""
     nd = _NP_DTYPES[dtype]
 
-    @_pandas_udf(_StringType())
-    def enc(vs: _pd.Series) -> _pd.Series:
-        return _pd.Series(
-            [
-                None
-                if v is None
-                else _b64.b64encode(_np.asarray(v, dtype=nd).tobytes()).decode()
-                for v in vs
-            ],
-            dtype="object",
-        )
+    def _k_vec_to_base64(v):
+        return _b64.b64encode(_np.asarray(v, dtype=nd).tobytes()).decode()
 
-    return enc(col)
+    return arrow_udf(_strict(_k_vec_to_base64), _StringType())(col)
 
 
 def vec_from_base64(col, dtype: str = "float32") -> Column:
@@ -163,32 +165,17 @@ def vec_from_base64(col, dtype: str = "float32") -> Column:
     invalid base64 / length not a multiple of the element size — the
     batch analogue of the reference's per-row error)."""
     nd = _NP_DTYPES[dtype]
-    out_type = _ArrayType(_FloatType() if dtype in ("float32", "float16") else _DoubleType())
     as_float = dtype in ("float32", "float16")
+    out_type = _ArrayType(_FloatType() if as_float else _DoubleType())
 
-    @_pandas_udf(out_type)
-    def dec(ss: _pd.Series) -> _pd.Series:
-        out = []
-        for s in ss:
-            if s is None:
-                out.append(None)
-                continue
-            try:
-                raw = _b64.b64decode(s, validate=True)
-            except Exception:
-                out.append(None)
-                continue
-            size = _np.dtype(nd).itemsize
-            if len(raw) % size != 0:
-                out.append(None)
-                continue
-            arr = _np.frombuffer(raw, dtype=nd)
-            out.append(
-                [float(x) for x in arr.astype("<f4" if as_float else "<f8")]
-            )
-        return _pd.Series(out, dtype="object")
+    def _k_vec_from_base64(s):
+        raw = _b64_elements(s, _np.dtype(nd).itemsize)
+        if raw is None:
+            return None
+        arr = _np.frombuffer(raw, dtype=nd)
+        return [float(x) for x in arr.astype("<f4" if as_float else "<f8")]
 
-    return dec(col)
+    return arrow_udf(_strict(_k_vec_from_base64), out_type)(col)
 
 
 def vecf32_from_base64(col) -> Column:
@@ -206,32 +193,22 @@ def vecf16_from_base64(col) -> Column:
     return vec_from_base64(col, "float16")
 
 
+def _k_vecbf16_from_base64(s):
+    raw = _b64_elements(s, 2)
+    if raw is None:
+        return None
+    u16 = _np.frombuffer(raw, dtype="<u2").astype(_np.uint32) << 16
+    return [float(x) for x in u16.view(_np.float32)]
+
+
+_vecbf16_udf = arrow_udf(_strict(_k_vecbf16_from_base64), _ArrayType(_FloatType()))
+
+
 def vecbf16_from_base64(col) -> Column:
     """function_id.go VECBF16_FROM_BASE64 (bfloat16 = float32 with the
     trailing 16 mantissa bits dropped; numpy lacks bf16, decode widens via
     uint16<<16 bit-reinterpretation)."""
-    import numpy as np
-
-    @_pandas_udf(_ArrayType(_FloatType()))
-    def dec(ss: _pd.Series) -> _pd.Series:
-        out = []
-        for s in ss:
-            if s is None:
-                out.append(None)
-                continue
-            try:
-                raw = _b64.b64decode(s, validate=True)
-            except Exception:
-                out.append(None)
-                continue
-            if len(raw) % 2 != 0:
-                out.append(None)
-                continue
-            u16 = np.frombuffer(raw, dtype="<u2").astype(np.uint32) << 16
-            out.append([float(x) for x in u16.view(np.float32)])
-        return _pd.Series(out, dtype="object")
-
-    return dec(col)
+    return _vecbf16_udf(col)
 
 
 def vecint8_from_base64(col) -> Column:

@@ -22,12 +22,12 @@ scoring is a broadcast of the (tiny) term stats + one aggregation by doc.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
 
-from matrixone_spark.functions.text import tokenize_positions_sql
+from matrixone_spark.functions import _strict, arrow_udf
+from matrixone_spark.functions.text import tokenize_mixed_pos_py, tokenize_positions_sql
 from matrixone_spark.matcache import PERSISTED_CAPACITY, MaterializationCache
 from matrixone_spark.operators import fulltext_pattern as fp
 
@@ -42,29 +42,17 @@ _INDEX_CACHE = MaterializationCache(PERSISTED_CAPACITY, release=lambda idx: idx.
 BM25_K1 = 1.5  # reference pkg/fulltext/types.go:19
 BM25_B = 0.75  # reference pkg/fulltext/types.go:20
 
-_MIXED_POS_UDF = None
+
+def _k_mixed_pos(text):
+    return tokenize_mixed_pos_py(str(text))
 
 
-def _mixed_pos_udf(col):
-    """Arrow-batched pandas UDF: text → array<struct<token,pos>> via
-    tokenize_mixed_pos_py (CJK-aware, rune offsets)."""
-    global _MIXED_POS_UDF
-    if _MIXED_POS_UDF is None:
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("array<struct<token:string,pos:int>>")
-        def udf(texts: pd.Series) -> pd.Series:
-            from matrixone_spark.functions.text import tokenize_mixed_pos_py
-
-            return pd.Series(
-                [
-                    None if t is None else tokenize_mixed_pos_py(str(t))
-                    for t in texts
-                ]
-            )
-
-        _MIXED_POS_UDF = udf
-    return _MIXED_POS_UDF(col)
+# text → array<struct<token,pos>> via tokenize_mixed_pos_py (CJK-aware,
+# rune offsets)
+_mixed_pos_udf = arrow_udf(
+    _strict(_k_mixed_pos),
+    ArrayType(StructType([StructField("token", StringType()), StructField("pos", IntegerType())])),
+)
 
 
 class FullTextIndex:
@@ -115,7 +103,7 @@ class FullTextIndex:
         reference monlp/tokenizer/simple.go outputCJK) with RUNE-offset
         positions — deltas agree with the reference's BytePos scheme, so
         phrase adjacency (incl. across breaker runes) is exact. The mixed
-        positional tokenizer is an Arrow-batched pandas UDF (state-machine
+        positional tokenizer is an Arrow-batched row kernel (state-machine
         tokenization doesn't decompose into Catalyst primitives without
         nested-HOF planning blowups); at 100 TB the postings are built once
         at ingest and persisted bucketed by token."""

@@ -3,20 +3,124 @@
 Every case below is transcribed from `test/distributed/cases/geo/*.sql` with
 its expected value from the matching `.result` file (reference's own golden
 corpus — the same gating pattern as the S2 battery). The Spark side runs the
-clean-room kernel (functions/geomlib via functions/geo_ops.geo_eval — ONE
-Arrow-batched UDF pass over a LocalRelation); the oracle is the literal
-golden VALUES relation, so the driver's hash-compare is a hard reference-
-parity gate. Reference error cases assert NULL (the engine's non-throwing
-batch analogue of `invalid input:` errors).
+clean-room kernel (functions/geomlib) through ``geo_eval`` below — ONE
+Arrow-batched UDF pass over a LocalRelation that evaluates each case's
+labelled op on EWKT strings parsed and rendered as in functions/geo_sql;
+the oracle is the literal golden VALUES relation, so the hash-compare
+against it is a hard reference-parity gate. Reference error cases assert
+NULL (the engine's non-throwing batch analogue of `invalid input:` errors).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
-from matrixone_spark.functions import geo_ops as GO
+from matrixone_spark.functions import arrow_udf
+from matrixone_spark.functions import geomlib as GL
+from matrixone_spark.functions.geo_sql import _geom, _parse, _render
 from matrixone_spark.queries import register
+
+# op label -> kernel(a, b, num) over the case's EWKT arguments
+_B = {
+    "astext": lambda a, b, n: _render(None, _geom(a)),
+    "ewkt": lambda a, b, n: _render(*_parse(a)),
+    "srid": lambda a, b, n: _parse(a)[0] or 0,
+    "geomtype": lambda a, b, n: _geom(a)[0],
+    "dimension": lambda a, b, n: GL.dimension(_geom(a)),
+    "isempty": lambda a, b, n: int(GL.is_empty(_geom(a))),
+    "iscollection": lambda a, b, n: int(GL.is_collection(_geom(a))),
+    "numgeometries": lambda a, b, n: GL.num_geometries(_geom(a)),
+    "geometryn": lambda a, b, n: GL.render_wkt(GL.geometry_n(_geom(a), int(n))),
+    "exteriorring": lambda a, b, n: GL.render_wkt(GL.exterior_ring(_geom(a))),
+    "numinteriorrings": lambda a, b, n: GL.num_interior_rings(_geom(a)),
+    "interiorringn": lambda a, b, n: GL.render_wkt(GL.interior_ring_n(_geom(a), int(n))),
+    "area": lambda a, b, n: GL.area(_geom(a)),
+    "length": lambda a, b, n: GL.length(_geom(a)),
+    "centroid": lambda a, b, n: GL.render_wkt(GL.centroid(_geom(a))),
+    "envelope": lambda a, b, n: GL.render_wkt(GL.envelope(_geom(a))),
+    "boundary": lambda a, b, n: GL.render_wkt(GL.boundary(_geom(a))),
+    "pointonsurface": lambda a, b, n: GL.render_wkt(GL.point_on_surface(_geom(a))),
+    "issimple": lambda a, b, n: int(GL.is_simple(_geom(a))),
+    "isring": lambda a, b, n: int(GL.is_ring(_geom(a))),
+    "isvalid": lambda a, b, n: int(GL.is_valid(_geom(a))),
+    "validate": lambda a, b, n: (lambda g: GL.render_wkt(g) if g else None)(
+        GL.validate(_geom(a))),
+    "convexhull": lambda a, b, n: GL.render_wkt(GL.convex_hull(_geom(a))),
+    "simplify": lambda a, b, n: GL.render_wkt(GL.simplify(_geom(a), float(n))),
+    "collect": lambda a, b, n: GL.render_wkt(GL.collect(_geom(a), _geom(b))),
+    "distance": lambda a, b, n: GL.distance(_geom(a), _geom(b)),
+    "intersects": lambda a, b, n: int(GL.intersects(_geom(a), _geom(b))),
+    "disjoint": lambda a, b, n: int(GL.disjoint(_geom(a), _geom(b))),
+    "contains": lambda a, b, n: int(GL.contains(_geom(a), _geom(b))),
+    "within": lambda a, b, n: int(GL.within(_geom(a), _geom(b))),
+    "covers": lambda a, b, n: int(GL.covers(_geom(a), _geom(b))),
+    "coveredby": lambda a, b, n: int(GL.coveredby(_geom(a), _geom(b))),
+    "touches": lambda a, b, n: int(GL.touches(_geom(a), _geom(b))),
+    "crosses": lambda a, b, n: int(GL.crosses(_geom(a), _geom(b))),
+    "overlaps": lambda a, b, n: int(GL.overlaps(_geom(a), _geom(b))),
+    "equals": lambda a, b, n: int(GL.equals(_geom(a), _geom(b))),
+    "hausdorff": lambda a, b, n: GL.hausdorff(_geom(a), _geom(b)),
+    "frechet": lambda a, b, n: GL.frechet(_geom(a), _geom(b)),
+    "union_area": lambda a, b, n: GL.area(GL.overlay(_geom(a), _geom(b), "union")),
+    "inter_area": lambda a, b, n: GL.area(GL.overlay(_geom(a), _geom(b), "intersection")),
+    "diff_area": lambda a, b, n: GL.area(GL.overlay(_geom(a), _geom(b), "difference")),
+    "xor_area": lambda a, b, n: GL.area(GL.overlay(_geom(a), _geom(b), "symdifference")),
+    "union_type": lambda a, b, n: GL.overlay(_geom(a), _geom(b), "union")[0],
+    "buffer_area": lambda a, b, n: GL.area(GL.buffer(_geom(a), float(n))),
+    "buffer_area_q32": lambda a, b, n: GL.area(GL.buffer(_geom(a), float(n), 32)),
+    "buffer_type": lambda a, b, n: GL.buffer(_geom(a), float(n))[0],
+    "buffer_text": lambda a, b, n: GL.render_wkt(GL.buffer(_geom(a), float(n))),
+    "interp_point": lambda a, b, n: GL.render_wkt(
+        GL.line_interpolate_point(_geom(a), float(n))),
+    "interp_points": lambda a, b, n: GL.render_wkt(
+        GL.line_interpolate_points(_geom(a), float(n))),
+    "point_at_distance": lambda a, b, n: GL.render_wkt(
+        GL.point_at_distance(_geom(a), float(n))),
+    "asgeojson": lambda a, b, n: GL.to_geojson(
+        _geom(a), int(n) if n is not None and n >= 0 else None),
+    "fromgeojson": lambda a, b, n: GL.render_wkt(GL.from_geojson(a)),
+    "fromgeojson_srid": lambda a, b, n: (
+        GL.from_geojson(a) and (int(n) if n is not None else 4326)),
+    "ewkt_simplify": lambda a, b, n: (
+        lambda sr, g: _render(sr, GL.simplify(g, float(n))))(*_parse(a)),
+    "ewkt_convexhull": lambda a, b, n: (
+        lambda sr, g: _render(sr, GL.convex_hull(g)))(*_parse(a)),
+    "ewkt_boundary": lambda a, b, n: (
+        lambda sr, g: _render(sr, GL.boundary(g)))(*_parse(a)),
+    "typed_text": lambda a, b, n: (
+        lambda g: GL.render_wkt(g) if g[0] == b else None)(_geom(a)),
+    "typed_wkb": lambda a, b, n: (
+        lambda g: GL.render_wkt(g) if g[0] == b else None)(
+            GL.from_wkb(GL.to_wkb(_geom(a)))),
+    "point32": lambda a, b, n: (
+        lambda g: "POINT({} {})".format(
+            GL.fmt_num(float(np.float32(g[1][0]))),
+            GL.fmt_num(float(np.float32(g[1][1])))))(_geom(a)),
+    "wkb_roundtrip": lambda a, b, n: GL.render_wkt(GL.from_wkb(GL.to_wkb(_geom(a)))),
+    "geojson_roundtrip": lambda a, b, n: GL.render_wkt(
+        GL.from_geojson(GL.to_geojson(_geom(a)))),
+}
+
+
+def _k_geo_eval(op, a, b, num):
+    """The case's ``op`` on (a, b, num), rendered as text: floats through
+    fmt_num, integers (predicates give 0/1) as digits; an error or a NULL
+    the op cannot take gives NULL."""
+    try:
+        r = _B[op](a, b, None if num is None else float(num))
+        if isinstance(r, float):
+            return GL.fmt_num(round(r, 12))
+        if isinstance(r, int):
+            return str(r)
+        return r
+    except Exception:
+        return None
+
+
+geo_eval = arrow_udf(_k_geo_eval, StringType())
 
 _SCHEMA = "c string, op string, a string, b string, num double, lo double, hi double"
 
@@ -24,7 +128,7 @@ _SCHEMA = "c string, op string, a string, b string, num double, lo double, hi do
 def _run(spark: SparkSession, cases) -> DataFrame:
     rows = [(c, op, a, b, num, lo, hi) for (c, op, a, b, num, lo, hi, _exp) in cases]
     df = spark.createDataFrame(rows, _SCHEMA)
-    val = GO.geo_eval("op", "a", "b", "num")
+    val = geo_eval("op", "a", "b", "num")
     res = F.when(
         F.col("lo").isNotNull(),
         F.when(val.cast("double").between(F.col("lo"), F.col("hi")), "1").otherwise("0"),

@@ -48,8 +48,12 @@ def test_truncate_conv_oct(spark):
 def test_crc32(spark):
     import zlib
 
-    r = one_row(spark, {"c": m.crc32(F.lit("MySQL"))})
-    assert r.c == zlib.crc32(b"MySQL")  # MySQL doc value: 3259397556
+    r = one_row(
+        spark,
+        {"c": m.crc32(F.lit("MySQL")), "b": m.crc32(F.lit(b"\x00\xffabc"))},
+    )
+    assert r.c == zlib.crc32(b"MySQL") == 3259397556  # MySQL doc value
+    assert r.b == zlib.crc32(b"\x00\xffabc")  # BINARY hashes its bytes
 
 
 def test_date_format_mysql(spark):

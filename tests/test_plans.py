@@ -222,3 +222,15 @@ def test_search_scan_stages_do_per_row_work_once(spark, monkeypatch):
     for name, plan in plans.items():
         for body in _lambda_bodies(plan):
             assert "split(" not in body, (name, body[:300])
+
+
+def test_arrow_udf_plans_name_the_kernel(spark):
+    """A DataFrame-tier Arrow UDF shows in ArrowEvalPython under its row
+    kernel's name; an SQL-registered one keeps its SQL name."""
+    from matrixone_spark.functions import mysql as M
+
+    df = spark.createDataFrame([("MySQL",)], "s string")
+    plan = _final_plan(df.select(M.crc32("s")))
+    assert re.search(r"ArrowEvalPython \[_k_crc32\(s#\d+\)", plan), plan
+    sql_plan = _final_plan(spark.sql("SELECT mo_conv('ff', 16, 10)"))
+    assert re.search(r"ArrowEvalPython \[mo_conv\(", sql_plan), sql_plan
