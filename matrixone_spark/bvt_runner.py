@@ -375,14 +375,6 @@ def _vec_paren_close(s: str, open_idx: int) -> int:
         return -1
 
 
-def _is_vec_literal(txt: str, spans: "list[str]") -> bool:
-    m = _PH_TOK_RE.fullmatch(txt.strip())
-    if not m:
-        return False
-    sp = spans[int(m.group(1))]
-    return sp[:1] in "'\"" and sp[1:2] == "["
-
-
 def _vec_bits_of(txt: str, spans, vcols) -> "int | None":
     """32/64 when the expression text is DEFINITELY a vector, else None."""
     s = txt.strip()

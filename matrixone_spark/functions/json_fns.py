@@ -75,7 +75,7 @@ def _walk_set(doc, path: str, value, *, create: bool, replace: bool):
 
 def _json_mutate(d, p, v, *, create: bool, replace: bool):
     doc = _loads_or_none(d)
-    if doc is None:
+    if doc is None or p is None:
         return None
     return _dumps(_walk_set(doc, p, _loads_or_none(v), create=create, replace=replace))
 
@@ -114,8 +114,10 @@ def json_replace(doc, path, value) -> Column:
 
 def _k_json_remove(d, p):
     doc = _loads_or_none(d)
-    if doc is None or not p.startswith("$."):
-        return None if doc is None else _dumps(doc)
+    if doc is None or p is None:
+        return None
+    if not p.startswith("$."):
+        return _dumps(doc)
     if isinstance(doc, dict):
         doc.pop(p[2:], None)
     return _dumps(doc)

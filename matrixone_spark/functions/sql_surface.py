@@ -1593,26 +1593,6 @@ def _k_json_norm(s):
         return None
 
 
-def _k_json_norm_sorted(s):
-    """Like mo_json_norm but with object keys sorted at every level —
-    the reference's binary-JSON key order (JSON_OBJECTAGG output)."""
-    from matrixone_spark.functions.json_fns import _mysql_dumps
-
-    def srt(v):
-        if isinstance(v, dict):
-            return {k: srt(v[k]) for k in sorted(v)}
-        if isinstance(v, list):
-            return [srt(x) for x in v]
-        return v
-
-    if s is None:
-        return None
-    try:
-        return _mysql_dumps(srt(json.loads(s)))
-    except (ValueError, TypeError):
-        return None
-
-
 def _k_json_vals(obj_json):
     """Values of a JSON object, in field order, as a JSON array — the
     dialect lowers JSON_ARRAY(v1, v2 …) to
@@ -1747,7 +1727,6 @@ PYFUNCS: "list[tuple[str, object, list, tuple]]" = [
     ("mo_json_arr_from", _k_json_arr_from, [_T_STR], _T_STR),
     ("mo_json_obj_from", _k_json_obj_from, [_T_STR], _T_STR),
     ("mo_json_norm", _k_json_norm, [_T_STR], _T_STR),
-    ("mo_json_norm_sorted", _k_json_norm_sorted, [_T_STR], _T_STR),
     ("mo_json_blob", _k_json_blob, [_T_STR], _T_STR),
     ("mo_json_bit", _k_json_bit, [_T_LONG, _T_INT], _T_STR),
     ("mo_json_string", _k_json_string, [_T_STR], _T_STR),

@@ -16,7 +16,7 @@ co-located join saves the dominant shuffle; salting caps the largest task.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -55,23 +55,3 @@ def salted_groupby_sum(
         F.sum("_psum").cast("double").alias(f"sum_{value_col}"),
         F.sum("_pcnt").alias("cnt"),
     )
-
-
-def salted_join_broadcast_hot(
-    big: DataFrame, small: DataFrame, key: str, hot_keys_threshold: int = 1000
-) -> DataFrame:
-    """Skew-join pattern when AQE can't help (e.g. aggregating join output):
-    split hot keys (detected by sampling) into a broadcast join, cold keys
-    into the normal shuffle join, union the results."""
-    hot = (
-        big.sample(0.01, seed=42)
-        .groupBy(key)
-        .count()
-        .filter(F.col("count") > hot_keys_threshold * 0.01)
-        .select(key)
-    )
-    big_hot = big.join(F.broadcast(hot), key, "left_semi")
-    big_cold = big.join(F.broadcast(hot), key, "left_anti")
-    joined_hot = big_hot.join(F.broadcast(small), key)
-    joined_cold = big_cold.join(small, key)
-    return joined_hot.unionByName(joined_cold)

@@ -70,17 +70,13 @@ def cache_root() -> str:
     )
 
 
-def enabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_LAYOUT_CACHE", "1") != "0"
-
-
 def split_layout_path(src_path: str, table: str) -> "str | None":
     """Return a split/clustered copy of ``src_path`` to scan instead, or None.
 
     None means "scan the source as-is": already a directory, small, already
     multi-group, or pyarrow can't read it.
     """
-    if not enabled() or os.path.isdir(src_path):
+    if os.path.isdir(src_path):
         return None
     try:
         import pyarrow.parquet as pq

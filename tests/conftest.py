@@ -8,7 +8,7 @@ import os
 
 import pytest
 
-from matrixone_spark.oracle import compare_frames, run_oracle
+from matrixone_spark import obs
 from matrixone_spark.queries import load_all
 from matrixone_spark.session import get_spark
 
@@ -29,8 +29,6 @@ def registry():
 
 def assert_matches_oracle(spark, query, sf_dir: str = SF_DIR):
     """Run a registry Query on Spark and DuckDB; assert canonical equality."""
-    got = query.fn(spark, sf_dir).toPandas()
-    assert query.oracle is not None, f"{query.name} has no oracle (rows-only)"
-    exp = run_oracle(query.oracle, sf_dir)
-    problems = compare_frames(got, exp)
-    assert not problems, f"{query.name} mismatch:\n" + "\n".join(problems)
+    chk = obs.check(spark, query, sf_dir)
+    assert chk.problems is not None, f"{query.name} has no oracle (rows-only)"
+    assert not chk.problems, f"{query.name} mismatch:\n" + "\n".join(chk.problems)

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from matrixone_spark.catalog import Catalog
+from matrixone_spark.obs import executed_plan
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -57,7 +58,7 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
         joined = li.join(o, li.l_orderkey == o.o_orderkey).groupBy(
             "o_orderpriority"
         ).agg(F.count("*").alias("n"))
-        plan = joined._jdf.queryExecution().executedPlan().toString()
+        plan = executed_plan(joined)
         join_part = plan.split("HashAggregate")[-1]  # below the final agg
         assert "SortMergeJoin" in plan, plan
         # the join inputs are bucket scans: no Exchange between join and scans

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from matrixone_spark.catalog import Catalog
+from matrixone_spark.obs import executed_plan
 from matrixone_spark.operators.recursive import recursive_cte
 from matrixone_spark.sources.external import read_csv, read_jsonl, write_outfile
 from tests.conftest import SF_DIR
@@ -62,7 +63,7 @@ def test_write_partitioned_parquet_prunes(spark, tmpdir):
     write_outfile(o, out, fmt="parquet", partition_by=["o_orderstatus"])
     assert os.path.isdir(f"{out}/o_orderstatus=F")
     back = spark.read.parquet(out).filter(F.col("o_orderstatus") == "F")
-    plan = back._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(back)
     assert "PartitionFilters: [isnotnull(o_orderstatus" in plan, plan
 
 

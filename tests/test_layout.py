@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from matrixone_spark.catalog import Catalog
+from matrixone_spark.obs import executed_plan
 from matrixone_spark.operators.layout import (
     repartition_range_write,
     salted_groupby_sum,
@@ -33,7 +34,7 @@ def test_bucketed_join_has_no_shuffle(spark):
             spark.table("t_lineitem_b"),
             F.col("o_orderkey") == F.col("l_orderkey"),
         )
-        plan = j._jdf.queryExecution().executedPlan().toString()
+        plan = executed_plan(j)
         assert "Exchange hashpartitioning" not in plan, plan
         # and it still returns the right row count
         expected = (

@@ -59,12 +59,6 @@ def test_small_or_multigroup_sources_pass_through(tmp_path, monkeypatch):
     assert lc.split_layout_path(p2, "multi") is None
 
 
-def test_disable_env(tmp_path, monkeypatch, big_single_file):
-    src, _ = big_single_file
-    monkeypatch.setenv("SPARK_GRAFT_LAYOUT_CACHE", "0")
-    assert lc.split_layout_path(src, "lineitem") is None
-
-
 def test_same_second_rewrite_gets_a_new_split(tmp_path, monkeypatch):
     """A same-size, same-row-count rewrite within one second is a new
     source: the split tag carries the fingerprint's mtime_ns, not whole

@@ -15,6 +15,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
+from matrixone_spark import obs
 from matrixone_spark.matcache import MaterializationCache, fingerprint
 from tests.conftest import SF_DIR
 
@@ -84,9 +85,7 @@ def test_app_ids_coexist():
 
 
 def _assert_oracle(spark, query, sf_dir):
-    from matrixone_spark.oracle import compare_frames, run_oracle
-
-    problems = compare_frames(query.fn(spark, sf_dir).toPandas(), run_oracle(query.oracle, sf_dir))
+    problems = obs.check(spark, query, sf_dir).problems
     assert not problems, f"{query.name}:\n" + "\n".join(problems)
 
 

@@ -5,19 +5,13 @@ from __future__ import annotations
 
 import re
 
+from matrixone_spark.obs import executed_plan, final_plan
 from matrixone_spark.queries import load_all
 from tests.conftest import SF_DIR
 
 
 def _plan(spark, name: str) -> str:
-    return load_all()[name].fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
-
-
-def _final_plan(df) -> str:
-    """Run ``df`` and return its AQE final plan (AQE prints the final and
-    the initial plan; only the first section ran)."""
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    return executed_plan(load_all()[name].fn(spark, SF_DIR))
 
 
 def _lambda_bodies(plan: str) -> "list[str]":
@@ -38,7 +32,7 @@ def test_q5_broadcasts_dims_after_aqe(spark):
     the point of not forcing them). Assert on the POST-execution final plan."""
     df = load_all()["tpch_q5"].fn(spark, SF_DIR)
     df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert plan.count("BroadcastHashJoin") >= 4, plan
     # fact-fact joins (lineitem⋈orders) may legitimately stay sort-merge
     assert plan.count("SortMergeJoin") <= 2, plan
@@ -86,10 +80,10 @@ def test_sql_join_hints_respected(spark):
         # kill auto-broadcast so only the hint can produce a broadcast join
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         bcast = eng.sql(q.format(h="BROADCAST(c)"))
-        plan = bcast._jdf.queryExecution().executedPlan().toString()
+        plan = executed_plan(bcast)
         assert "BroadcastHashJoin" in plan, plan
         merge = eng.sql(q.format(h="MERGE(c)"))
-        plan_m = merge._jdf.queryExecution().executedPlan().toString()
+        plan_m = executed_plan(merge)
         assert "SortMergeJoin" in plan_m, plan_m
         assert bcast.first().n == merge.first().n > 0
     finally:
@@ -99,10 +93,7 @@ def test_sql_join_hints_respected(spark):
 def test_bvt_battery_constant_folds_no_scan(spark):
     """The BVT batteries must compile to constant-folded one-row unions —
     zero parquet scans, values computed at optimization time."""
-    from matrixone_spark.queries import load_all
-
-    df = load_all()["bvt_select_battery"].fn(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(spark, "bvt_select_battery")
     assert "Scan parquet" not in plan
     assert "OneRowRelation" in plan
 
@@ -110,10 +101,7 @@ def test_bvt_battery_constant_folds_no_scan(spark):
 def test_s2_bucket_join_is_single_shuffle_equi_join(spark):
     """The S2-bucketed spatial join must plan as an equi-join on the cell id
     (bounded-key shuffle), never a cross join."""
-    from matrixone_spark.queries import load_all
-
-    df = load_all()["geo_s2_bucket_join"].fn(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(spark, "geo_s2_bucket_join")
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert plan.count("Scan parquet") == 2
 
@@ -160,7 +148,7 @@ def test_fulltext_boolean_single_postings_scan(spark):
     d = Catalog(spark, SF_DIR).table("documents")
     idx = FullTextIndex.build_cached(d, "doc_id", "text")
     df = idx.match_pattern("table <query >spark ~slow", algo="tfidf")
-    final = _final_plan(df)
+    final = final_plan(df)
     assert final.count("InMemoryTableScan") <= 2, final[:800]
     assert "Generate" in final, final[:800]  # the explode probe
 
@@ -176,7 +164,7 @@ def test_simhash_pairs_single_signature_subtree(spark):
 
     d = Catalog(spark, SF_DIR).table("documents").filter(F.col("doc_id") < 60)
     df = simhash_pairs(d, "doc_id", "text", max_hamming=10)
-    final = _final_plan(df)
+    final = final_plan(df)
     n_scans = len(re.findall(r"FileScan parquet[^\n]*documents", final))
     assert n_scans == 1, (n_scans, final[:800])
 
@@ -204,14 +192,14 @@ def test_search_scan_stages_do_per_row_work_once(spark, monkeypatch):
     monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
     registry = load_all()
     plans = {
-        name: _final_plan(registry[name].fn(spark, SF_DIR))
+        name: final_plan(registry[name].fn(spark, SF_DIR))
         for name in (
             "pipeline_clean_corpus", "text_lang_guess", "dedup_ngram_jaccard",
             "dedup_minhash_lsh",
         )
     }
     (sets,) = checkpointed
-    plans["minhash shingle sets"] = _final_plan(sets)
+    plans["minhash shingle sets"] = final_plan(sets)
     for name, needle, want in (
         ("pipeline_clean_corpus", "regexp_extract_all(", 5),
         ("text_lang_guess", "regexp_extract_all(", 4),
@@ -230,7 +218,7 @@ def test_arrow_udf_plans_name_the_kernel(spark):
     from matrixone_spark.functions import mysql as M
 
     df = spark.createDataFrame([("MySQL",)], "s string")
-    plan = _final_plan(df.select(M.crc32("s")))
+    plan = final_plan(df.select(M.crc32("s")))
     assert re.search(r"ArrowEvalPython \[_k_crc32\(s#\d+\)", plan), plan
-    sql_plan = _final_plan(spark.sql("SELECT mo_conv('ff', 16, 10)"))
+    sql_plan = final_plan(spark.sql("SELECT mo_conv('ff', 16, 10)"))
     assert re.search(r"ArrowEvalPython \[mo_conv\(", sql_plan), sql_plan

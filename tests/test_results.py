@@ -3,6 +3,7 @@
 import pytest
 
 from matrixone_spark.catalog import Catalog
+from matrixone_spark.obs import total_jobs
 from matrixone_spark.results import ResultStore, SnapshotStore
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -39,10 +40,9 @@ def test_snapshot_immutable_copy(spark, tmp_path):
 
 def _jobs_started(spark, build) -> "tuple[int, object]":
     """Spark jobs started while ``build()`` runs, and its result."""
-    sched = spark.sparkContext._jsc.sc().dagScheduler()
-    j0 = sched.numTotalJobs()
+    j0 = total_jobs(spark)
     out = build()
-    return sched.numTotalJobs() - j0, out
+    return total_jobs(spark) - j0, out
 
 
 def test_rescan_starts_no_job_and_keeps_inferred_schema(spark, tmp_path):

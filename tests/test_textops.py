@@ -12,6 +12,7 @@ from decimal import ROUND_HALF_UP, Decimal
 from pyspark.sql import functions as F
 
 import matrixone_spark.functions.text as T
+from matrixone_spark.obs import executed_plan, final_plan
 from matrixone_spark.queries import load_all
 from tests.conftest import SF_DIR
 
@@ -100,10 +101,7 @@ def test_pipeline_scan_stage_codegen(spark):
     codegen (`*(n)`) and hold no lambdafunction (CodegenFallback) — the
     only higher-order expressions left in the plan are the survivors-only
     fingerprint projection."""
-    df = load_all()["pipeline_clean_corpus"].fn(spark, SF_DIR)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]  # AQE prints both sections
+    final = final_plan(load_all()["pipeline_clean_corpus"].fn(spark, SF_DIR))
     ops = {}
     for line in final.splitlines():
         op = line.lstrip().lstrip("+-: ")
@@ -120,11 +118,5 @@ def test_pipeline_scan_stage_codegen(spark):
 
 
 def test_token_stats_no_higher_order_functions(spark):
-    plan = (
-        load_all()["text_token_stats"]
-        .fn(spark, SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = executed_plan(load_all()["text_token_stats"].fn(spark, SF_DIR))
     assert "lambdafunction" not in plan, plan[:2000]

@@ -9,6 +9,7 @@ import math
 from pyspark.sql import functions as F
 
 from matrixone_spark.catalog import Catalog
+from matrixone_spark.obs import executed_plan
 from matrixone_spark.operators.knn import IvfIndex, knn_exact
 from tests.conftest import SF_DIR
 
@@ -56,7 +57,7 @@ def test_lsh_ann_recall_vs_exact(spark):
 def test_knn_exact_plan_has_no_shuffle_before_topk(spark):
     """ProductL2 parity must plan as TakeOrderedAndProject, not sort+shuffle."""
     e = Catalog(spark, SF_DIR).table("embeddings")
-    plan = knn_exact(e, "embedding", QVEC, 10, "vec_id")._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(knn_exact(e, "embedding", QVEC, 10, "vec_id"))
     assert "TakeOrderedAndProject" in plan, plan
 
 

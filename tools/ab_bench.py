@@ -3,12 +3,12 @@
 Wall-clock on this shared host swings ±30% in bursts of tens of seconds, so
 back-to-back wall comparisons of sub-second queries are useless.  This harness
 runs the variants INTERLEAVED (A B A B ...) in one session and reports, per
-run, both wall time and the delta of the cluster-wide task `executorRunTime`
-sum read from the live AppStatusStore — CPU-time-ish work actually done by
-tasks, which a co-tenant noise burst inflates far less than wall clock (tasks
-still run, they just time-slice).  min/median over runs of BOTH metrics is
-printed; a change that helps should move executor-run-time down regardless of
-which runs caught a burst.
+run, both wall time and the task `executorRunTime` of the stages the run
+started, read from the live AppStatusStore by `obs.measure` — CPU-time-ish
+work actually done by tasks, which a co-tenant noise burst inflates far less
+than wall clock (tasks still run, they just time-slice).  min/median over
+runs of BOTH metrics is printed; a change that helps should move
+executor-run-time down regardless of which runs caught a burst.
 
 Usage (library):
     from tools.ab_bench import run_ab
@@ -18,25 +18,8 @@ Usage (library):
 from __future__ import annotations
 
 import statistics
-import time
 
-
-def total_executor_runtime_ms(spark) -> int:
-    """Sum of executorRunTime over all stages currently retained in the live
-    AppStatusStore (works with spark.ui.enabled=false)."""
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    gw = sc._gateway
-    jvm = sc._jvm
-    # Spark 4 signature: stageList(statuses, details, withSummaries, quantiles, taskStatus)
-    seq = store.stageList(
-        jvm.java.util.ArrayList(), False, False, gw.new_array(jvm.double, 0), jvm.java.util.ArrayList()
-    )
-    it = seq.iterator()
-    total = 0
-    while it.hasNext():
-        total += it.next().executorRunTime()
-    return total
+from matrixone_spark import obs
 
 
 def run_ab(spark, variants: "dict[str, callable]", reps: int = 5, warmup: int = 1) -> dict:
@@ -49,11 +32,11 @@ def run_ab(spark, variants: "dict[str, callable]", reps: int = 5, warmup: int = 
     ert: dict[str, list[int]] = {n: [] for n in variants}
     for _ in range(reps):
         for name, fn in variants.items():
-            e0 = total_executor_runtime_ms(spark)
-            t0 = time.time()
-            fn().collect()
-            wall[name].append(time.time() - t0)
-            ert[name].append(total_executor_runtime_ms(spark) - e0)
+            rec = obs.measure(spark, fn)
+            if rec.error is not None:
+                raise RuntimeError(f"{name}: {rec.error}")
+            wall[name].append(rec.total_ms / 1e3)
+            ert[name].append(rec.run_ms)
     out = {}
     for name in variants:
         out[name] = {

@@ -24,6 +24,7 @@ import os
 import re
 import sys
 
+from matrixone_spark.engine import _explain_text
 from matrixone_spark.queries import load_all
 from matrixone_spark.session import get_spark
 
@@ -94,9 +95,7 @@ def main() -> None:
             # in a NEW query execution — the df's own AQE plan would stay
             # unexecuted and explain would print the initial plan.
             df.collect()
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-            )
+            plan = _explain_text(df)
         except Exception as exc:  # noqa: BLE001
             plan = f"ERROR: {type(exc).__name__}: {exc}"
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")

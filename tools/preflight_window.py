@@ -49,7 +49,7 @@ def main() -> int:
         else:
             names.append(a)
 
-    from matrixone_spark.oracle import compare_frames, run_oracle
+    from matrixone_spark import obs
     from matrixone_spark.queries import load_all
     from matrixone_spark.session import get_spark
 
@@ -59,17 +59,14 @@ def main() -> int:
     results = {}
     t_all = time.time()
     for name in window:
-        q = reg[name]
         t0 = time.time()
         try:
-            got = q.fn(spark, sf_dir).toPandas()
-            if q.oracle is not None:
-                exp = run_oracle(q.oracle, sf_dir)
-                problems = compare_frames(got, exp)
-                status = "pass" if not problems else "FAIL: " + "; ".join(problems[:3])
+            chk = obs.check(spark, reg[name], sf_dir)
+            if chk.problems is None:
+                _driver_canon(chk.got)
+                status = f"rows_only({len(chk.got)})"
             else:
-                _driver_canon(got)
-                status = f"rows_only({len(got)})"
+                status = "pass" if not chk.problems else "FAIL: " + "; ".join(chk.problems[:3])
         except Exception as e:  # noqa: BLE001
             status = "ERROR: " + repr(e)[:300]
             traceback.print_exc()

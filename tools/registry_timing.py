@@ -1,8 +1,11 @@
 """Time EVERY registered query (cold + warm) at $SPARK_GRAFT_SF_DIR.
 
 Optimization-round census: the bench covers 18 queries; this sweeps all ~195
-so non-bench outliers surface. Prints one JSON line per query plus a sorted
-summary. Not part of the driver contract — a measurement tool only.
+so non-bench outliers surface. Each record carries the cold run, the best
+warm run and, of the warm runs, the best DataFrame build alone (``fn()``
+without an action: the Python/py4j plan-construction share). Prints one JSON
+line per query plus a sorted summary. Not part of the `__spark_entry__`
+contract — a measurement tool only.
 
 Usage: python tools/registry_timing.py [out.json] [warm_runs]
 """
@@ -12,8 +15,8 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
+from matrixone_spark import obs
 from matrixone_spark.queries import load_all
 from matrixone_spark.session import get_spark
 
@@ -25,26 +28,23 @@ def main() -> None:
     registry = load_all()
     spark = get_spark("mospark-registry-timing")
     spark.sparkContext.setLogLevel("ERROR")
-    # same warmup as bench.py
-    spark.sql("SELECT 1").collect()
-    spark.range(1000).mapInArrow(lambda it: it, "id long").count()
+    obs.warm_up(spark, sf_dir)
 
     results: dict[str, dict] = {}
     for name, q in registry.items():
-        rec: dict = {}
-        try:
-            t0 = time.time()
-            rows = q.fn(spark, sf_dir).collect()
-            rec["cold"] = round(time.time() - t0, 3)
-            rec["rows"] = len(rows)
-            warm = []
-            for _ in range(warm_runs):
-                t0 = time.time()
-                q.fn(spark, sf_dir).collect()
-                warm.append(round(time.time() - t0, 3))
-            rec["warm"] = min(warm)
-        except Exception as exc:  # noqa: BLE001
-            rec["err"] = f"{type(exc).__name__}: {exc}"[:200]
+        runs = [obs.measure(spark, lambda: q.fn(spark, sf_dir))]
+        while runs[-1].error is None and len(runs) <= warm_runs:
+            runs.append(obs.measure(spark, lambda: q.fn(spark, sf_dir)))
+        if runs[-1].error is not None:
+            rec = {"err": runs[-1].error[:200]}
+        else:
+            warm = runs[1:]
+            rec = {
+                "cold": round(runs[0].total_ms / 1e3, 3),
+                "rows": runs[0].rows,
+                "warm": round(min(r.total_ms for r in warm) / 1e3, 3),
+                "build": round(min(r.build_ms for r in warm) / 1e3, 3),
+            }
         results[name] = rec
         print(json.dumps({name: rec}), flush=True)
 
@@ -61,6 +61,7 @@ def main() -> None:
         for n, e in errs.items():
             print(f"{n}: {e}")
     print(f"\ntotal warm: {sum(r['warm'] for r in ok.values()):.2f}s over {len(ok)} queries")
+    print(f"total build: {sum(r['build'] for r in ok.values()):.3f}s")
 
 
 if __name__ == "__main__":

@@ -17,7 +17,6 @@ from __future__ import annotations
 import math
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -45,6 +44,7 @@ def main() -> None:
         del args[i : i + 2]
     names = args or DEFAULT_QUERIES
 
+    from matrixone_spark import obs
     from matrixone_spark.queries import load_all
     from matrixone_spark.session import get_spark
 
@@ -52,7 +52,6 @@ def main() -> None:
     spark = get_spark("scale-slope")
     spark.sparkContext.setLogLevel("ERROR")
 
-    table = {}
     for name in names:
         q = reg[name]
         times = []
@@ -60,14 +59,11 @@ def main() -> None:
             if not os.path.isdir(d):
                 times.append(None)
                 continue
-            best = None
-            for _ in range(runs):
-                t0 = time.time()
-                q.fn(spark, d).collect()
-                dt = time.time() - t0
-                best = dt if best is None else min(best, dt)
-            times.append(best)
-        table[name] = times
+            recs = [obs.measure(spark, lambda: q.fn(spark, d)) for _ in range(runs)]
+            for r in recs:
+                if r.error is not None:
+                    raise RuntimeError(f"{name} at {label}: {r.error}")
+            times.append(min(r.total_ms for r in recs) / 1e3)
         row = [f"{t:.2f}s" if t else "-" for t in times]
         exps = []
         for i in range(1, len(times)):

@@ -1,11 +1,10 @@
 """Driver-style correctness pass at sf1 (VERDICT r7 item #9).
 
 The r7 scale measurement proved TIME scales sublinearly sf0.1→sf1; this
-proves ANSWERS scale too: run a ~20-query sample (the bench headline set
-plus the dedup/fulltext/geo families) from __spark_entry__.queries()
-against the same oracle_sql() on the sf1 fixtures
-(tools/make_sf.py output), hash-gated exactly like the round driver
-(oracle.compare_frames: bit-exact, order/column-name insensitive).
+proves ANSWERS scale too: run the registry queries against their DuckDB
+oracles on the sf1 fixtures (tools/make_sf.py output), hash-gated by
+obs.check (oracle.compare_frames: bit-exact, order/column-name
+insensitive).
 
 Usage: python tools/sf1_correctness.py [sf_dir]  (default /tmp/mospark_sf1)
 Writes CORRECTNESS_SF1.json at the repo root.
@@ -20,17 +19,6 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-# r10 (VERDICT r9 ask #7): the WHOLE registry, minus the bvt_* replay
-# batteries (baked fixture SQL — the scale factor is meaningless there).
-# Everything else runs against the sf1 fixtures, hash-gated vs its own
-# DuckDB oracle exactly like the round driver.
-
-
-def _sample() -> "list[str]":
-    from matrixone_spark.queries import load_all
-
-    return [n for n in load_all() if not n.startswith("bvt_")]
 
 
 def _close_frames(a, b, rel: float = 1e-9) -> bool:
@@ -64,51 +52,45 @@ def _close_frames(a, b, rel: float = 1e-9) -> bool:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/mospark_sf1"
-    import importlib
-
-    mod = importlib.import_module("__spark_entry__")
-    from matrixone_spark.oracle import compare_frames, run_oracle
+    from matrixone_spark import obs
+    from matrixone_spark.queries import load_all
     from matrixone_spark.session import get_spark
 
     spark = get_spark("sf1-correctness")
     spark.sparkContext.setLogLevel("ERROR")
-    qs, osql = mod.queries(), mod.oracle_sql()
-    names = _sample()
-    if len(sys.argv) > 2:  # optional explicit names after sf_dir
-        names = sys.argv[2:]
+    registry = load_all()
+    # optional explicit names after sf_dir; by default the WHOLE registry
+    # minus the bvt_* replay batteries (baked fixture SQL — the scale
+    # factor is meaningless there)
+    names = sys.argv[2:] or [n for n in registry if not n.startswith("bvt_")]
     out: "dict[str, dict]" = {}
     for name in names:
-        if name not in qs:
+        if name not in registry:
             out[name] = {"status": "missing"}
             continue
         t0 = time.time()
         try:
-            got = qs[name](spark, sf_dir).toPandas()
+            chk = obs.check(spark, registry[name], sf_dir)
         except Exception as e:
             out[name] = {"status": "error", "error": str(e)[:300]}
             print(name, "ERROR", str(e)[:120])
             continue
         rec: "dict[str, object]" = {
-            "rows": int(len(got)), "sec": round(time.time() - t0, 2),
+            "rows": int(len(chk.got)), "sec": round(time.time() - t0, 2),
         }
-        if name in osql:
-            try:
-                want = run_oracle(osql[name], sf_dir)
-                probs = compare_frames(got, want)
-                rec["status"] = "match" if not probs else "MISMATCH"
-                if probs and _close_frames(got, want):
-                    # sf1 magnitudes expose 1-ulp double→decimal rounding
-                    # drift in per-row products (sum_charge: …94159 vs
-                    # …941593) — value-identical to 1e-9 relative; the
-                    # driver's own sf0.01 gate stays bit-exact
-                    rec["status"] = "match_float_tol"
-                elif probs:
-                    rec["problems"] = [str(p)[:200] for p in probs[:3]]
-            except Exception as e:
-                rec["status"] = "oracle_error"
-                rec["error"] = str(e)[:300]
-        else:
+        if chk.problems is None:
             rec["status"] = "rows_only"
+        elif not chk.problems:
+            rec["status"] = "match"
+        elif _close_frames(chk.got, chk.want):
+            # sf1 magnitudes expose 1-ulp double→decimal rounding
+            # drift in per-row products (sum_charge: …94159 vs
+            # …941593) — value-identical to 1e-9 relative; the
+            # sf0.01 gate stays bit-exact
+            rec["status"] = "match_float_tol"
+        else:
+            rec["status"] = "MISMATCH"
+            rec["problems"] = [str(p)[:200] for p in chk.problems[:3]]
         out[name] = rec
         print(name, rec["status"], rec["rows"], f"{rec['sec']}s")
     summary = {
@@ -119,8 +101,7 @@ def main() -> None:
         ),
         "fail": sum(
             1 for r in out.values()
-            if r.get("status") in ("MISMATCH", "error", "oracle_error",
-                                   "missing")
+            if r.get("status") in ("MISMATCH", "error", "missing")
         ),
         "queries": out,
     }
