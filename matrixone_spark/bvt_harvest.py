@@ -195,6 +195,8 @@ def _validate(spark, con, translate, expr: str) -> str:
     9.999999999999998e16 to 1e17 where DuckDB does not."""
     import math
 
+    from matrixone_spark.functions.sql_surface import run_sql
+
     try:
         d = con.execute(
             f"SELECT ROUND(CAST(({expr}) AS DOUBLE), 6) AS v"
@@ -209,9 +211,9 @@ def _validate(spark, con, translate, expr: str) -> str:
     try:
         t = translate(expr)
         if duck_mode == "num":
-            s = spark.sql(f"SELECT ROUND(CAST(({t}) AS DOUBLE), 6) AS v").collect()[0][0]
+            s = run_sql(spark, f"SELECT ROUND(CAST(({t}) AS DOUBLE), 6) AS v").collect()[0][0]
         else:
-            s = spark.sql(f"SELECT CAST(({t}) AS STRING) AS v").collect()[0][0]
+            s = run_sql(spark, f"SELECT CAST(({t}) AS STRING) AS v").collect()[0][0]
     except Exception:
         return "spark_fail"
     if duck_mode == "num":

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matrixone_spark.bvt_harvest import _strip_comments, split_statements
+from matrixone_spark.functions.sql_surface import register_spark, run_sql
 from matrixone_spark.mysql_dialect import (
     _rewrite_calls,
     _split_top_level,
@@ -1054,6 +1055,12 @@ class BvtSession:
     # (e.g. an INSERT..SELECT off generate_series) and stays lazy.
     _MATERIALIZE_CAP = int(os.environ.get("BVT_MATERIALIZE_CAP", "20000"))
 
+    def _expr(self, text: str):
+        """``F.expr(text)`` after registering the SQL-surface functions the
+        text calls (``run_sql`` does the same for whole statements)."""
+        register_spark(self.spark, text)
+        return F.expr(text)
+
     def _register(self, name: str, df: DataFrame, materialize: bool = True) -> None:
         if materialize:
             # Eagerly pin table state as a local relation: scripts chain
@@ -1160,10 +1167,10 @@ class BvtSession:
                     src = provided[c]
                     if src_types.get(src, "") == "binary":
                         sel.append(
-                            F.expr(f"mo_json_blob(hex(`{src}`))").alias(c))
+                            self._expr(f"mo_json_blob(hex(`{src}`))").alias(c))
                     else:
                         sel.append(
-                            F.expr(f"mo_json_store(CAST(`{src}` AS STRING))")
+                            self._expr(f"mo_json_store(CAST(`{src}` AS STRING))")
                             .alias(c))
                     continue
                 if c in meta.get("texts", {}):
@@ -1178,7 +1185,7 @@ class BvtSession:
                     if cap <= 255:
                         sel.append(
                             F.when(v.isNull() | (blen <= cap), v)
-                            .otherwise(F.expr(
+                            .otherwise(self._expr(
                                 f"substring(CAST({provided[c]} AS STRING), 1, "
                                 f"CAST(floor({cap} / ceil("
                                 f"octet_length(CAST({provided[c]} AS STRING)) / "
@@ -1369,7 +1376,7 @@ class BvtSession:
                         expr = F.coalesce(
                             expr,
                             *[
-                                F.expr(f"{fn}({provided[c]}, '{p}')").cast(t)
+                                self._expr(f"{fn}({provided[c]}, '{p}')").cast(t)
                                 for p in pats
                             ],
                         )
@@ -1384,7 +1391,7 @@ class BvtSession:
                             )
                             expr = F.coalesce(
                                 expr,
-                                F.expr(
+                                self._expr(
                                     f"try_to_timestamp(regexp_replace("
                                     f"{provided[c]}, '{cre}', "
                                     f"'$1-$2-$3 $4:$5:$6.$7'))"
@@ -1435,7 +1442,7 @@ class BvtSession:
                     mxb = (1 << bitcols[c]) - 1
                     stb = src_types.get(provided[c], "")
                     if stb.startswith(("string", "binary")):
-                        b = F.expr(
+                        b = self._expr(
                             f"conv(hex(CAST({provided[c]} AS BINARY)), 16, 10)"
                         ).cast("long")
                     elif stb.startswith("boolean"):
@@ -1519,7 +1526,7 @@ class BvtSession:
                         expr = F.lit(raw)
                     expr = expr.cast(t)
                 else:
-                    expr = (F.expr(dflt) if dflt is not None else F.lit(None)).cast(t)
+                    expr = (self._expr(dflt) if dflt is not None else F.lit(None)).cast(t)
                 if dflt is not None and c in tsprec and t == "timestamp":
                     # DEFAULT CURRENT_TIMESTAMP stores at the column's
                     # declared precision like provided values do —
@@ -1527,7 +1534,7 @@ class BvtSession:
                     # `updated_at = @captured` compare holds
                     # (on_duplicate_key_modern ts_unchanged rows)
                     sc0 = 10 ** (6 - tsprec[c])
-                    expr = F.expr(
+                    expr = self._expr(
                         f"timestamp_micros(CAST(FLOOR(unix_micros(CAST({dflt} "
                         f"AS TIMESTAMP)) / {sc0} + 0.5) * {sc0} AS BIGINT))"
                     ).cast(t)
@@ -1622,7 +1629,7 @@ class BvtSession:
         (creation order, so views-on-views chain correctly)."""
         for name, sql in self.views.items():
             try:
-                df = self.spark.sql(sql)
+                df = run_sql(self.spark, sql)
                 self.tables[name] = df
                 df.createOrReplaceTempView(name)
             except Exception:
@@ -1671,7 +1678,7 @@ class BvtSession:
                 # N, -1 (reference row_count.result; r10 advisor) — the
                 # "select" arm of execute() applies that reset
                 n = self._resolve_rowcount()
-                return "select", self.spark.sql(
+                return "select", run_sql(self.spark,
                     f"select CAST({n} AS BIGINT) as `row_count()`"
                 )
             from matrixone_spark.mysql_dialect import _FROM_DUAL_RE
@@ -1692,7 +1699,7 @@ class BvtSession:
             stmt = self._rewrite_decimal_mul(stmt)
             stmt = self._rewrite_packed_temporal_cmp(stmt)
             stmt = self._rewrite_unsigned_sub(stmt)
-            return "select", self.spark.sql(translate(stmt))
+            return "select", run_sql(self.spark, translate(stmt))
         if head == "set":
             # fulltext session variables the scripts drive; other SETs keep
             # the unsupported-statement path (user @vars go via preprocess)
@@ -1736,7 +1743,7 @@ class BvtSession:
                     raise RuntimeError(f"view {name} does not exist")
                 body = unmask_literals(avm.group("body"), spans)
                 sql = translate(body)
-                df = self.spark.sql(sql)  # validate eagerly
+                df = run_sql(self.spark, sql)  # validate eagerly
                 self.views[name] = sql
                 self._register(name, df, materialize=False)
                 # DuckDB has no ALTER VIEW — replace the definition
@@ -1815,7 +1822,7 @@ class BvtSession:
                 if name in self.tables:
                     raise RuntimeError(f"table {name} already exists")
                 body = unmask_literals(ctm.group(2), spans)
-                df = self.spark.sql(translate(body))
+                df = run_sql(self.spark, translate(body))
                 _SPARK_T = {
                     "tinyint": "int", "smallint": "int", "integer": "int",
                     "long": "bigint", "float": "float", "real": "double",
@@ -1871,7 +1878,7 @@ class BvtSession:
                     # ORIGINAL definition after the failed re-create
                     raise RuntimeError(f"view {name} already exists")
                 sql = translate(unmask_literals(vm.group("body"), spans))
-                df = self.spark.sql(sql)  # validate eagerly
+                df = run_sql(self.spark, sql)  # validate eagerly
                 self.views[name] = sql
                 self._register(name, df, materialize=False)
                 return "ddl", None
@@ -2026,11 +2033,11 @@ class BvtSession:
             )
             vict = base
             if cond is not None:
-                vict = base.filter(f"coalesce(({cond}), false)")
+                vict = base.filter(self._expr(f"coalesce(({cond}), false)"))
             if m.get("ob"):
                 ob = translate(unmask_literals(m["ob"], spans))
                 vict = vict.orderBy(*[
-                    F.expr(part.strip())
+                    self._expr(part.strip())
                     for part in _split_top_level(ob) if part.strip()
                 ])
             if m.get("lim"):
@@ -2474,7 +2481,7 @@ class BvtSession:
                 values_masked = ", ".join(rows_fix)
             values_text = unmask_literals(values_masked, spans).strip()
             try:
-                src = self.spark.sql(translate(f"SELECT * FROM VALUES {values_text}"))
+                src = run_sql(self.spark, translate(f"SELECT * FROM VALUES {values_text}"))
             except Exception:
                 # VALUES requires foldable expressions; rows calling UDFs
                 # (insert into t values (1, s2_cellid(...))) re-shape into
@@ -2485,10 +2492,10 @@ class BvtSession:
                     if not (row.startswith("(") and row.endswith(")")):
                         raise SkipStatement("unparseable VALUES row")
                     legs.append("SELECT " + unmask_literals(row[1:-1], spans))
-                src = self.spark.sql(translate(" UNION ALL ".join(legs)))
+                src = run_sql(self.spark, translate(" UNION ALL ".join(legs)))
         else:
             sub = unmask_literals(m.group("hd") + rest_masked, spans)
-            src = self.spark.sql(translate(sub))
+            src = run_sql(self.spark, translate(sub))
         new = self._cast_to_schema(name, src, cols, ignore=ignore)
         meta = self.colmeta.get(name, {})
         cur = self.tables[name]
@@ -2634,7 +2641,7 @@ class BvtSession:
         added: "list[str]" = []
         try:
             for nm_, cte_body in defs:
-                df = self.spark.sql(translate(cte_body))
+                df = run_sql(self.spark, translate(cte_body))
                 saved[nm_] = self.tables.get(nm_)
                 self._register(nm_, df)
                 added.append(nm_)
@@ -2727,7 +2734,7 @@ class BvtSession:
         o_df = self.tables[other[0]].withColumn("__mu_hit", F.lit(1))
         joined = (
             t_df.alias(tgt[1])
-            .join(o_df.alias(other[1]), on=F.expr(cond), how="left")
+            .join(o_df.alias(other[1]), on=self._expr(cond), how="left")
             .dropDuplicates([rid])
         )
         hit = F.col("__mu_hit") == 1
@@ -2739,7 +2746,7 @@ class BvtSession:
                 sel.append(base.alias(c))
             else:
                 sel.append(
-                    F.when(hit, F.expr(a).cast(ty)).otherwise(base).alias(c)
+                    F.when(hit, self._expr(a).cast(ty)).otherwise(base).alias(c)
                 )
         final = joined.select(*sel)
         self._rowcount_pending = joined.filter(hit).select(rid)
@@ -2786,7 +2793,7 @@ class BvtSession:
                 rid_dfs[i] = (df, rc)
             a = df.alias(t[1])
             joined = a if joined is None else joined.crossJoin(a)
-        matched_all = joined.filter(F.expr(cond))
+        matched_all = joined.filter(self._expr(cond))
         overrides: "list[str]" = []
         first_matched = None
         for i, t in enumerate(tables):
@@ -2855,7 +2862,7 @@ class BvtSession:
                         )
                     else:
                         sqltxt = f"substring({sv}, 1, {sw})"
-                expr = F.when(matched, F.expr(sqltxt).cast(t)).otherwise(
+                expr = F.when(matched, self._expr(sqltxt).cast(t)).otherwise(
                     F.col(f"__c.{col}")
                 )
                 sel.append(expr.alias(col))
@@ -2987,7 +2994,7 @@ class BvtSession:
                     "AS BIGINT)) AS __mo_now"
                 )
                 row2 = (
-                    self.spark.sql("SELECT " + ", ".join(exprs))
+                    run_sql(self.spark, "SELECT " + ", ".join(exprs))
                     .collect()[0]
                     .asDict()
                 )
@@ -3075,7 +3082,7 @@ class BvtSession:
             out = df
             for n, (c, p) in zip(names, kp):
                 e = (
-                    F.expr(f"substring(cast(`{c}` as string), 1, {p})")
+                    self._expr(f"substring(cast(`{c}` as string), 1, {p})")
                     if p else F.col(c)
                 )
                 out = out.withColumn(n, e)
@@ -3347,7 +3354,7 @@ class BvtSession:
             else:
                 sel.append(c)
         df.createOrReplaceTempView("__mo_genc")
-        return self.spark.sql(f"SELECT {', '.join(sel)} FROM __mo_genc")
+        return run_sql(self.spark, f"SELECT {', '.join(sel)} FROM __mo_genc")
 
     _RETURNING_KW = "returning"
 
@@ -3390,7 +3397,7 @@ class BvtSession:
         rows = df.collect()
         snap_df = self.spark.createDataFrame(rows, df.schema)
         snap_df.createOrReplaceTempView("__mo_returning")
-        return self.spark.sql(f"SELECT {translate(p)} FROM __mo_returning")
+        return run_sql(self.spark, f"SELECT {translate(p)} FROM __mo_returning")
 
     def _dml_returning(self, head: str, masked: str, spans,
                        rpos: int) -> "tuple[str, DataFrame | None]":
@@ -3427,7 +3434,7 @@ class BvtSession:
                     r"\1", core,
                 )
                 core = re.sub(rf"(?i)\b{re.escape(alias)}\s*\.", "", core)
-            pre = self.tables[name].filter(f"coalesce(({cond}), false)")
+            pre = self.tables[name].filter(self._expr(f"coalesce(({cond}), false)"))
             pre = self.spark.createDataFrame(pre.collect(),
                                              self.tables[name].schema)
             self._execute(core)
@@ -3519,7 +3526,7 @@ class BvtSession:
         if limit_n is not None:
             inner = (f"(SELECT *, monotonically_increasing_id() AS "
                      f"__upd_rid__ FROM {name})")
-            ids = [str(r[0]) for r in self.spark.sql(
+            ids = [str(r[0]) for r in run_sql(self.spark,
                 f"SELECT __upd_rid__ FROM {inner} "
                 f"WHERE coalesce(({cond}), false) "
                 f"ORDER BY __upd_rid__ LIMIT {limit_n}").collect()]
@@ -3627,14 +3634,14 @@ class BvtSession:
                 )
             else:
                 sel.append(c)
-        updated = self.spark.sql(f"SELECT {', '.join(sel)} FROM {upd_src}")
-        self._rowcount_pending = self.spark.sql(
+        updated = run_sql(self.spark, f"SELECT {', '.join(sel)} FROM {upd_src}")
+        self._rowcount_pending = run_sql(self.spark,
             f"SELECT 1 FROM {upd_src} WHERE coalesce(({cond}), false)"
         )
         if meta.get("gencols"):
             updated = self._apply_gencols(name, updated)
         if getattr(self, "_want_affected", False):
-            aff = self.spark.sql(
+            aff = run_sql(self.spark,
                 f"SELECT {', '.join(sel)} FROM {upd_src} "
                 f"WHERE coalesce(({cond}), false)"
             )
@@ -5333,7 +5340,7 @@ class BvtSession:
                 if re.fullmatch(r"\s*@@\s*sql_mode\s*", expr, re.IGNORECASE):
                     self.uservars[name] = self.sql_mode
                     continue
-                row = self.spark.sql("select " + translate(expr)).collect()
+                row = run_sql(self.spark, "select " + translate(expr)).collect()
                 self.uservars[name] = row[0][0] if row else None
             return None
         smm = re.match(

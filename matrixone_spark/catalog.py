@@ -66,9 +66,11 @@ def _fix_nanos_timestamps(df: DataFrame) -> DataFrame:
 
 # Shared across Catalog instances: the driver sweep constructs a fresh
 # Catalog per query; re-reading parquet footers 100+ times is pure waste.
-# Keyed by applicationId (stable for a session's lifetime, never reused by a
-# later session the way id(spark) can be after GC) + (sf_dir, table name),
-# and rebuilt when the table's source file changes.
+# Keyed by applicationId + (sf_dir, table name, session UUID), and rebuilt
+# when the table's source file changes. A frame belongs to the session that
+# read it (its temp views, including spark.sql's {frame} arguments, land
+# there), so each session gets its own; the UUID, unlike id(spark), is never
+# reused by a later session.
 _TABLE_CACHE = MaterializationCache(LAZY_CAPACITY)
 
 
@@ -101,6 +103,7 @@ class Catalog:
         self.spark = spark
         self.sf_dir = sf_dir
         self.app_id = spark.sparkContext.applicationId
+        self.session_id = spark._jsparkSession.sessionUUID()
 
     def path(self, name: str) -> str:
         p = os.path.join(self.sf_dir, f"{name}.parquet")
@@ -125,7 +128,7 @@ class Catalog:
             split = split_layout_path(path, name)
             return _fix_nanos_timestamps(self.spark.read.parquet(split or path))
 
-        return _TABLE_CACHE.get(self.app_id, (self.sf_dir, name), [path], build)
+        return _TABLE_CACHE.get(self.app_id, (self.sf_dir, name, self.session_id), [path], build)
 
     def register_views(self) -> None:
         """Register every table as a temp view so ``spark.sql`` sees them."""

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from matrixone_spark.catalog import Catalog
+from matrixone_spark.functions.sql_surface import run_sql
 from matrixone_spark.session import get_spark
 
 
@@ -34,16 +35,15 @@ class Engine:
         return self.catalog.table(name)
 
     def sql(self, query: str, args: "dict | list | None" = None) -> DataFrame:
-        """Run SQL over the registered views.
+        """Run SQL over the registered views, after registering the SQL
+        surface functions (functions/sql_surface.py) the text calls.
 
         ``args`` gives parameterized execution (named ``:name`` or positional
         ``?``) — the batch analogue of the reference's PREPARE/EXECUTE
         surface (pkg/frontend/session.go:793 plan cache; SURVEY §3.2: Spark
         needs no plan cache, parameter binding covers the semantics).
         """
-        if args is not None:
-            return self.spark.sql(query, args)
-        return self.spark.sql(query)
+        return run_sql(self.spark, query, args)
 
     def mysql_sql(self, query: str, args: "dict | list | None" = None) -> DataFrame:
         """Run MySQL-dialect SQL: translates the known pattern divergences

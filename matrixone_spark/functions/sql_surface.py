@@ -19,6 +19,11 @@ functions BY NAME.  This module registers the names, in two tiers:
    (``con.create_function``), so the two replay engines agree by
    construction.
 
+A session registers a name on the first statement that calls it
+(``run_sql``; ``Engine.sql`` and ``Engine.mysql_sql`` go through it), not
+at session start: most sessions call none of the 207 names, and
+registering all of them cost several seconds of py4j round trips.
+
 ``spark.udf.register`` replaces a same-named Spark builtin for the
 session (st_asbinary, st_geomfromwkb and st_srid are deliberate overrides
 of Spark 4.1 builtins), but ``CREATE TEMPORARY FUNCTION`` cannot, so
@@ -33,9 +38,11 @@ per-function semantics cited inline.
 
 from __future__ import annotations
 
+import functools
 import ipaddress
 import json
 import re
+import threading
 import zlib
 
 from matrixone_spark.functions.json_fns import _jq_run, _k_json_contains, _try_jq_run
@@ -130,15 +137,14 @@ SPARK_SQL: "list[str]" = [
     # BVT corpus uses; other modes fall back to mode 0's Sunday weeks
     "CREATE OR REPLACE TEMPORARY FUNCTION mo_week2(d STRING, m INT) "
     "RETURNS INT RETURN CASE "
-    "WHEN m IN (1, 3) THEN weekofyear(CAST(d AS DATE)) "
-    f"ELSE CAST(({_WEEK0_SPARK}) AS INT) END",
+    "WHEN m IN (1, 3) THEN weekofyear(CAST(d AS DATE)) ELSE week(d) END",
     f"CREATE OR REPLACE TEMPORARY FUNCTION yearweek(d STRING) RETURNS BIGINT "
     f"RETURN {_YW0_SPARK}",
     # mode-parameterized YEARWEEK: 1/3 → ISO, everything else (incl. the
     # default 0 and its WeekYear twin 2) → the mode-0 borrow formula
     f"CREATE OR REPLACE TEMPORARY FUNCTION mo_yearweek2(d STRING, m INT) "
     f"RETURNS BIGINT RETURN CASE WHEN m IN (1, 3) THEN {_YW_ISO_SPARK} "
-    f"ELSE {_YW0_SPARK} END",
+    f"ELSE yearweek(d) END",
     "CREATE OR REPLACE TEMPORARY FUNCTION makedate(y DOUBLE, n DOUBLE) "
     "RETURNS DATE RETURN CASE WHEN n >= 1 THEN "
     "date_add(make_date(CAST(y AS INT), 1, 1), CAST(n AS INT) - 1) END",
@@ -1808,16 +1814,73 @@ def spark_udfs() -> "list[tuple[str, object, object]]":
     )
 
 
-def register_spark(spark) -> None:
-    """Register the full SQL-text surface on a SparkSession: pure-SQL
-    functions first (Catalyst-inlined), then every kernel-table row as one
-    variadic Arrow-batched UDF."""
+# The names this session has registered, comma-separated. RuntimeConfig is
+# per SparkSession (newSession() children start empty), unlike id(spark),
+# which CPython reuses after GC.
+_REGISTERED_TAG = "spark.mospark.sqlSurface.registered"
+# A call-shaped token: a name, optionally backquoted, before "(".
+_CALL = re.compile(r"`?(\w+)`?\s*\(")
+_REGISTER_LOCK = threading.Lock()
+
+
+def _called(text: str, names) -> "set[str]":
+    """The members of ``names`` that ``text`` calls, lowercased (Spark
+    resolves function names case-insensitively). A name inside a string
+    literal also counts; registering it is harmless."""
+    return {t.lower() for t in _CALL.findall(text)} & names
+
+
+@functools.cache
+def _surface() -> "tuple[dict, dict, dict, frozenset]":
+    """(name → CREATE statement, name → (kernel, return type), name → the
+    surface names its CREATE body calls, all 207 names)."""
+    ddls = {_CALL.search(ddl.split("FUNCTION", 1)[1]).group(1).lower(): ddl
+            for ddl in SPARK_SQL}
+    udfs = {name: (kernel, ret) for name, kernel, ret in spark_udfs()}
+    names = frozenset(ddls) | frozenset(udfs)
+    deps = {name: _called(ddl, names) - {name} for name, ddl in ddls.items()}
+    return ddls, udfs, deps, names
+
+
+def register_spark(spark, text: str) -> None:
+    """Register on ``spark`` the surface functions ``text`` calls and this
+    session has not registered yet: a pure-SQL function after the surface
+    functions its body calls, a kernel-table row as one variadic
+    Arrow-batched UDF. Text that calls none costs no py4j call."""
     from matrixone_spark.functions import arrow_udf
 
-    for ddl in SPARK_SQL:
-        spark.sql(ddl)
-    for name, kernel, ret in spark_udfs():
-        spark.udf.register(name, arrow_udf(kernel, ret))
+    ddls, udfs, deps, names = _surface()
+    wanted = _called(text, names)
+    if not wanted:
+        return
+    with _REGISTER_LOCK:
+        done = set(filter(None, spark.conf.get(_REGISTERED_TAG, "").split(",")))
+        if wanted <= done:
+            return
+
+        def add(name: str) -> None:
+            if name in done:
+                return
+            for dep in deps.get(name, ()):
+                add(dep)
+            if name in ddls:
+                spark.sql(ddls[name])
+            else:
+                spark.udf.register(name, arrow_udf(*udfs[name]))
+            done.add(name)
+
+        for name in sorted(wanted):
+            add(name)
+        spark.conf.set(_REGISTERED_TAG, ",".join(sorted(done)))
+
+
+def run_sql(spark, text: str, args=None, **kwargs):
+    """``spark.sql(text, args, **kwargs)`` after registering the surface
+    functions ``text`` calls: the one way SQL text reaches this module's
+    functions. Raw ``spark.sql`` sees only what an earlier ``run_sql`` on
+    the same session registered."""
+    register_spark(spark, text)
+    return spark.sql(text, args, **kwargs)
 
 
 def register_duck(con) -> None:

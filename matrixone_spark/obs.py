@@ -13,6 +13,7 @@ from itertools import takewhile
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from matrixone_spark.functions.sql_surface import run_sql
 from matrixone_spark.oracle import compare_frames, run_oracle
 
 
@@ -33,8 +34,8 @@ def warm_up(spark: SparkSession, sf_dir: str) -> None:
         .agg(F.sum("l_quantity"), F.max("rn"))
         .collect()
     )
-    # mo_conv is the pandas UDF get_spark always registers
-    spark.sql("SELECT mo_conv('ff', 16, 10)").collect()
+    # mo_conv: a pandas UDF of the SQL function surface
+    run_sql(spark, "SELECT mo_conv('ff', 16, 10)").collect()
     spark.range(1000).mapInArrow(lambda it: it, "id long").count()
 
 

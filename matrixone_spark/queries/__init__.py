@@ -22,7 +22,6 @@ Determinism discipline (hash-match requirement):
 
 from __future__ import annotations
 
-import functools
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -44,26 +43,16 @@ REGISTRY: "dict[str, Query]" = {}
 def register(name: str, oracle: "str | None", tags: tuple = (), doc: str = ""):
     """Decorator: register a (spark, sf_dir) -> DataFrame callable.
 
-    The stored callable self-registers the SQL-text UDF surface (mo_*, h3_*,
-    …) on whatever session it is handed: the driver contract supplies an
-    ARBITRARY SparkSession, not our get_spark one, so a translate-based
-    query must never assume the session was pre-provisioned (round-4 red
-    row: UNRESOLVED_ROUTINE mo_conv). _ensure_sql_udfs is a no-op after the
-    first call on a session (a session-scoped conf tag), so this costs
-    nothing on the hot path."""
+    The driver contract hands a query an ARBITRARY SparkSession, not our
+    get_spark one, and no session starts with the SQL-text function surface
+    (mo_*, h3_*, …) registered. A query whose SQL text calls those names
+    runs it through ``sql_surface.run_sql``, which registers them on the
+    session it is given (round-4 red row: UNRESOLVED_ROUTINE mo_conv)."""
 
     def deco(fn):
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-
-        @functools.wraps(fn)
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from matrixone_spark.session import _ensure_sql_udfs
-
-            _ensure_sql_udfs(spark)
-            return fn(spark, sf_dir)
-
-        REGISTRY[name] = Query(name=name, fn=wrapped, oracle=oracle, tags=tags, doc=doc)
+        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, tags=tags, doc=doc)
         return fn
 
     return deco

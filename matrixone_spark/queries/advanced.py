@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matrixone_spark.catalog import Catalog
+from matrixone_spark.functions.sql_surface import run_sql
 from matrixone_spark.queries import register
 from matrixone_spark.queries._helpers import dec
 
@@ -90,16 +91,14 @@ GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
     doc="Explicit GROUPING SETS (reference rewrites to unions, plan/build_test.go:1125; Spark native Expand).",
 )
 def grouping_sets_explicit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = Catalog(spark, sf_dir).table("orders")
-    o.createOrReplaceTempView("_orders_gs")
-    return spark.sql("""
+    return run_sql(spark, """
         SELECT COALESCE(o_orderstatus, '<s>') AS o_orderstatus,
                COALESCE(o_orderpriority, '<p>') AS o_orderpriority,
                COUNT(*) AS cnt,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        FROM _orders_gs
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-    """)
+    """, orders=Catalog(spark, sf_dir).table("orders"))
 
 
 @register(

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from matrixone_spark.functions.sql_surface import run_sql
 from matrixone_spark.mysql_dialect import translate
 from matrixone_spark.queries import register
 
@@ -287,7 +288,7 @@ def _oracle_sql() -> str:
     ),
 )
 def bvt_select_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_spark_sql())
+    return run_sql(spark, _spark_sql())
 
 
 # Second battery: operator/ + expression/ + function/*.test categories.
@@ -500,7 +501,7 @@ def _battery_oracle_sql(numeric, strings) -> str:
     ),
 )
 def bvt_operator_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_battery_spark_sql(BVT2_NUMERIC, BVT2_STRING))
+    return run_sql(spark, _battery_spark_sql(BVT2_NUMERIC, BVT2_STRING))
 
 
 # --- stateful-category batteries (tools/bvt_bake.py) ------------------------
@@ -530,7 +531,7 @@ def _register_baked(cat: str) -> None:
         ),
     )
     def baked_battery(spark: SparkSession, sf_dir: str, _sql: str = spark_sql) -> DataFrame:
-        return spark.sql(_sql)
+        return run_sql(spark, _sql)
 
     baked_battery.__name__ = qname
 

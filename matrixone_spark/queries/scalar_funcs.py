@@ -996,7 +996,8 @@ _MYSQL3_CASES: "list[tuple[str, str, str]]" = [
     ),
 )
 def func_mysql3_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from matrixone_spark.functions.sql_surface import run_sql
     from matrixone_spark.mysql_dialect import translate
 
     sql = "SELECT " + ", ".join(f"{e} AS {alias}" for alias, e, _w in _MYSQL3_CASES)
-    return spark.sql(translate(sql))
+    return run_sql(spark, translate(sql))

@@ -237,15 +237,15 @@ FROM b
     ),
 )
 def timewin_sql_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from matrixone_spark.functions.sql_surface import run_sql
     from matrixone_spark.mysql_dialect import translate
 
-    Catalog(spark, sf_dir).table("events").createOrReplaceTempView("events")
-    return spark.sql(translate(
+    return run_sql(spark, translate(
         "select _wstart, _wend, count(*) as n, "
         "cast(max(case when event_type = 'purchase' and user_id % 97 = 3 "
         "then value end) as double) as mx "
-        "from events interval(ts, 6, hour) fill(prev)"
-    ))
+        "from {events} interval(ts, 6, hour) fill(prev)"
+    ), events=Catalog(spark, sf_dir).table("events"))
 
 
 @register(
@@ -268,12 +268,12 @@ CROSS JOIN LATERAL (
     ),
 )
 def apply_sql_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from matrixone_spark.functions.sql_surface import run_sql
     from matrixone_spark.mysql_dialect import translate
 
-    Catalog(spark, sf_dir).table("orders").createOrReplaceTempView("orders")
-    return spark.sql(translate(
+    return run_sql(spark, translate(
         "select o.o_orderkey, gs.result as k, o.o_totalprice "
-        "from (select o_orderkey, o_totalprice from orders "
+        "from (select o_orderkey, o_totalprice from {orders} "
         "where o_orderkey <= 64) o "
         "cross apply generate_series(1, cast(o.o_orderkey % 3 as int)) gs"
-    ))
+    ), orders=Catalog(spark, sf_dir).table("orders"))

@@ -11,6 +11,10 @@ Scale posture: these configs are chosen for a multi-executor cluster reading
 - Arrow for any pandas-UDF exchange (reference's cgo SIMD kernels ≈ Tungsten
   codegen + Arrow batches; we never reimplement vectorization).
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+
+A session starts with nothing registered beyond Spark's builtins: the SQL
+function surface (functions/sql_surface.py) is registered a few names at a
+time, by the statements that call them (see ``get_spark``).
 """
 
 from __future__ import annotations
@@ -70,6 +74,12 @@ def get_spark(app_name: str = "mospark", master: str | None = None) -> SparkSess
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so the
     same entry points serve tests, bench, and the driver harness.
+
+    The session starts with none of the SQL-text surface functions
+    (functions/sql_surface.py: mo_conv, h3_*, json_*, ...) registered.
+    ``Engine.sql``, ``Engine.mysql_sql`` and ``sql_surface.run_sql`` register
+    the ones a statement calls just before it runs; raw ``spark.sql`` on
+    this session sees only those registered that way.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -77,38 +87,4 @@ def get_spark(app_name: str = "mospark", master: str | None = None) -> SparkSess
     builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in SPARK_CONF.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    _ensure_sql_udfs(spark)
-    return spark
-
-
-def _ensure_sql_udfs(spark: SparkSession) -> None:
-    """Register the SQL-text function surface (functions/sql_surface.py)
-    on ``spark``.
-
-    Idempotent and cheap when already done (conf-tag guard): besides
-    get_spark, EVERY registry query calls this on its way in (queries/
-    __init__.py register wrapper), because the driver contract hands queries
-    an arbitrary SparkSession — round-4's only red driver row was a
-    translate-based query assuming get_spark had pre-registered mo_conv.
-    Only functions whose MySQL semantics can't be expressed as a Spark-SQL
-    rewrite live there — the dialect layer routes their names to those
-    registrations.
-
-    The done-marker is a session-scoped conf tag (RuntimeConfig is
-    per-SparkSession, including newSession() children), NOT id(spark):
-    CPython reuses object ids after GC, so an id-keyed set can silently
-    skip registration on a later session."""
-    tag = "spark._mospark_sql_udfs_registered"
-    try:
-        if spark.conf.get(tag, None) == "1":
-            return
-    except Exception:
-        pass
-    from matrixone_spark.functions.sql_surface import register_spark
-
-    register_spark(spark)
-    try:
-        spark.conf.set(tag, "1")
-    except Exception:
-        pass
+    return builder.getOrCreate()

@@ -201,7 +201,10 @@ def load_data(
     if set_clauses:
         from pyspark.sql import functions as F
 
+        from matrixone_spark.functions.sql_surface import register_spark
+
         for col, expr in set_clauses.items():
+            register_spark(spark, expr)  # SET text may call surface functions
             df = df.withColumn(col, F.expr(expr))
     return df
 

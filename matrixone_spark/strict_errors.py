@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import re
 
+from matrixone_spark.functions.sql_surface import run_sql
 from matrixone_spark.mysql_dialect import (
     _split_top_level,
     mask_literals,
@@ -1109,7 +1110,7 @@ def _probe(sess, sql: str) -> bool:
     if sql in cache:
         return cache[sql]
     try:
-        r = len(sess.spark.sql(sql).limit(1).collect()) > 0
+        r = len(run_sql(sess.spark, sql).limit(1).collect()) > 0
     except Exception:  # noqa: BLE001
         r = False
     cache[sql] = r

@@ -388,9 +388,10 @@ def test_sample_rows_window_lowering(spark):
 def test_unnest_json_table_function(spark):
     """UNNEST(json, path) rows match ddl/json_type.result's 7-column
     schema and $.* container expansion."""
+    from matrixone_spark.functions.sql_surface import run_sql
     from matrixone_spark.mysql_dialect import translate
 
-    rows = [tuple(r) for r in spark.sql(translate(
+    rows = [tuple(r) for r in run_sql(spark, translate(
         "select * from unnest(' {\"a\": [1, \"2\", {\"aa\": \"b1\"}]} '"
         ",\"$.*\") as u"
     )).collect()]

@@ -9,11 +9,12 @@ from __future__ import annotations
 
 import pytest
 
+from matrixone_spark.functions.sql_surface import run_sql
 from matrixone_spark.mysql_dialect import translate
 
 
 def _one(spark, sql):
-    return spark.sql(translate(sql)).collect()[0][0]
+    return run_sql(spark, translate(sql)).collect()[0][0]
 
 
 def test_geomfromtext_astext_roundtrip(spark):
@@ -110,20 +111,20 @@ def test_like_escape_literals(spark):
     # MySQL keeps the backslash in \_ (LIKE escape); Spark's parser would
     # otherwise eat it and '%\_%' would match ANY character
     sql = translate(r"select 'x_y' like '%\_%' as a, 'xay' like '%\_%' as b")
-    row = spark.sql(sql).collect()[0]
+    row = run_sql(spark, sql).collect()[0]
     assert (row.a, row.b) == (True, False)
 
 
 def test_like_trailing_escape(spark):
     # MySQL: a trailing unpaired escape matches a literal backslash
     sql = translate(r"select 'a\\' like '%\\' as a, 'ab' like '%\\' as b")
-    row = spark.sql(sql).collect()[0]
+    row = run_sql(spark, sql).collect()[0]
     assert (row.a, row.b) == (True, False)
 
 
 def test_length_is_bytes(spark):
     sql = translate("select length('中文') as b, char_length('中文') as c")
-    row = spark.sql(sql).collect()[0]
+    row = run_sql(spark, sql).collect()[0]
     assert (row.b, row.c) == (6, 2)
 
 

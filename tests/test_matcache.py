@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
+import time
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -71,6 +73,58 @@ def test_directory_fingerprint_is_its_own_mtime(tmp_path):
     assert fingerprint(str(d)) == (0,)
     (d / "part-0000.parquet").write_bytes(b"x")  # adding a file moves the dir mtime
     assert fingerprint(str(d)) == (os.stat(d).st_mtime_ns,) != (0,)
+
+
+def _in_threads(*calls):
+    """Run each call on its own thread, all released together; return their
+    results in call order."""
+    barrier = threading.Barrier(len(calls))
+    out = [None] * len(calls)
+
+    def run(i, call):
+        barrier.wait()
+        out[i] = call()
+
+    threads = [threading.Thread(target=run, args=(i, c)) for i, c in enumerate(calls)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=10)
+    assert not any(t.is_alive() for t in threads)
+    return out
+
+
+def test_concurrent_callers_share_one_build():
+    released, built = [], []
+    c = MaterializationCache(4, release=released.append)
+
+    def build():
+        built.append(len(built))
+        time.sleep(0.2)
+        return f"v{built[-1]}"
+
+    got = _in_threads(*[lambda: c.get("app", "k", (), build)] * 4)
+    assert built == [0] and got == ["v0"] * 4
+    c.clear()
+    assert released == ["v0"]
+
+
+def test_racing_builds_for_one_key_release_each_value_once(tmp_path):
+    old, new = tmp_path / "old.parquet", tmp_path / "new.parquet"
+    old.write_bytes(b"v1")
+    new.write_bytes(b"v22")
+    released = []
+    c = MaterializationCache(4, release=released.append)
+
+    def slow():
+        time.sleep(0.2)
+        return "slow"
+
+    _in_threads(lambda: c.get("app", "k", [str(old)], slow),
+                lambda: c.get("app", "k", [str(new)], lambda: "fast"))
+    assert released == ["fast"] and c.values() == ["slow"]
+    c.clear()
+    assert released == ["fast", "slow"]
 
 
 def test_app_ids_coexist():

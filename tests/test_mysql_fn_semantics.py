@@ -5,11 +5,12 @@ from __future__ import annotations
 
 import pytest
 
+from matrixone_spark.functions.sql_surface import run_sql
 from matrixone_spark.mysql_dialect import translate
 
 
 def _one(spark, sql):
-    return spark.sql(translate(sql)).collect()[0][0]
+    return run_sql(spark, translate(sql)).collect()[0][0]
 
 
 def test_unixtime_out_of_range_nulls(spark):
@@ -65,7 +66,7 @@ def test_random_bytes_length_contract(spark):
     assert _one(spark, "SELECT LENGTH(RANDOM_BYTES(1024))") == 1024
     assert _one(spark, "SELECT RANDOM_BYTES(0)") is None
     # two draws differ (true randomness, uuid entropy)
-    row = spark.sql(translate(
+    row = run_sql(spark, translate(
         "SELECT HEX(RANDOM_BYTES(16)) a, HEX(RANDOM_BYTES(16)) b"
     )).collect()[0]
     assert row["a"] != row["b"]

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import re
 
+from matrixone_spark.functions.sql_surface import run_sql
 from matrixone_spark.obs import executed_plan, final_plan
 from matrixone_spark.queries import load_all
 from tests.conftest import SF_DIR
@@ -220,5 +221,5 @@ def test_arrow_udf_plans_name_the_kernel(spark):
     df = spark.createDataFrame([("MySQL",)], "s string")
     plan = final_plan(df.select(M.crc32("s")))
     assert re.search(r"ArrowEvalPython \[_k_crc32\(s#\d+\)", plan), plan
-    sql_plan = final_plan(spark.sql("SELECT mo_conv('ff', 16, 10)"))
+    sql_plan = final_plan(run_sql(spark, "SELECT mo_conv('ff', 16, 10)"))
     assert re.search(r"ArrowEvalPython \[mo_conv\(", sql_plan), sql_plan

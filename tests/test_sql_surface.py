@@ -99,7 +99,7 @@ def _fmt(v) -> str:
 
 @pytest.mark.parametrize("stmt,want", CASES, ids=[c[0][:48] for c in CASES])
 def test_surface_spark(spark, stmt, want):  # noqa: F811
-    rows = spark.sql(translate(stmt)).collect()
+    rows = sql_surface.run_sql(spark, translate(stmt)).collect()
     assert len(rows) == 1
     assert tuple(_fmt(v) for v in rows[0]) == want
 

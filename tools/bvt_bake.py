@@ -37,6 +37,7 @@ MAX_FIXTURE_ROWS = 300
 
 from matrixone_spark.bvt_harvest import _strip_comments, split_statements  # noqa: E402
 from matrixone_spark.bvt_runner import BvtSession, _duckify  # noqa: E402
+from matrixone_spark.functions.sql_surface import run_sql  # noqa: E402
 from matrixone_spark.mysql_dialect import mask_literals, translate, unmask_literals  # noqa: E402
 from matrixone_spark.oracle import canonical_rows  # noqa: E402
 
@@ -264,12 +265,12 @@ def harvest_category(spark, cat: str, sid_base: int) -> "tuple[list[Case], dict]
             case = Case(sid, f"{cat}/{fname}:{i}", fixtures, renamed, [])
             # validate this case standalone on both engines
             try:
-                probe = spark.sql(translate(renamed) if not fixtures else
-                                  "WITH " + ", ".join(case.ctes("spark")) + " " + translate(renamed))
+                probe = run_sql(spark, translate(renamed) if not fixtures else
+                                "WITH " + ", ".join(case.ctes("spark")) + " " + translate(renamed))
                 case.out_types = [f.dataType.simpleString() for f in probe.schema.fields]
                 for t in case.out_types:
                     _kind(t)
-                s_rows = spark.sql(_battery_sql([case], "spark")).collect()
+                s_rows = run_sql(spark, _battery_sql([case], "spark")).collect()
                 d_rows = con.execute(_battery_sql([case], "duck")).fetchall()
             except Exception:
                 stats["run_fail"] += 1
@@ -314,7 +315,7 @@ def main() -> None:
 
     con = duckdb.connect()
     for cat, (s_sql, d_sql, n, _srcs) in out.items():
-        s_rows = sorted(map(tuple, spark.sql(s_sql).collect()))
+        s_rows = sorted(map(tuple, run_sql(spark, s_sql).collect()))
         d_rows = sorted(map(tuple, con.execute(d_sql).fetchall()))
         assert s_rows == d_rows, f"{cat}: baked artifacts diverge"
         print(f"{cat}: validated {n} cases, {len(s_rows)} rows")

@@ -6,8 +6,12 @@ oracles on the sf1 fixtures (tools/make_sf.py output), hash-gated by
 obs.check (oracle.compare_frames: bit-exact, order/column-name
 insensitive).
 
-Usage: python tools/sf1_correctness.py [sf_dir]  (default /tmp/mospark_sf1)
-Writes CORRECTNESS_SF1.json at the repo root.
+Usage: python tools/sf1_correctness.py [sf_dir [names...]]
+(default sf_dir /tmp/mospark_sf1)
+
+Writes the committed sf1 record, CORRECTNESS_SF1.json at the repo root, only
+for the default sf_dir; any other sf_dir writes CORRECTNESS_<basename>.json,
+so a quick run at a small scale never replaces the sf1 record.
 """
 
 from __future__ import annotations
@@ -19,6 +23,14 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+SF1_DIR = "/tmp/mospark_sf1"
+
+
+def output_path(sf_dir: str) -> str:
+    """Where the record for ``sf_dir`` is written."""
+    sf_dir = os.path.abspath(sf_dir)
+    name = "SF1" if sf_dir == SF1_DIR else os.path.basename(sf_dir)
+    return os.path.join(REPO, f"CORRECTNESS_{name}.json")
 
 
 def _close_frames(a, b, rel: float = 1e-9) -> bool:
@@ -51,7 +63,7 @@ def _close_frames(a, b, rel: float = 1e-9) -> bool:
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/mospark_sf1"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else SF1_DIR
     from matrixone_spark import obs
     from matrixone_spark.queries import load_all
     from matrixone_spark.session import get_spark
@@ -105,7 +117,7 @@ def main() -> None:
         ),
         "queries": out,
     }
-    with open(os.path.join(REPO, "CORRECTNESS_SF1.json"), "w") as f:
+    with open(output_path(sf_dir), "w") as f:
         json.dump(summary, f, indent=1)
     print("match:", summary["match"], "rows_only:", summary["rows_only"],
           "fail:", summary["fail"])
