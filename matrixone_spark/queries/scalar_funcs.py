@@ -364,16 +364,16 @@ FROM nation
         "System/meta functions VERSION/DATABASE/USER/CURRENT_ROLE/"
         "CONNECTION_ID/CHARSET/COLLATION/LAST_INSERT_ID/FOUND_ROWS/ROW_COUNT "
         "(function_id.go:1053-1081; Version resolves the 'version' session "
-        "variable, func_unary.go:9082). Runs through Engine.mysql_sql so the "
-        "dialect layer's literal-fold rewrite is what's under test "
+        "variable, func_unary.go:9082). Runs through mysql_dialect.translate so "
+        "the dialect layer's literal-fold rewrite is what's under test "
         "(functions/system.py + mysql_dialect.py)."
     ),
 )
 def system_meta_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from matrixone_spark.engine import Engine
+    from matrixone_spark.functions.sql_surface import run_sql
+    from matrixone_spark.mysql_dialect import translate
 
-    eng = Engine(spark).load(sf_dir)
-    return eng.mysql_sql(
+    text = translate(
         """
         SELECT n_nationkey, n_name,
                VERSION()        AS server_version,
@@ -386,9 +386,10 @@ def system_meta_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
                LAST_INSERT_ID() AS last_ins_id,
                FOUND_ROWS()     AS n_found,
                ROW_COUNT()      AS n_row_count
-        FROM nation
+        FROM {nation}
         """
     )
+    return run_sql(spark, text, nation=Catalog(spark, sf_dir).table("nation"))
 
 
 @register(

@@ -30,12 +30,15 @@ from matrixone_spark.matcache import LAZY_CAPACITY, MaterializationCache
 # start. These drains hold a few thousand keys, so their cost is fixed per
 # store, not per row:
 # - Every store writes its delta, schema and metadata files through the
-#   checkpoint file manager, each with Spark's checksum file and Hadoop's
-#   .crc beside it. Without the native Hadoop library the local file system
-#   shells out to chmod/stat for every file and directory: about 20 process
-#   spawns and ~33 ms per atomic write. One stream_tumbling_counts drain
-#   spawns ~508 processes with 8 stores, ~280 with 3 and 185 with 1
-#   (4-vCPU machine, local[3], sf0.01 and sf0.1; /proc/stat counter).
+#   checkpoint file manager (FileContext). Without the native Hadoop library
+#   the local file system shells out to `chmod` for every file and directory
+#   it creates and to `readlink` on both ends of every rename
+#   (getFileLinkStatus). One stream_tumbling_counts drain on the drain
+#   session (RawLocalFs, see _stream_session) makes 71 shell-outs with 3
+#   stores, ~157 on the /proc/stat fork counter, which also counts the
+#   reader thread Hadoop starts per shell-out; under LocalFs, which writes
+#   Hadoop's .crc beside every file, the counter read ~277 with 3 stores,
+#   ~508 with 8 and 185 with 1 (4-vCPU machine, local[3], sf0.01-0.1).
 # - Stores beyond the task slots run in extra waves: 8 stores on 3 slots are
 #   3 waves.
 # The count is the slot count, not a function of data volume: with 1 store
@@ -70,6 +73,13 @@ def _stream_session(spark: SparkSession) -> SparkSession:
       of these queries at any scale; eviction matters only for a LONG-RUNNING
       query, which the production path (real sink + processingTime trigger)
       re-enables by simply not using this session.
+    - checkpoints on RawLocalFs: a drain's temporary checkpoint is written
+      and read back only by that one availableNow query, so Hadoop's
+      client-side .crc sidecar on every checkpoint file (and the chmod and
+      readlink shell-outs that write and rename it) buys nothing. Spark's own
+      checkpoint checksum (fileChecksum), the state-schema check and
+      FileContext's rename semantics all stay. The caller's session keeps
+      LocalFs, so run_cdc_sink and user checkpointLocations keep their .crc.
 
     r12 ran drains under a set/restore context manager on the CALLER's
     session; any query planned concurrently on that session during the window
@@ -85,6 +95,10 @@ def _stream_session(spark: SparkSession) -> SparkSession:
         stores = min(spark.sparkContext.defaultParallelism, _MAX_STATE_STORES)
         ss.conf.set("spark.sql.shuffle.partitions", str(stores))
         ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+        # Checkpoints go through FileContext, which reads the
+        # AbstractFileSystem key (not fs.file.impl), and a session hands its
+        # confs to Hadoop as-is: the bare key, not spark.hadoop.-prefixed.
+        ss.conf.set("fs.AbstractFileSystem.file.impl", "org.apache.hadoop.fs.local.RawLocalFs")
         return ss
 
     return _STREAM_SESSION.get(spark.sparkContext.applicationId, "drain", (), build)

@@ -67,7 +67,9 @@ def test_builtin_override_resolves_on_first_statement(spark):
     assert "ArrowEvalPython [st_srid(" in obs.final_plan(df)
 
 
-@pytest.mark.parametrize("name", ["grouping_sets_explicit", "timewin_sql_surface", "apply_sql_surface"])
+@pytest.mark.parametrize(
+    "name", ["grouping_sets_explicit", "timewin_sql_surface", "apply_sql_surface", "system_meta_battery"]
+)
 def test_sql_text_rows_leave_no_temp_views(spark, registry, name):
     raw = spark.newSession()
     assert registry[name].fn(raw, SF_DIR).collect()
